@@ -495,13 +495,15 @@ def _bench_orchestration(spark, sf_dir: str) -> dict:
       dry-run should cost plan-only time regardless of data volume, which is
       exactly what makes it the CI staple at 100 TB;
     - analyzed-scan cache hit rate across the whole bench session (each miss
-      re-pays parquet footer + analysis traffic).
+      re-pays parquet footer + analysis traffic);
+    - Janino compiles and their summed time across the whole bench session
+      (each is a miss in Spark's generated-class cache).
     """
     import shutil
     import tempfile
 
     from dbt_spark.runner import Engine
-    from dbt_spark.session import scan_cache_stats
+    from dbt_spark.session import codegen_stats, scan_cache_stats
 
     root = tempfile.mkdtemp(prefix="bench_orch_")
     try:
@@ -554,6 +556,7 @@ def _bench_orchestration(spark, sf_dir: str) -> dict:
             "scan_cache_hit_rate": round(hits / max(1, hits + misses), 4),
             "scan_cache_hits": hits,
             "scan_cache_misses": misses,
+            "codegen": codegen_stats(spark),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)

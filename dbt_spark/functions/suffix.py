@@ -472,10 +472,15 @@ def suffix_repeat_lengths(
     # a per-pair CONSTANT, so it is folded into `cap` here instead of
     # carrying both doc lengths through the loop. Guarded: ids/positions
     # outside 32 bits would corrupt the packing (same contract as the
-    # graph key pack).
+    # graph key pack). The shift runs on a long: shiftleft keeps an int
+    # id's type and masks the count to 5 bits, so an int doc_id would
+    # pack to d | p and keys would collide.
+    def _key(d: F.Column, p: F.Column) -> F.Column:
+        return F.shiftleft(d.cast("long"), 32).bitwiseOR(p)
+
     def _pack(d: F.Column, p: F.Column) -> F.Column:
         ok = (d >= 0) & (d < F.lit(_PACK)) & (p > 0) & (p < F.lit(_PACK) - max_depth)
-        return F.when(ok, F.shiftleft(d, 32).bitwiseOR(p)).otherwise(
+        return F.when(ok, _key(d, p)).otherwise(
             F.raise_error(F.concat(
                 F.lit("suffix pack: doc_id/pos outside [0, 2^32): "),
                 d.cast("string"), F.lit("/"), p.cast("string"))))
@@ -490,7 +495,7 @@ def suffix_repeat_lengths(
     )
     right = sa.select(
         (F.col("idx") - F.lit(1)).alias("i"),
-        F.shiftleft(F.col("doc_id"), 32).bitwiseOR(F.col("pos")).alias("k2"),
+        _key(F.col("doc_id"), F.col("pos")).alias("k2"),
         (F.col("doc_len") - F.col("pos") + 1).alias("rem2"),
         F.col("rank").alias("r2"),
         *[F.col(f"r{d}").alias(f"q2_{d}") for d in depths],
@@ -529,13 +534,11 @@ def suffix_repeat_lengths(
         remaining = [(f"q1_{d}", f"q2_{d}") for d in depths[:-1 - ridx]]
         keep = [c for pair in remaining for c in pair]
         ra = table.select(
-            F.shiftleft(F.col("doc_id"), 32).bitwiseOR(F.col("pos"))
-            .alias("ka"),
+            _key(F.col("doc_id"), F.col("pos")).alias("ka"),
             F.col("rank").alias("a_rank"),
         )
         rb = table.select(
-            F.shiftleft(F.col("doc_id"), 32).bitwiseOR(F.col("pos"))
-            .alias("kb"),
+            _key(F.col("doc_id"), F.col("pos")).alias("kb"),
             F.col("rank").alias("b_rank"),
         )
         dec = pairs.filter(F.col("lcp") == F.lit(_DECIDED)).select(

@@ -8,10 +8,16 @@ partition coalescing) — the knobs that matter at 100 TB are set here once.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+#: ``spark.sql.codegen.cache.maxEntries``: Spark's LRU of compiled
+#: whole-stage-codegen classes (default 100). See get_spark for the sizing.
+CODEGEN_CACHE_ENTRIES = 8192
 
 
 def _input_bytes(path: str, suffix: str = ".parquet") -> int:
@@ -98,6 +104,18 @@ def get_spark(app_name: str = "dbt_spark", *, extra_conf: dict | None = None) ->
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing",
         )
+        # The generated classes themselves sit in Spark's LRU of compiled
+        # codegen classes, 100 entries by default. One pass of perfbench's
+        # 53 query_mix queries makes 831 distinct classes, so the LRU
+        # thrashed: every pass re-ran Janino on all of them, loaded them as
+        # new classes and the JIT compiled them again (about 845 compiles
+        # per pass, 23 with this cache; the pass's CPU time fell 17%). The
+        # whole 305-query check sweep makes 4,353 distinct classes (counted
+        # with the cache unbounded); 8192 holds that with ~1.9x headroom.
+        # Kept classes cost Metaspace: 277 MB after that sweep vs 243 MB at
+        # 100 entries, about 8 KB per class. Static conf: read only when the
+        # session is built.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.scheduler.mode", "FAIR")
     )
     # wide-start shuffles only when the working inputs are big enough to
@@ -148,7 +166,10 @@ def _install_reliable_checkpoint(spark: SparkSession) -> None:
     cls.localCheckpoint = _reliable_local_checkpoint
 
 
-from contextlib import contextmanager  # noqa: E402
+#: session -> [shuffle.partitions saved by the first stream_conf in, number
+#: of stream_conf contexts open on that session]
+_stream_saved: dict[SparkSession, list] = {}
+_stream_lock = threading.Lock()
 
 
 @contextmanager
@@ -166,8 +187,12 @@ def stream_conf(spark: SparkSession, *source_dirs: str):
     min 2 (multi-task semantics stay exercised), capped at the session's
     core parallelism. ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides for
     deployments whose steady-state volume is not the landing dir's size
-    at first start (the checkpoint pins whatever is chosen here)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    at first start (the checkpoint pins whatever is chosen here).
+
+    Contexts may overlap on one session (streams started from several
+    threads): the first one in saves the batch value and the last one out
+    restores it, so an inner context never restores an outer stream's
+    value as if it were the session's."""
     explicit = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
     if explicit:
         parts = explicit
@@ -179,23 +204,65 @@ def stream_conf(spark: SparkSession, *source_dirs: str):
         # (measured +5% on sketch-fold streams); 4 keeps the state-store
         # win while leaving batch-side parallelism usable
         parts = str(min(cap, max(4, -(-nbytes // (32 << 20)))))
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    with _stream_lock:
+        saved = _stream_saved.setdefault(
+            spark, [spark.conf.get("spark.sql.shuffle.partitions"), 0])
+        saved[1] += 1
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        with _stream_lock:
+            saved[1] -= 1
+            if not saved[1]:
+                del _stream_saved[spark]
+                spark.conf.set("spark.sql.shuffle.partitions", saved[0])
 
 
-#: (applicationId, path) -> analyzed scan DataFrame. Source scans of the
-#: immutable test tables are identical across queries; re-analyzing the same
-#: file per query costs ~100 ms of py4j/footer traffic each time. DataFrames
-#: are plans, not data — caching one is always safe for a read-only path.
-_scan_cache: dict[tuple[str, str], object] = {}
+#: (applicationId, path, listing) -> analyzed scan DataFrame. Source scans
+#: of the immutable test tables are identical across queries; re-analyzing
+#: the same file per query costs ~100 ms of py4j/footer traffic each time.
+#: DataFrames are plans, not data, but a plan pins its file list at
+#: analysis, so the key carries the files' (name, size, mtime) listing
+#: (_listing): a path whose files change gets a fresh scan.
+_scan_cache: dict[tuple, object] = {}
 
 #: analyzed-scan cache effectiveness, reported by bench.py's orchestration
 #: section (each miss is ~100 ms of re-analysis py4j/footer traffic that a
 #: long-lived session amortizes away)
 scan_cache_stats = {"hits": 0, "misses": 0}
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """Janino compiles of generated code in this JVM so far, and their
+    summed time (``CodegenMetrics`` count, ``CodeGenerator.compileTime``).
+    A compile is a miss in Spark's generated-class cache, so a warm
+    session repeating known plans should add none."""
+    jvm = spark.sparkContext._jvm
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return {
+        "compiles": jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount(),
+        "compile_ms": round(gen.compileTime() / 1e6, 1),
+    }
+
+
+def _listing(path: str) -> tuple:
+    """Sorted (relative name, size, mtime) of every file under ``path``;
+    a plain file lists itself, a glob or missing path lists nothing."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            try:
+                st = os.stat(full)
+            except OSError:
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def read_parquet(spark: SparkSession, path: str):
@@ -209,7 +276,8 @@ def read_parquet(spark: SparkSession, path: str):
     from pyspark.sql import functions as F
 
     try:
-        cache_key = (spark.sparkContext.applicationId, os.path.abspath(path))
+        cache_key = (spark.sparkContext.applicationId, os.path.abspath(path),
+                     _listing(path))
     except Exception:  # noqa: BLE001 — e.g. connect-only sessions
         cache_key = None
     if cache_key is not None and cache_key in _scan_cache:
@@ -265,11 +333,8 @@ def spread(df, spark: SparkSession, target: int | None = None):
     # memoize per cached source scan (identity match — the file-layout
     # probe below costs a py4j call + os.stat per file otherwise)
     key = next(
-        (
-            (app, f"spread{target}:" + p)
-            for (app, p), cached in _scan_cache.items()
-            if cached is df
-        ),
+        (k + (f"spread{target}",)
+         for k, cached in _scan_cache.items() if cached is df),
         None,
     )
     if key is not None and key in _scan_cache:

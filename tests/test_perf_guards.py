@@ -111,3 +111,25 @@ def test_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
         assert lazy.count() == 10
     finally:
         cls.localCheckpoint = orig
+
+
+def test_codegen_cache_holds_the_working_set(spark):
+    """Spark keeps compiled whole-stage-codegen classes in an LRU that
+    defaults to 100 entries; a session whose working set is larger
+    recompiles every class on every pass (perfbench query_mix: 831 Janino
+    compiles per pass). Guard: 150 plans with distinct generated code,
+    run twice — the second pass must find every class cached."""
+    from dbt_spark.session import CODEGEN_CACHE_ENTRIES, codegen_stats
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+
+    def one_pass() -> None:
+        # each literal is inlined into its plan's generated code
+        for i in range(150):
+            spark.range(3).selectExpr(f"id * {i + 2} + {i} AS x").collect()
+
+    one_pass()
+    before = codegen_stats(spark)
+    one_pass()
+    assert codegen_stats(spark) == before

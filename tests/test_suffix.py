@@ -54,8 +54,9 @@ def _brute_reps(docs: list[tuple[int, str]], cap: int = 256) -> dict:
     return rep
 
 
-def _check(spark, docs: list[tuple[int, str]], cap: int = 256) -> None:
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+def _check(spark, docs: list[tuple[int, str]], cap: int = 256,
+           id_type: str = "long") -> None:
+    df = spark.createDataFrame(docs, f"doc_id {id_type}, text string")
     got = {
         (r["doc_id"], r["pos"]): r["rep"]
         for r in suffix_repeat_lengths(df, max_depth=cap).collect()
@@ -92,6 +93,13 @@ def _gen_corpus(rng: random.Random) -> list[tuple[int, str]]:
 def test_suffix_repeat_fuzz(spark, seed):
     rng = random.Random(seed)
     _check(spark, _gen_corpus(rng))
+
+
+def test_suffix_repeat_int_doc_ids(spark):
+    """An int-typed doc_id packs into the same (doc, pos) long keys as a
+    long one: shifting an int by 32 would leave it unchanged and make
+    (doc 1, pos 2) and (doc 2, pos 1) the same key."""
+    _check(spark, _gen_corpus(random.Random(_BASE + _OFF)), id_type="int")
 
 
 def test_suffix_repeat_all_same_char(spark):

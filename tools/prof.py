@@ -6,7 +6,9 @@ Usage:
       [--no-plans] name1 name2 ...
 
 Mirrors bench.py methodology (same session factory, same warmup, noop sink,
-min of reps) so numbers are comparable with BENCH_DETAIL.json.
+min of reps) so numbers are comparable with BENCH_DETAIL.json. Each rep
+prints its time and the Janino compiles it caused (``codegen_stats``) to
+stderr: a warm rep that still compiles is missing Spark's class cache.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ def main() -> None:
 
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf
     from dbt_spark.queries import QUERIES
-    from dbt_spark.session import get_spark
+    from dbt_spark.session import codegen_stats, get_spark
 
     spark = get_spark("prof")
     sf_dir = args.sf
@@ -64,11 +66,17 @@ def main() -> None:
                 fh.write(plan)
         best = None
         spark.sparkContext.setJobDescription(f"prof:{name}")
-        for _ in range(args.reps):
+        for rep in range(args.reps):
+            c0 = codegen_stats(spark)
             t0 = time.time()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             dt = time.time() - t0
+            c1 = codegen_stats(spark)
             best = dt if best is None else min(best, dt)
+            print(f"{name} rep {rep}: {dt:.3f}s, "
+                  f"{c1['compiles'] - c0['compiles']} compiles "
+                  f"({c1['compile_ms'] - c0['compile_ms']:.1f} ms)",
+                  file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
         out[name] = round(best, 3)
         print(f"{name}: {out[name]}s", file=sys.stderr)
