@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -53,6 +54,12 @@ class Relation:
 _IDENT_RX = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
+def _referenced(sql: str, pending: dict) -> set[str]:
+    """Keys of ``pending`` (casefolded identifiers) that ``sql`` names, in
+    any case: Spark resolves identifiers case-insensitively."""
+    return {t.casefold() for t in _IDENT_RX.findall(sql)} & pending.keys()
+
+
 class RelationStore:
     def __init__(self, spark: SparkSession, warehouse: str) -> None:
         self.spark = spark
@@ -60,9 +67,10 @@ class RelationStore:
         os.makedirs(self.warehouse, exist_ok=True)
         self._lock = threading.RLock()
         self._registered: set[str] = set()
-        #: lazily registered views: identifier -> compiled SQL, realized as
-        #: temp views on first reference (ensure_registered_for)
-        self._lazy_views: dict[str, str] = {}
+        #: lazily registered views: casefolded identifier -> (identifier,
+        #: compiled SQL), realized as temp views on first reference
+        #: (ensure_registered_for)
+        self._lazy_views: dict[str, tuple[str, str]] = {}
         #: lazy views whose analysis failed (ident -> exception), drained by
         #: flush_lazy_views for end-of-run node attribution
         self._lazy_failures: dict[str, Exception] = {}
@@ -161,8 +169,12 @@ class RelationStore:
 
     # -- registration (the ref()-resolution path) ---------------------------
 
-    def register(self, rel: Relation) -> str:
+    def register(self, rel: Relation,
+                 schema: Optional[StructType] = None) -> str:
         """Make the relation addressable from Spark SQL; returns identifier.
+        ``schema`` is the schema the relation's parquet files were just
+        written with (``write_table``), which spares the scan a schema
+        inference job.
 
         View registration is LAZY: the identifier -> compiled SQL mapping is
         recorded here and the actual temp view (``spark.sql(sql).createOr
@@ -183,12 +195,16 @@ class RelationStore:
                     self.spark.sql(rel.compiled_sql).createOrReplaceTempView(
                         rel.identifier)
                 else:
-                    self._lazy_views[rel.identifier] = rel.compiled_sql
+                    self._lazy_views[rel.identifier.casefold()] = (
+                        rel.identifier, rel.compiled_sql)
             elif rel.meta.get("buckets"):
                 # bucketed relations resolve through the session catalog so
                 # Catalyst sees the bucket spec (outputPartitioning) and can
                 # elide the shuffle in co-bucketed joins/aggregations
                 self._ensure_bucketed_table(rel)
+            elif schema is not None:
+                self.spark.read.schema(schema).parquet(
+                    rel.path).createOrReplaceTempView(rel.identifier)
             else:
                 self._read_files(rel).createOrReplaceTempView(rel.identifier)
             self._registered.add(rel.identifier)
@@ -206,21 +222,30 @@ class RelationStore:
         with self._lock:
             if not self._lazy_views:
                 return
-            hits = set(_IDENT_RX.findall(sql)) & self._lazy_views.keys()
-            for ident in hits:
-                self._flush_lazy_view(ident)
+            for key in _referenced(sql, self._lazy_views):
+                self._flush_lazy_view(key)
 
-    def _flush_lazy_view(self, ident: str) -> None:
-        sql = self._lazy_views.pop(ident, None)
-        if sql is None:
-            return
-        for dep in set(_IDENT_RX.findall(sql)) & self._lazy_views.keys():
-            self._flush_lazy_view(dep)
-        try:
-            self.spark.sql(sql).createOrReplaceTempView(ident)
-        except Exception as e:  # noqa: BLE001 — recorded for node attribution
-            self._lazy_failures[ident] = e
-            raise
+    def _flush_lazy_view(self, key: str) -> None:
+        """Realize pending view ``key`` after the pending views it references,
+        depth first on an explicit stack (a chain of any length fits). A view
+        leaves the pending set when first visited, so a reference cycle ends
+        in an analysis error instead of a loop."""
+        stack: list[tuple[str, Optional[tuple[str, str]]]] = [(key, None)]
+        while stack:
+            k, entry = stack.pop()
+            if entry is None:  # first visit: its pending deps go first
+                entry = self._lazy_views.pop(k, None)
+                if entry is not None:
+                    stack.append((k, entry))
+                    stack.extend((dep, None) for dep in
+                                 _referenced(entry[1], self._lazy_views))
+                continue
+            ident, sql = entry
+            try:
+                self.spark.sql(sql).createOrReplaceTempView(ident)
+            except Exception as e:  # noqa: BLE001 — for node attribution
+                self._lazy_failures[ident] = e
+                raise
 
     def flush_lazy_views(self, threads: int = 8) -> dict[str, Exception]:
         """Realize every still-pending lazy view and return
@@ -243,17 +268,16 @@ class RelationStore:
         with self._lock:
             pending = dict(self._lazy_views)
             self._lazy_views.clear()
-        deps = {
-            ident: (set(_IDENT_RX.findall(sql)) & pending.keys()) - {ident}
-            for ident, sql in pending.items()
-        }
+        deps = {key: _referenced(sql, pending) - {key}
+                for key, (_, sql) in pending.items()}
 
-        def _realize(ident: str) -> tuple[str, Optional[Exception]]:
+        def _realize(key: str) -> tuple[str, Optional[Exception]]:
+            ident, sql = pending[key]
             try:
-                self.spark.sql(pending[ident]).createOrReplaceTempView(ident)
-                return ident, None
+                self.spark.sql(sql).createOrReplaceTempView(ident)
+                return key, None
             except Exception as e:  # noqa: BLE001 — attributed by the runner
-                return ident, e
+                return key, e
 
         failed: dict[str, Exception] = {}
         with ThreadPoolExecutor(max_workers=max(1, threads)) as pool:
@@ -264,10 +288,10 @@ class RelationStore:
                     # via raw SQL naming an ident): realize sequentially so
                     # each gets a real analysis error, not a deadlock
                     ready = list(deps)
-                for ident, err in pool.map(_realize, ready):
-                    deps.pop(ident, None)
+                for key, err in pool.map(_realize, ready):
+                    deps.pop(key, None)
                     if err is not None:
-                        failed[ident] = err
+                        failed[pending[key][0]] = err
                 for d in deps.values():
                     d.difference_update(ready)
         with self._lock:
@@ -279,7 +303,7 @@ class RelationStore:
         """Forget a registration (both the done-set and any pending lazy
         view) so the next ``register`` re-registers fresh SQL."""
         self._registered.discard(ident)
-        self._lazy_views.pop(ident, None)
+        self._lazy_views.pop(ident.casefold(), None)
 
     def _check_csv_append_schema(self, schema: str, name: str, df: DataFrame) -> None:
         """CSV reads apply the persisted schema POSITIONALLY, and append mode
@@ -292,8 +316,6 @@ class RelationStore:
         old_json = old.meta.get("schema_json") if old is not None else None
         if not old_json:
             return
-        from pyspark.sql.types import StructType
-
         old_fields = [(f.name, f.dataType.simpleString())
                       for f in StructType.fromJson(json.loads(old_json)).fields]
         new_fields = [(f.name, f.dataType.simpleString())
@@ -397,12 +419,17 @@ class RelationStore:
             if not fmt_obj.acid:  # ACID formats are schema-self-describing
                 meta["schema_json"] = df.schema.json()
 
+        written_schema = None
         if mode == "append" and os.path.exists(path):
             if fmt == "csv":
                 self._check_csv_append_schema(schema, name, df)
             fmt_obj.write_append(df, path, partition_by)
         else:
             fmt_obj.write_overwrite(df, path, partition_by, swap=self._swap)
+            if fmt == "parquet" and not partition_by:
+                # the files hold exactly df's columns (an append keeps older
+                # files, a partitioned write moves columns into the path)
+                written_schema = df.schema
         # build timestamp: consumed by model-level freshness.build_after
         # gating (always refreshed — an append is still a build)
         meta["built_at"] = time.time()
@@ -412,7 +439,7 @@ class RelationStore:
             self.relations[self.key(schema, name)] = rel
             self._unregister(rel.identifier)
             self._journal(self.key(schema, name), rel)
-        self.register(rel)
+        self.register(rel, written_schema)
         return rel
 
     def adopt_table(self, schema: str, name: str, path: str,

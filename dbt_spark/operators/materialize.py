@@ -10,6 +10,7 @@ plan exactly like a CTE.
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
@@ -72,6 +73,11 @@ class ExecutionContext:
     # defer__ identifiers already registered this invocation (state views
     # re-register their whole upstream subtree; memoized)
     _deferred_idents: set = field(default_factory=set)
+    # source/external identifier -> the scan its temp view holds: every
+    # node re-resolves its transitive sources, and an unchanged scan needs
+    # no second temp-view swap (nor, for csv, a second inferSchema job)
+    _location_scans: dict = field(default_factory=dict)
+    _location_lock: Any = field(default_factory=threading.Lock)
     # (kind, unique_id) -> resolved physical schema/name (naming macros
     # render once per node per invocation)
     _naming_cache: dict = field(default_factory=dict)
@@ -213,17 +219,33 @@ class ExecutionContext:
         return self._wrap(node, ident)
 
     def _register_location(self, ident: str, location: str, fmt: str) -> None:
+        """Point the temp view ``ident`` at the files under ``location``,
+        swapping it only when the scan differs from the one it holds. A
+        parquet scan is ``read_parquet``'s cached DataFrame, a new object
+        once the files' listing changes (DataFrames compare by identity);
+        other formats are keyed on the listing, so an unchanged csv source
+        runs its inferSchema job once."""
         if fmt == "parquet":
             from dbt_spark.session import read_parquet
 
-            df = read_parquet(self.spark, location)
-        elif fmt == "csv":
-            df = self.spark.read.option("header", "true").option(
-                "inferSchema", "true"
-            ).csv(location)
+            df = scan = read_parquet(self.spark, location)
         else:
-            df = getattr(self.spark.read, fmt)(location)
-        df.createOrReplaceTempView(ident)
+            from dbt_spark.session import _listing
+
+            scan = (location, fmt, _listing(location))
+            if self._location_scans.get(ident) == scan:
+                return
+            if fmt == "csv":
+                df = self.spark.read.option("header", "true").option(
+                    "inferSchema", "true"
+                ).csv(location)
+            else:
+                df = getattr(self.spark.read, fmt)(location)
+        with self._location_lock:
+            if self._location_scans.get(ident) == scan:
+                return
+            df.createOrReplaceTempView(ident)
+            self._location_scans[ident] = scan
 
     def source_df(self, node: ManifestNode) -> DataFrame:
         ident = self.resolve_source(node)

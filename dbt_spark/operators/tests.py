@@ -206,20 +206,29 @@ def run_test(ctx: ExecutionContext, node: ManifestNode) -> TestResult:
             f"{ctx.schema}_dbt_test__audit", node.name, failures_df, kind="table"
         )
 
-    # fail_calc is a SQL expression over the failing rows (task/test.py:171-183).
-    # Evaluated directly on the DataFrame — a session temp view here would be
-    # shared mutable state across the runner's concurrent test threads and
-    # races (thread A's count reads thread B's failing rows).
-    fail_calc = node.config.fail_calc or "count(*)"
-    row = failures_df.selectExpr(f"{fail_calc} AS failures").collect()
-    failures = int(row[0]["failures"]) if row and row[0]["failures"] is not None else 0
+    # fail_calc is a SQL expression over the failing rows (task/test.py:171-183),
+    # decided in the same query that computes it (the reference get_test_sql
+    # shape: failures, should_warn, should_error). The thresholds see exactly
+    # the reported value: fractions truncate and booleans count as 0/1 (the
+    # BIGINT cast), NULL counts as 0; the parentheses keep a low-precedence
+    # fail_calc (OR, CASE) from binding to the threshold's operator.
+    # Evaluated directly on the DataFrame — a session temp view here would
+    # be shared mutable state across the runner's concurrent test threads
+    # and races (thread A's count reads thread B's failing rows).
+    def verdict(fail_calc: str) -> list[str]:
+        failures_sql = f"coalesce(CAST(({fail_calc}) AS BIGINT), 0)"
+        return [f"{failures_sql} AS failures",
+                f"({failures_sql} {node.config.warn_if}) AS should_warn",
+                f"({failures_sql} {node.config.error_if}) AS should_error"]
 
-    def _check(expr: str) -> bool:
-        r = ctx.spark.sql(f"SELECT ({failures} {expr}) AS r").collect()
-        return bool(r[0]["r"])
-
-    should_error = _check(node.config.error_if)
-    should_warn = _check(node.config.warn_if)
+    rows = failures_df.selectExpr(
+        *verdict(node.config.fail_calc or "count(*)")).collect()
+    if not rows:  # a per-row (non-aggregate) fail_calc over no failing rows
+        rows = ctx.spark.range(1).selectExpr(*verdict("0")).collect()
+    row = rows[0]
+    failures = int(row["failures"])
+    should_error = bool(row["should_error"])
+    should_warn = bool(row["should_warn"])
     if node.config.severity.lower() == "error" and should_error:
         status = "fail"
     elif should_warn:

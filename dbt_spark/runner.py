@@ -1982,11 +1982,13 @@ class Engine:
         # with the node/invocation id via query_header.py; the Spark analog is
         # the job group + description, which the Spark UI and event logs use
         # to attribute stages to the model that launched them — the
-        # observability handle at cluster scale). setJobGroup/setLocalProperty
+        # observability handle at cluster scale). The group is
+        # <invocation_id>:<unique_id>, so one node's jobs can be listed
+        # (statusTracker().getJobIdsForGroup). setJobGroup/setLocalProperty
         # are THREAD-local, so each worker thread tags only its own node.
         sc = ctx.spark.sparkContext
         sc.setJobGroup(
-            self.events.invocation_id,
+            f"{self.events.invocation_id}:{node.unique_id}",
             f"{node.unique_id} invocation_id={self.events.invocation_id}",
         )
         try:

@@ -118,3 +118,49 @@ def test_static_render_matches_full_jinja_render():
         "{% if true %}select 1{% endif %}",
     ]:
         assert static_render_parts(raw) is None, raw
+
+
+def _lazy_store(spark, tmp_path):
+    from dbt_spark.catalog import RelationStore
+
+    return RelationStore(spark, str(tmp_path / "wh"))
+
+
+def _lazy_view(store, name: str, sql: str) -> str:
+    from dbt_spark.catalog import Relation
+
+    return store.register(Relation(schema="lz", name=name, kind="view",
+                                   compiled_sql=sql))
+
+
+def test_long_pending_chain_flushes_without_recursion(spark, tmp_path):
+    """One statement consuming the tail of a pending chain longer than the
+    interpreter's recursion limit realizes the whole chain."""
+    import inspect
+
+    store = _lazy_store(spark, tmp_path)
+    depth = 150
+    prev = _lazy_view(store, "deep0", "select 1 as id")
+    for i in range(1, depth):
+        prev = _lazy_view(store, f"deep{i}", f"select id + 1 as id from {prev}")
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(len(inspect.stack()) + 100)
+    try:
+        store.ensure_registered_for(f"select id from {prev}")
+    finally:
+        sys.setrecursionlimit(limit)
+    assert not store._lazy_views
+    assert spark.sql(f"select id from {prev}").collect()[0]["id"] == depth
+
+
+def test_lazy_view_matched_case_insensitively(spark, tmp_path):
+    """Spark identifiers are case-insensitive, so a statement naming a
+    pending view in upper case must realize it (and its pending deps)."""
+    store = _lazy_store(spark, tmp_path)
+    up = _lazy_view(store, "casefold_up", "select 41 as id")
+    down = _lazy_view(store, "casefold_down",
+                      f"select id + 1 as id from {up.upper()}")
+    sql = f"select id from {down.upper()}"
+    store.ensure_registered_for(sql)
+    assert spark.sql(sql).collect()[0]["id"] == 42
+    assert not store._lazy_views

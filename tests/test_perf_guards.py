@@ -133,3 +133,106 @@ def test_codegen_cache_holds_the_working_set(spark):
     before = codegen_stats(spark)
     one_pass()
     assert codegen_stats(spark) == before
+
+
+def test_engine_nodes_skip_redundant_spark_round_trips(project_dir, spark,
+                                                       tmp_path, monkeypatch):
+    """Each node sends Spark only what its own statement needs: a source's
+    temp view is swapped once per invocation, a view node launches no job,
+    a data test is decided inside its failure query, and a table written
+    as plain parquet is registered without a schema-inference job. Jobs
+    are counted through the per-node job group <invocation_id>:<unique_id>,
+    on the second of two builds (the first one reads the source cold)."""
+    import sys
+    from collections import Counter
+
+    from pyspark.sql import SparkSession
+
+    from dbt_spark.catalog import RelationStore
+    from dbt_spark.runner import Engine
+
+    src = str(tmp_path / "src_orders")
+    spark.range(20).selectExpr("id AS k", "id % 3 AS g").write.parquet(src)
+    root = project_dir({
+        "dbt_project.yml": "name: rtrip\n",
+        "models/sources.yml": (
+            "sources:\n  - name: raw\n    tables:\n      - name: orders\n"
+            f"        meta: {{location: \"{src}\"}}\n"),
+        "models/stg.sql": "select k, g from {{ source('raw', 'orders') }}",
+        "models/t.sql": ("{{ config(materialized='table') }}\n"
+                         "select k, g from {{ ref('stg') }}"),
+        "models/schema.yml": (
+            "models:\n  - name: t\n    columns:\n"
+            "      - name: k\n        tests: [not_null, unique]\n"
+            "      - name: g\n        tests:\n"
+            "          - accepted_values: {values: [0, 1, 2]}\n"),
+    })
+    sc = spark.sparkContext
+    test_sql: list[str] = []
+    views: list[str] = []
+
+    orig_sql = SparkSession.sql
+
+    def spy_sql(self, query, *a, **kw):
+        f = sys._getframe(1)
+        while f is not None:
+            if (f.f_code.co_name == "run_test"
+                    and f.f_code.co_filename.endswith("operators/tests.py")):
+                test_sql.append(query)
+                break
+            f = f.f_back
+        return orig_sql(self, query, *a, **kw)
+
+    df_cls = type(spark.range(0))
+    orig_view = df_cls.createOrReplaceTempView
+
+    def spy_view(self, name):
+        views.append(name)
+        return orig_view(self, name)
+
+    orig_register = RelationStore.register
+    build = ["cold"]
+
+    def spy_register(self, rel, *a, **kw):
+        # the registration's own jobs, under a group of their own
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobGroup(f"register:{build[0]}:{rel.identifier}", "register")
+        try:
+            return orig_register(self, rel, *a, **kw)
+        finally:
+            sc.setJobGroup(group or "", desc or "")
+
+    monkeypatch.setattr(SparkSession, "sql", spy_sql)
+    monkeypatch.setattr(df_cls, "createOrReplaceTempView", spy_view)
+    monkeypatch.setattr(RelationStore, "register", spy_register)
+
+    assert Engine(root, spark=spark).invoke(["build"]).success
+    test_sql.clear()
+    views.clear()
+    build[0] = "warm"
+    eng = Engine(root, spark=spark)
+    res = eng.invoke(["build"])
+    assert res.success, [(r.unique_id, r.message) for r in res.results]
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+
+    def jobs(group: str) -> list:
+        return list(tracker.getJobIdsForGroup(group))
+
+    inv = eng.events.invocation_id
+    n_tests = sum(r.unique_id.startswith("test.") for r in res.results)
+    assert n_tests == 3
+    broken = {}
+    if jobs(f"{inv}:model.rtrip.stg") or not jobs(f"{inv}:model.rtrip.t"):
+        broken["per-node job groups: the view runs no job, the table does"] = (
+            jobs(f"{inv}:model.rtrip.stg"), jobs(f"{inv}:model.rtrip.t"))
+    if len(test_sql) != n_tests:
+        broken["one statement per data test"] = test_sql
+    if jobs("register:warm:main__t"):
+        broken["no schema-inference job registering the written table"] = (
+            jobs("register:warm:main__t"))
+    swaps = Counter(v for v in views if v.startswith("src__"))
+    if swaps != Counter({"src__raw__orders": 1}):
+        broken["one source temp-view swap per invocation"] = swaps
+    assert not broken, broken

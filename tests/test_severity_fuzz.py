@@ -78,10 +78,10 @@ def _expected(max_value, where, limit, fail_calc, severity, warn_if, error_if):
     return failures, "pass"
 
 
-@pytest.mark.parametrize("seed", range(24))
-def test_severity_policy_differential(spark, seed):
-    max_value, where, limit, fail_calc, severity, warn_if, error_if = (
-        _gen_case(seed))
+def _run_case(spark, name, rows, max_value, where, limit, fail_calc,
+              severity, warn_if, error_if):
+    """run_test over dbt_utils.accepted_range(v, 0..max_value) on a table
+    model holding ``rows`` of (k, v)."""
     tmp = tempfile.mkdtemp(prefix="dbt_spark_sevfuzz_")
     project = Project(
         name="sevfuzz", root=tmp,
@@ -93,7 +93,7 @@ def test_severity_policy_differential(spark, seed):
         manifest=Manifest(project_name="sevfuzz"), project=project,
     )
     ctx.manifest.macros.update(_utils_pack_macros())
-    lits = ", ".join(f"({k}, {v})" for (k, v) in ROWS)
+    lits = ", ".join(f"({k}, {v})" for (k, v) in rows)
     model = ManifestNode(
         unique_id="model.sevfuzz.m", name="m", package_name="sevfuzz",
         path="models/m.sql", resource_type=NodeType.Model,
@@ -111,14 +111,22 @@ def test_severity_policy_differential(spark, seed):
         **({"limit": limit} if limit is not None else {}),
     )
     tnode = ManifestNode(
-        unique_id=f"test.sevfuzz.case{seed}", name=f"case{seed}",
+        unique_id=f"test.sevfuzz.{name}", name=name,
         package_name="sevfuzz", path="models/schema.yml",
         resource_type=NodeType.Test, column_name="v",
         test_metadata={"name": "dbt_utils.accepted_range",
                        "kwargs": {"min_value": 0, "max_value": max_value}},
         attached_node="model.sevfuzz.m", config=cfg,
     )
-    got = run_test(ctx, tnode)
+    return run_test(ctx, tnode)
+
+
+@pytest.mark.parametrize("seed", range(24))
+def test_severity_policy_differential(spark, seed):
+    max_value, where, limit, fail_calc, severity, warn_if, error_if = (
+        _gen_case(seed))
+    got = _run_case(spark, f"case{seed}", ROWS, max_value, where, limit,
+                    fail_calc, severity, warn_if, error_if)
     want_failures, want_status = _expected(
         max_value, where, limit, fail_calc, severity, warn_if, error_if)
     assert (got.failures, got.status) == (want_failures, want_status), (
@@ -126,3 +134,40 @@ def test_severity_policy_differential(spark, seed):
         f"fail_calc={fail_calc!r} severity={severity} warn_if={warn_if!r} "
         f"error_if={error_if!r}"
     )
+
+
+#: (rows, max_value, fail_calc, severity, warn_if, error_if) ->
+#: (failures, status). Thresholds are decided on the REPORTED failures
+#: value: NULL reads as 0, a fraction truncates, a boolean counts as 1.
+_EDGE_CASES = {
+    # sum over zero failing rows is NULL: reported 0, and `>= 0` holds
+    "null_sum": ((ROWS, 125, "sum(v)", "error", ">= 0", "!= 0"), (0, "warn")),
+    # avg 2.5 reports 2, so `> 2` must not fire
+    "fractional_avg": (([(1, 2), (2, 3)], 1, "avg(v)", "error", "!= 0",
+                        "> 2"), (2, "warn")),
+    "case_expr": ((ROWS, 45, "case when count(*) > 0 then count(*) else 0 end",
+                   "error", "> 2", "> 5"), (8, "fail")),
+    # unparenthesized, `> 0` would bind to the right operand of OR
+    "or_expr": ((ROWS, 45, "count(*) > 5 or count(*) < 0", "error", "> 5",
+                 "> 0"), (1, "fail")),
+    "eq_zero_pass_side": ((ROWS, 125, "count(*)", "error", "= 0", "<> 0"),
+                          (0, "warn")),
+    "eq_zero_fail_side": ((ROWS, 45, "count(*)", "error", "= 0", ">= 0"),
+                          (8, "fail")),
+    "ge_zero_on_zero": ((ROWS, 125, "count(*)", "error", "<> 0", ">= 0"),
+                        (0, "fail")),
+    "ne_zero_warn": ((ROWS, 45, "count(*)", "warn", "<> 0", "= 0"),
+                     (8, "warn")),
+    # a per-row fail_calc over no failing rows yields no row at all
+    "per_row_no_rows": ((ROWS, 125, "v", "error", ">= 0", "!= 0"),
+                        (0, "warn")),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_CASES))
+def test_severity_verdict_edge_cases(spark, case):
+    (rows, max_value, fail_calc, severity, warn_if, error_if), want = (
+        _EDGE_CASES[case])
+    got = _run_case(spark, case, rows, max_value, None, None, fail_calc,
+                    severity, warn_if, error_if)
+    assert (got.failures, got.status) == want

@@ -2,6 +2,8 @@
 
 from datetime import datetime
 
+import pytest
+
 from dbt_spark.runner import Engine
 from dbt_spark.sources.freshness import check_freshness
 from dbt_spark.operators.materialize import ExecutionContext
@@ -184,3 +186,219 @@ def test_freshness_threshold_loosened_validation():
     import pytest as _pt
     with _pt.raises(KeyError):
         _threshold_seconds({"count": 1, "period": "fortnight"})
+
+
+def _source_project(project_dir, name, location, fmt="parquet"):
+    return project_dir({
+        "dbt_project.yml": f"name: {name}\n",
+        "models/sources.yml": (
+            "sources:\n  - name: raw\n    tables:\n      - name: orders\n"
+            f"        meta: {{location: \"{location}\", file_format: {fmt}}}\n"),
+        "models/a.sql": ("{{ config(materialized='table') }}\n"
+                         "select count(*) as n from {{ source('raw', 'orders') }}"),
+        "models/b.sql": ("{{ config(materialized='table') }}\n"
+                         "-- depends_on: {{ ref('a') }}\n"
+                         "select count(*) as n from {{ source('raw', 'orders') }}"),
+    })
+
+
+def _write_rows(spark, path, n, fmt, mode="overwrite"):
+    spark.range(n).selectExpr("id AS k").coalesce(1).write.mode(mode).format(
+        fmt).option("header", True).save(path)
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "csv"])
+def test_source_gaining_files_mid_invocation_is_reread(project_dir, spark,
+                                                      tmp_path, monkeypatch,
+                                                      fmt):
+    """A source is registered once per distinct scan: a file landing in its
+    directory between two nodes of one invocation is seen by the later one."""
+    loc = str(tmp_path / "orders")
+    _write_rows(spark, loc, 3, fmt)
+    root = _source_project(project_dir, f"grow_{fmt}", loc, fmt)
+    orig = Engine._execute_node
+
+    def land_after_a(self, ctx, node, *a, **kw):
+        orig(self, ctx, node, *a, **kw)
+        if node.name == "a":
+            _write_rows(spark, loc, 4, fmt, mode="append")
+
+    monkeypatch.setattr(Engine, "_execute_node", land_after_a)
+    eng = Engine(root, spark=spark)
+    r = eng.invoke(["run", "--threads", "1"])
+    assert r.success, [x.message for x in r.results]
+    assert eng.store.read("main", "a").collect()[0]["n"] == 3
+    assert eng.store.read("main", "b").collect()[0]["n"] == 7
+
+
+def test_alternating_invocations_read_their_own_source(spark, tmp_path):
+    """Two projects declare the same source name over different locations;
+    invocations alternating on one session each read their own files."""
+    def build_in(root):
+        def build(files):
+            for rel, content in files.items():
+                path = root / rel
+                path.parent.mkdir(parents=True, exist_ok=True)
+                path.write_text(content)
+            return str(root)
+        return build
+
+    engines = []
+    for i, n in enumerate((2, 5)):
+        loc = str(tmp_path / f"orders_{i}")
+        _write_rows(spark, loc, n, "parquet")
+        root = _source_project(build_in(tmp_path / f"proj_{i}"), f"alt{i}", loc)
+        engines.append((Engine(root, spark=spark), n))
+    for _ in range(2):
+        for eng, n in engines:
+            r = eng.invoke(["run"])
+            assert r.success, [x.message for x in r.results]
+            assert [eng.store.read("main", m).collect()[0]["n"]
+                    for m in ("a", "b")] == [n, n]
+
+
+def test_concurrent_source_registration_keeps_the_latest_scan(spark,
+                                                              tmp_path):
+    """Runner threads register the same source while its files change: after
+    each round the temp view holds the scan the memo says it holds, so the
+    next registration of an unchanged listing may skip its swap."""
+    import os
+    import sys
+    import threading
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbt_spark.catalog import RelationStore
+    from dbt_spark.plans.manifest import Manifest
+    from dbt_spark.project import Project
+
+    loc = tmp_path / "landing"
+    loc.mkdir()
+    landed = [0]
+
+    def land() -> None:  # atomic: written aside, renamed in
+        i = landed[0]
+        tmp = tmp_path / f"part-{i}.tmp"
+        pq.write_table(pa.table({"k": pa.array([i], pa.int64())}), tmp)
+        os.replace(tmp, loc / f"part-{i:03d}.parquet")
+        landed[0] += 1
+
+    land()
+    project = Project(name="stress", root=str(tmp_path),
+                      profile={"warehouse": str(tmp_path / "wh"),
+                               "schema": "main"})
+    ctx = ExecutionContext(
+        spark=spark, store=RelationStore(spark, str(tmp_path / "wh")),
+        manifest=Manifest(project_name="stress"), project=project)
+    ident = "src__stress__landing"
+    errors: list[BaseException] = []
+
+    def register_loop() -> None:
+        try:
+            for _ in range(10):
+                ctx._register_location(ident, str(loc), "parquet")
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    def land_loop() -> None:
+        for _ in range(2):
+            time.sleep(0.01)
+            land()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(3):
+            threads = [threading.Thread(target=register_loop)
+                       for _ in range(8)]
+            threads.append(threading.Thread(target=land_loop))
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+            assert not any(t.is_alive() for t in threads)
+            assert not errors, errors
+            assert sorted(spark.table(ident).inputFiles()) == sorted(
+                ctx._location_scans[ident].inputFiles())
+    finally:
+        sys.setswitchinterval(old)
+    ctx._register_location(ident, str(loc), "parquet")
+    assert spark.table(ident).count() == landed[0]
+
+
+def test_source_swap_and_memo_entry_are_one_step(spark, tmp_path,
+                                                 monkeypatch):
+    """Forced interleaving of two runner threads: B read the source before a
+    file landed, A after it, and B's swap comes after A's. The view and the
+    memo must still agree (the swap and its memo entry happen under one
+    lock), or a later registration would skip the swap and read old rows."""
+    import os
+    import threading
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import dbt_spark.session as session
+    from dbt_spark.catalog import RelationStore
+    from dbt_spark.plans.manifest import Manifest
+    from dbt_spark.project import Project
+
+    loc = tmp_path / "landing"
+    loc.mkdir()
+
+    def land(i: int) -> None:
+        tmp = tmp_path / f"part-{i}.tmp"
+        pq.write_table(pa.table({"k": pa.array([i], pa.int64())}), tmp)
+        os.replace(tmp, loc / f"part-{i}.parquet")
+
+    land(0)
+    project = Project(name="order", root=str(tmp_path),
+                      profile={"warehouse": str(tmp_path / "wh"),
+                               "schema": "main"})
+    ctx = ExecutionContext(
+        spark=spark, store=RelationStore(spark, str(tmp_path / "wh")),
+        manifest=Manifest(project_name="order"), project=project)
+    ident = "src__order__landing"
+    a_swapped, b_swapped = threading.Event(), threading.Event()
+    b_read = threading.Event()
+    df_cls = type(spark.range(0))
+    swap, read = df_cls.createOrReplaceTempView, session.read_parquet
+
+    def ordered_read(*a, **kw):
+        df = read(*a, **kw)
+        if threading.current_thread().name == "B":
+            b_read.set()
+            a_swapped.wait(10)
+        return df
+
+    def ordered_swap(self, name):
+        swap(self, name)
+        if threading.current_thread().name == "A":
+            a_swapped.set()
+            b_swapped.wait(2)  # times out when B waits on the lock
+            time.sleep(0.05)   # B's memo entry first, if B got there
+        else:
+            b_swapped.set()
+
+    monkeypatch.setattr(session, "read_parquet", ordered_read)
+    monkeypatch.setattr(df_cls, "createOrReplaceTempView", ordered_swap)
+
+    def register() -> None:
+        ctx._register_location(ident, str(loc), "parquet")
+
+    b = threading.Thread(target=register, name="B")
+    b.start()
+    assert b_read.wait(60)
+    land(1)
+    a = threading.Thread(target=register, name="A")
+    a.start()
+    for t in (a, b):
+        t.join(timeout=60)
+    assert not a.is_alive() and not b.is_alive()
+    assert sorted(spark.table(ident).inputFiles()) == sorted(
+        ctx._location_scans[ident].inputFiles())
+    register()
+    assert spark.table(ident).count() == 2
