@@ -352,14 +352,13 @@ class EventBus:
         if fh is None:
             fh = self._log_fh = open(self.log_path, "a")
             fh.seek(0, os.SEEK_END)  # make tell() the true size pre-write
-        if self.max_bytes:
+        if self.max_bytes and fh.tell() + len(line) > self.max_bytes:
+            fh.close()
             try:
-                if fh.tell() + len(line) > self.max_bytes:
-                    fh.close()
-                    os.replace(self.log_path, self.log_path + ".1")
-                    fh = self._log_fh = open(self.log_path, "a")
+                os.replace(self.log_path, self.log_path + ".1")
             except OSError:
-                pass
+                pass  # not rotated: keep appending to the current file
+            fh = self._log_fh = open(self.log_path, "a")
         fh.write(line)
         fh.flush()
 

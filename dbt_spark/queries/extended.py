@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_spark.queries.scratch import Scratch, scratch_query
 from dbt_spark.session import load_tables
 
 
@@ -347,21 +348,20 @@ def interval_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multi-format sources (SURVEY §2E scan row: parquet/csv/json connectors)
 # --------------------------------------------------------------------------
 
-def scan_multi_format_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def scan_multi_format_sources(spark: SparkSession, sf_dir: str,
+                              scratch: Scratch) -> DataFrame:
     """The same relation served from JSON and CSV connectors, unioned and
     aggregated — proves the non-parquet source paths (spark.read.json/csv
     with explicit schemas; headers, type casts) give byte-identical results.
     Doubles survive the text round-trip exactly (shortest-repr writing)."""
-    import tempfile
-
     t = load_tables(spark, sf_dir, "events")
     base = (
         t["events"]
         .filter(F.col("event_id") < 2000)
         .select("event_id", "event_type", "value")
     )
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_fmt_")
-    jdir, cdir = f"{tmp}/events_json", f"{tmp}/events_csv"
+    jdir, cdir = scratch.path("events_json"), scratch.path("events_csv")
     base.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").json(jdir)
     base.filter(F.col("event_id") % 2 == 1).write.mode("overwrite").option(
         "header", True

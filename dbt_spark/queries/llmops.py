@@ -19,6 +19,7 @@ from dbt_spark.functions import dedup as D
 from dbt_spark.functions import similarity as S
 from dbt_spark.functions import text as X
 from dbt_spark.functions.multimodal import attach_binary_payload, decode_media_meta
+from dbt_spark.queries.scratch import Scratch, scratch_query
 from dbt_spark.session import load_tables, spread
 
 STOP_ARR = "['" + "', '".join(X.STOPWORDS) + "']"
@@ -2272,7 +2273,9 @@ def ppl_bucket_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def export_sharded_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def export_sharded_jsonl(spark: SparkSession, sf_dir: str,
+                         scratch: Scratch) -> DataFrame:
     """Training-shard EXPORT with write-back verification: docs assigned to
     16 deterministic shards (first md5 nibble of doc_id — the same portable
     hash the shuffle op uses), physically written as one JSONL file per
@@ -2284,9 +2287,6 @@ def export_sharded_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one repartition(shard) shuffle, one write, one read of the
     written shards. At 100 TB add maxRecordsPerFile for intra-shard file
     splits; shard count scales as hex digits (16^k)."""
-    import os
-    import tempfile
-
     docs = _docs(spark, sf_dir)
     h = F.md5(F.col("doc_id").cast("string"))
     d = docs.select(
@@ -2295,10 +2295,7 @@ def export_sharded_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.instr(F.lit("0123456789abcdef"), F.substring(h, 1, 1)) - 1)
         .cast("int").alias("shard"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"dbt_spark_export_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch.output
     (
         d.repartition(16, "shard")
         .sortWithinPartitions("doc_id")
@@ -3113,7 +3110,9 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ))
 
 
-def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
     """Malformed-record quarantine ingestion — the first stage of every
     real crawl pipeline: read JSONL with an explicit schema in PERMISSIVE
     mode, route unparseable lines to a quarantine column instead of
@@ -3128,11 +3127,10 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Spark caveat handled here: a query referencing ONLY the
     corrupt-record column is disallowed (the parser would need a second
     pass), so the aggregate touches data columns alongside it."""
-    import os as _os
-    import tempfile as _tf
-
     docs = _docs_raw(spark, sf_dir).select("doc_id", "source", "n_chars")
-    landing = _os.path.join(_tf.mkdtemp(prefix="dbt_spark_jsonl_"), "in")
+    # the result reads these files, so not ``scratch.landing`` (removed
+    # when the query returns)
+    landing = scratch.path("jsonl")
     lines = docs.selectExpr(
         "doc_id",
         "to_json(struct(doc_id, source, n_chars)) AS line"

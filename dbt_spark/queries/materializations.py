@@ -11,7 +11,6 @@ validates the operator's *semantics*, not just a query plan.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,18 +19,18 @@ from dbt_spark.catalog import RelationStore
 from dbt_spark.operators.materialize import ExecutionContext
 from dbt_spark.plans.manifest import Manifest, ManifestNode, NodeConfig, NodeType
 from dbt_spark.project import Project
+from dbt_spark.queries.scratch import Scratch, scratch_query
 from dbt_spark.session import load_tables
 
 T1 = "2020-01-01 00:00:00"
 T2 = "2020-06-01 00:00:00"
 
 
-def _mini_ctx(spark: SparkSession, **ctx_kwargs) -> ExecutionContext:
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_mat_")
+def _mini_ctx(spark: SparkSession, scratch: Scratch, **ctx_kwargs) -> ExecutionContext:
     project = Project(
         name="matq",
-        root=tmp,
-        profile={"warehouse": os.path.join(tmp, "wh"), "schema": "main", "threads": 2},
+        root=scratch.root,
+        profile={"warehouse": scratch.store, "schema": "main", "threads": 2},
     )
     store = RelationStore(spark, project.profile["warehouse"])
     return ExecutionContext(
@@ -66,9 +65,10 @@ def _run_incremental(ctx, node: ManifestNode, batches: list[str]) -> DataFrame:
 # incremental family
 # --------------------------------------------------------------------------
 
-def incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_append(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node("inc_append", "", materialized="incremental",
                        incremental_strategy="append")
     return _run_incremental(ctx, node, [
@@ -79,9 +79,10 @@ def incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
-def incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_merge(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node("inc_merge", "", materialized="incremental",
                        incremental_strategy="merge", unique_key="o_orderkey")
     return _run_incremental(ctx, node, [
@@ -91,7 +92,9 @@ def incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
-def incremental_merge_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_merge_acid(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """The SAME merge semantics as incremental_merge, driven over the
     transactional ``txparquet`` format (formats.py TxParquetFormat): the
     merge routes through the format's NATIVE file-pruned MERGE
@@ -106,7 +109,7 @@ def incremental_merge_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata operation, so merge cost follows the touched-file volume,
     not the table size."""
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node("inc_merge_acid", "", materialized="incremental",
                        incremental_strategy="merge", unique_key="o_orderkey",
                        file_format="txparquet")
@@ -142,7 +145,9 @@ WHERE {{ k }} NOT IN (SELECT {{ k }} FROM {{ t }})
 """
 
 
-def incremental_custom_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_custom_strategy(spark: SparkSession, sf_dir: str,
+                                scratch: Scratch) -> DataFrame:
     """CUSTOM incremental strategy through the REAL materializer: a
     user-defined ``get_incremental_insert_only_new_sql`` macro (the
     reference's strategy→macro dispatch, exercised by its
@@ -150,7 +155,7 @@ def incremental_custom_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
     run 2 — first-write-wins, so run 2's restatus lands only on keys run
     1 never saw. The oracle states that final state directly."""
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     ctx.manifest.macros["get_incremental_insert_only_new_sql"] = (
         _CUSTOM_STRATEGY_MACRO)
     node = _model_node("inc_custom", "", materialized="incremental",
@@ -164,9 +169,11 @@ def incremental_custom_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
-def incremental_delete_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_delete_insert(spark: SparkSession, sf_dir: str,
+                              scratch: Scratch) -> DataFrame:
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node("inc_di", "", materialized="incremental",
                        incremental_strategy="delete+insert", unique_key="o_orderkey")
     return _run_incremental(ctx, node, [
@@ -175,11 +182,13 @@ def incremental_delete_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
-def incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def incremental_insert_overwrite(spark: SparkSession, sf_dir: str,
+                                 scratch: Scratch) -> DataFrame:
     """Partition-scoped overwrite: 1997's partition replaced with a filtered
     rebuild; every other year's partition untouched."""
     load_tables(spark, sf_dir, "orders")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node("inc_ov", "", materialized="incremental",
                        incremental_strategy="insert_overwrite", partition_by="order_year")
     return _run_incremental(ctx, node, [
@@ -190,13 +199,15 @@ def incremental_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]).select("o_orderkey", "o_totalprice", F.col("order_year").cast("bigint").alias("order_year"))
 
 
-def microbatch_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def microbatch_backfill(spark: SparkSession, sf_dir: str,
+                        scratch: Scratch) -> DataFrame:
     """Day-grain backfill over events Jan 1-5, then an incremental run a day
     later (lookback=1 reprocesses the trailing day): final = events < Jan 7."""
     from datetime import datetime
 
     load_tables(spark, sf_dir, "events")
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     node = _model_node(
         "mb_events", "", materialized="incremental",
         incremental_strategy="microbatch", event_time="ts", batch_size="day",
@@ -217,7 +228,8 @@ def microbatch_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SCD2 snapshots
 # --------------------------------------------------------------------------
 
-def _snapshot_series(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
+def _snapshot_series(spark: SparkSession, sf_dir: str, scratch: Scratch,
+                     strategy: str) -> DataFrame:
     from dbt_spark.operators.snapshot import materialize_snapshot
 
     load_tables(spark, sf_dir, "supplier")
@@ -244,7 +256,7 @@ def _snapshot_series(spark: SparkSession, sf_dir: str, strategy: str) -> DataFra
         )
         + " FROM supplier"
     )
-    ctx = _mini_ctx(spark, snapshot_ts=T1)
+    ctx = _mini_ctx(spark, scratch, snapshot_ts=T1)
     node.raw_code = v1
     materialize_snapshot(ctx, node)
     ctx.snapshot_ts = T2
@@ -256,22 +268,27 @@ def _snapshot_series(spark: SparkSession, sf_dir: str, strategy: str) -> DataFra
     )
 
 
-def snapshot_scd2_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _snapshot_series(spark, sf_dir, "timestamp")
+@scratch_query
+def snapshot_scd2_timestamp(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
+    return _snapshot_series(spark, sf_dir, scratch, "timestamp")
 
 
-def snapshot_scd2_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _snapshot_series(spark, sf_dir, "check")
+@scratch_query
+def snapshot_scd2_check(spark: SparkSession, sf_dir: str,
+                        scratch: Scratch) -> DataFrame:
+    return _snapshot_series(spark, sf_dir, scratch, "check")
 
 
 # --------------------------------------------------------------------------
 # seed load
 # --------------------------------------------------------------------------
 
-def seed_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def seed_load(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     from dbt_spark.operators.seed import materialize_seed
 
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     t = load_tables(spark, sf_dir, "region")
     seed_dir = os.path.join(ctx.project.root, "seeds")
     os.makedirs(seed_dir, exist_ok=True)
@@ -294,8 +311,8 @@ def seed_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generic data tests (failing-rows queries through the real builder)
 # --------------------------------------------------------------------------
 
-def _test_ctx(spark: SparkSession, sf_dir: str):
-    ctx = _mini_ctx(spark)
+def _test_ctx(spark: SparkSession, sf_dir: str, scratch: Scratch):
+    ctx = _mini_ctx(spark, scratch)
     for tbl in ("orders", "events", "nation", "customer", "lineitem"):
         src = ManifestNode(
             unique_id=f"source.matq.tpch.{tbl}",
@@ -312,11 +329,12 @@ def _test_ctx(spark: SparkSession, sf_dir: str):
 
 
 def _generic_test_df(
-    spark: SparkSession, sf_dir: str, table: str, column: str, test_name: str, **kwargs
+    spark: SparkSession, sf_dir: str, scratch: Scratch, table: str, column: str,
+    test_name: str, **kwargs
 ) -> DataFrame:
     from dbt_spark.operators.tests import build_generic_test_sql
 
-    ctx = _test_ctx(spark, sf_dir)
+    ctx = _test_ctx(spark, sf_dir, scratch)
     tnode = ManifestNode(
         unique_id=f"test.matq.{test_name}_{table}_{column}",
         name=f"{test_name}_{table}_{column}",
@@ -333,24 +351,32 @@ def _generic_test_df(
     return spark.sql(build_generic_test_sql(ctx, tnode))
 
 
-def test_not_null_failing_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _generic_test_df(spark, sf_dir, "orders", "o_custkey", "not_null")
+@scratch_query
+def test_not_null_failing_rows(spark: SparkSession, sf_dir: str,
+                               scratch: Scratch) -> DataFrame:
+    df = _generic_test_df(spark, sf_dir, scratch, "orders", "o_custkey", "not_null")
     return df.select("o_orderkey", "o_custkey")
 
 
-def test_unique_failing_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _generic_test_df(spark, sf_dir, "orders", "o_custkey", "unique")
+@scratch_query
+def test_unique_failing_rows(spark: SparkSession, sf_dir: str,
+                             scratch: Scratch) -> DataFrame:
+    return _generic_test_df(spark, sf_dir, scratch, "orders", "o_custkey", "unique")
 
 
-def test_accepted_values_failing_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def test_accepted_values_failing_rows(spark: SparkSession, sf_dir: str,
+                                      scratch: Scratch) -> DataFrame:
     return _generic_test_df(
-        spark, sf_dir, "orders", "o_orderstatus", "accepted_values", values=["O", "F"]
+        spark, sf_dir, scratch, "orders", "o_orderstatus", "accepted_values", values=["O", "F"]
     )
 
 
-def test_relationships_failing_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def test_relationships_failing_rows(spark: SparkSession, sf_dir: str,
+                                    scratch: Scratch) -> DataFrame:
     return _generic_test_df(
-        spark, sf_dir, "events", "user_id", "relationships",
+        spark, sf_dir, scratch, "events", "user_id", "relationships",
         field="n_nationkey", to_table="nation",
     ).distinct()
 
@@ -393,6 +419,7 @@ def _utils_pack_macros() -> dict:
 def _utils_test_df(
     spark: SparkSession,
     sf_dir: str,
+    scratch: Scratch,
     table: str,
     test_name: str,
     column: str = None,
@@ -406,7 +433,7 @@ def _utils_test_df(
     """
     from dbt_spark.operators.tests import build_generic_test_sql
 
-    ctx = _test_ctx(spark, sf_dir)
+    ctx = _test_ctx(spark, sf_dir, scratch)
     ctx.manifest.macros.update(_utils_pack_macros())
     resolved = {k: (v(ctx) if callable(v) else v) for k, v in kwargs.items()}
     cfg = NodeConfig(materialized="test")
@@ -430,12 +457,14 @@ def _tpch_source_ident(ctx, table: str) -> str:
     return ctx.resolve_source(ctx.manifest.sources[f"source.matq.tpch.{table}"])
 
 
-def utilpack_accepted_range(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def utilpack_accepted_range(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
     """dbt_utils.accepted_range failing rows: customers with negative
     account balance against min_value=0 (hub dbt_utils
     macros/generic_tests/accepted_range.sql semantics)."""
     df = _utils_test_df(
-        spark, sf_dir, "customer", "accepted_range",
+        spark, sf_dir, scratch, "customer", "accepted_range",
         column="c_acctbal", min_value=0, inclusive=True,
     )
     return df.select(
@@ -443,11 +472,13 @@ def utilpack_accepted_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def utilpack_equal_rowcount_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def utilpack_equal_rowcount_grouped(spark: SparkSession, sf_dir: str,
+                                    scratch: Scratch) -> DataFrame:
     """dbt_utils.equal_rowcount with group_by_columns: per-region nation
     counts vs a filtered twin — failing rows are the drifted groups."""
     return _utils_test_df(
-        spark, sf_dir, "nation", "equal_rowcount",
+        spark, sf_dir, scratch, "nation", "equal_rowcount",
         group_by_columns=["n_regionkey"],
         compare_model=lambda ctx: (
             f"(select * from {_tpch_source_ident(ctx, 'nation')} "
@@ -456,23 +487,27 @@ def utilpack_equal_rowcount_grouped(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def utilpack_sequential_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def utilpack_sequential_values(spark: SparkSession, sf_dir: str,
+                               scratch: Scratch) -> DataFrame:
     """dbt_utils.sequential_values: o_orderkey gaps on a bounded slice
     (every 7th key filtered out, so failing rows exist at any SF) —
     one lag() window, no self-join."""
     return _utils_test_df(
-        spark, sf_dir, "orders", "sequential_values",
+        spark, sf_dir, scratch, "orders", "sequential_values",
         column="o_orderkey",
         where="o_orderkey <= 400 and o_orderkey % 7 != 0", interval=1,
     )
 
 
-def utilpack_mutually_exclusive_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def utilpack_mutually_exclusive_ranges(spark: SparkSession, sf_dir: str,
+                                       scratch: Scratch) -> DataFrame:
     """dbt_utils.mutually_exclusive_ranges over per-customer 30-day order
     windows: overlapping ranges are failing rows. Single lag() window keyed
     on the partition column — one shuffle, scales with key cardinality."""
     return _utils_test_df(
-        spark, sf_dir, "orders", "mutually_exclusive_ranges",
+        spark, sf_dir, scratch, "orders", "mutually_exclusive_ranges",
         where="o_custkey < 50",
         lower_bound_column="o_orderdate",
         upper_bound_column="o_orderdate + interval 30 day",
@@ -481,23 +516,23 @@ def utilpack_mutually_exclusive_ranges(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-def utilpack_unique_combination_of_columns(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
+@scratch_query
+def utilpack_unique_combination_of_columns(spark: SparkSession, sf_dir: str,
+                                           scratch: Scratch) -> DataFrame:
     """dbt_utils.unique_combination_of_columns failing rows: (o_custkey,
     o_orderstatus) pairs appearing more than once — one hash groupBy with
     map-side partials, HAVING on the count (hub dbt_utils
     macros/generic_tests/unique_combination_of_columns.sql)."""
     return _utils_test_df(
-        spark, sf_dir, "orders", "unique_combination_of_columns",
+        spark, sf_dir, scratch, "orders", "unique_combination_of_columns",
         combination_of_columns=["o_custkey", "o_orderstatus"],
         where="o_custkey < 100",
     )
 
 
-def utilpack_fewer_rows_than_introspective(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
+@scratch_query
+def utilpack_fewer_rows_than_introspective(spark: SparkSession, sf_dir: str,
+                                           scratch: Scratch) -> DataFrame:
     """dbt_utils.fewer_rows_than, INTROSPECTIVE compare_model form: the
     kwarg is a rendered subquery over another relation (the reference's
     custom-config fixture idiom, tests/functional/schema_tests/
@@ -505,7 +540,7 @@ def utilpack_fewer_rows_than_introspective(
     Grouped by o_orderstatus vs the even-orderkey half: every status has
     count_our >= count_comparison, so each group is a failing row."""
     return _utils_test_df(
-        spark, sf_dir, "orders", "fewer_rows_than",
+        spark, sf_dir, scratch, "orders", "fewer_rows_than",
         group_by_columns=["o_orderstatus"],
         compare_model=lambda ctx: (
             f"(select * from {_tpch_source_ident(ctx, 'orders')} "
@@ -514,11 +549,13 @@ def utilpack_fewer_rows_than_introspective(
     )
 
 
-def utilpack_cardinality_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def utilpack_cardinality_equality(spark: SparkSession, sf_dir: str,
+                                  scratch: Scratch) -> DataFrame:
     """dbt_utils.cardinality_equality: order custkey multiset vs customer
     key multiset — EXCEPT both directions over (value, count) pairs."""
     return _utils_test_df(
-        spark, sf_dir, "orders", "cardinality_equality",
+        spark, sf_dir, scratch, "orders", "cardinality_equality",
         column="o_custkey", field="c_custkey",
         to=lambda ctx: _tpch_source_ident(ctx, "customer"),
     )
@@ -527,6 +564,19 @@ def utilpack_cardinality_equality(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 # full engine end-to-end (parse → DAG → materialize → read back)
 # --------------------------------------------------------------------------
+
+def _engine_project(spark: SparkSession, root: str, files: dict, sf_dir: str):
+    """An ``Engine`` over a project written to ``root`` from ``files``
+    (relpath -> content; ``__SF__`` stands for ``sf_dir``)."""
+    from dbt_spark.runner import Engine
+
+    for rel, content in files.items():
+        p = os.path.join(root, rel)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "w") as f:
+            f.write(content.replace("__SF__", sf_dir))
+    return Engine(root, spark=spark)
+
 
 ENGINE_PROJECT_FILES = {
     "dbt_project.yml": (
@@ -566,32 +616,25 @@ left join order_stats s on c.c_custkey = s.o_custkey
 }
 
 
-def engine_run_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def engine_run_e2e(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     """The flagship integration: a real project through Engine.invoke(['run'])."""
-    from dbt_spark.runner import Engine
-
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_e2e_")
-    for rel, content in ENGINE_PROJECT_FILES.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, ENGINE_PROJECT_FILES, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(f"engine run failed: {[r.message for r in result.results]}")
     return eng.store.read("main", "customer_orders")
 
 
-def engine_custom_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def engine_custom_materialization(spark: SparkSession, sf_dir: str,
+                                  scratch: Scratch) -> DataFrame:
     """A user-defined {% materialization %} through the whole engine
     (operators/custom_mat.py; reference task/run.py:305-334): the macro
     compiles the model SELECT over the orders source, issues its own
     CREATE TABLE ... USING PARQUET LOCATION via {% call statement('main')
     %}, and the engine adopts the files as the node's relation. Output is
     oracle-checked against the plain aggregate the macro materialized."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: cmq\n",
         "macros/by_status.sql": (
@@ -614,13 +657,7 @@ def engine_custom_materialization(spark: SparkSession, sf_dir: str) -> DataFrame
             "from {{ source('tpch', 'orders') }} group by o_orderstatus"
         ),
     }
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_custmat_")
-    for rel, content in files.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, files, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(
@@ -632,15 +669,15 @@ def engine_custom_materialization(spark: SparkSession, sf_dir: str) -> DataFrame
     return eng.store.read("main", "status_rollup")
 
 
-def engine_pii_scrub_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def engine_pii_scrub_model(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """config(pii_redact=['text']) through the WHOLE engine: a real
     project whose model emits synthetic contact lines, materialized as a
     table with the scrub config — the stored relation must contain the
     chained-redaction output byte-for-byte (per-lang ordered md5 fold
     vs the DuckDB replay of the same chain). Proves the privacy knob
     composes with materialization exactly like quality/dedup configs."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: piiq\n",
         "models/sources.yml": (
@@ -654,13 +691,7 @@ def engine_pii_scrub_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             "as text from {{ source('corpus', 'documents') }}"
         ),
     }
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_piiq_")
-    for rel, content in files.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, files, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(
@@ -678,14 +709,13 @@ def engine_pii_scrub_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def zorder_layout_scan(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     """config(zorder_by=[k1, k2]) through the engine: Morton-interleaved
     clustering (functions/layout.py) relays the full row set unchanged — the
     layout moves bytes, never values. Returned rows are oracle-checked
     against a plain projection; the pruning property itself is pinned by
     tests/test_features.py::test_zorder_by_clusters_both_dimensions."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: zq\n",
         "models/sources.yml": (
@@ -699,13 +729,7 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "from {{ source('tpch', 'orders') }}"
         ),
     }
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_zorder_")
-    for rel, content in files.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, files, sf_dir)
     if not eng.invoke(["run"]).success:
         raise RuntimeError("zorder run failed")
     return eng.store.read("main", "zlaid").select(
@@ -713,14 +737,14 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("double").alias("o_totalprice"))
 
 
-def contract_enforced_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def contract_enforced_model(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
     """Model contracts (reference v1/config.py:33-36, build_contract_checksum
     nodes.py:637): a conforming model materializes; a sibling that violates
     its declared schema is REJECTED and leaves no relation. Output = the
     conforming model + one row per model recording the enforcement verdict...
     expressed as columns so the oracle can state it."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: ctq\n",
         "models/sources.yml": (
@@ -748,13 +772,7 @@ def contract_enforced_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             "1.5 as surprise from {{ source('tpch', 'nation') }}"
         ),
     }
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_ctr_")
-    for rel, content in files.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, files, sf_dir)
     ok = eng.invoke(["run", "--select", "nations_ok"])
     bad = eng.invoke(["run", "--select", "nations_bad"])
     if not ok.success or bad.success:
@@ -767,13 +785,13 @@ def contract_enforced_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def clone_state_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def clone_state_relations(spark: SparkSession, sf_dir: str,
+                          scratch: Scratch) -> DataFrame:
     """`dbt clone --state` (reference task/clone.py:19-99): prod builds a
     relation; a dev target zero-copy clones it from prod's state artifacts —
     catalog entry copied, data files shared (parquet analog of Delta SHALLOW
     CLONE). Output = the cloned relation's content, never re-computed."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: clq\n",
         "models/sources.yml": (
@@ -787,31 +805,21 @@ def clone_state_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     }
 
-    def _mk(sub: str) -> str:
-        root = tempfile.mkdtemp(prefix=f"dbt_spark_clone_{sub}_")
-        for rel, content in files.items():
-            p = os.path.join(root, rel)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            with open(p, "w") as f:
-                f.write(content.replace("__SF__", sf_dir))
-        return root
-
-    prod = Engine(_mk("prod"), spark=spark)
+    prod = _engine_project(spark, scratch.path("prod"), files, sf_dir)
     if not prod.invoke(["run"]).success:
         raise RuntimeError("prod run failed")
-    dev = Engine(_mk("dev"), spark=spark)
+    dev = _engine_project(spark, scratch.path("dev"), files, sf_dir)
     r = dev.invoke(["clone", "--state", os.path.join(prod.project.root, "target")])
     if not r.success:
         raise RuntimeError(f"clone failed: {[x.message for x in r.results]}")
     return dev.store.read("main", "big_spenders")
 
 
-def hooks_audit_trail(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def hooks_audit_trail(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     """pre/post hooks through the engine (reference safe_run_hooks,
     task/run.py:868-976): the post-hook renders `{{ this }}` and records the
     built relation's rowcount into an audit view the query then returns."""
-    from dbt_spark.runner import Engine
-
     files = {
         "dbt_project.yml": "name: hkq\n",
         "models/sources.yml": (
@@ -828,13 +836,7 @@ def hooks_audit_trail(spark: SparkSession, sf_dir: str) -> DataFrame:
             "where o_orderpriority = '1-URGENT'"
         ),
     }
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_hooks_")
-    for rel, content in files.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, files, sf_dir)
     if not eng.invoke(["run"]).success:
         raise RuntimeError("hooked run failed")
     return spark.table("hook_audit")
@@ -875,26 +877,21 @@ def model(dbt, session):
 }
 
 
-def python_model_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def python_model_run(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     """A Python model (`def model(dbt, session)`) through the REAL engine:
     AST-parsed dbt.ref/dbt.config capture, DAG-linked after its SQL upstream,
     executed natively on the SparkSession."""
-    from dbt_spark.runner import Engine
-
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_py_")
-    for rel, content in PYTHON_MODEL_PROJECT_FILES.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, PYTHON_MODEL_PROJECT_FILES, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(f"python model run failed: {[r.message for r in result.results]}")
     return eng.store.read("main", "status_totals").orderBy("o_orderstatus")
 
 
-def snapshot_hard_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def snapshot_hard_delete(spark: SparkSession, sf_dir: str,
+                         scratch: Scratch) -> DataFrame:
     """SCD2 with hard_deletes='new_record' (reference: dbt_is_deleted meta
     column, v1/snapshot.py:35-42): v2 drops every 10th supplier, so those
     keys get their v1 row closed at T2 PLUS a current deletion-marker row
@@ -906,7 +903,7 @@ def snapshot_hard_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "snap_hd", "", materialized="snapshot", unique_key="s_suppkey",
         strategy="timestamp", updated_at="updated_at", hard_deletes="new_record",
     )
-    ctx = _mini_ctx(spark, snapshot_ts=T1)
+    ctx = _mini_ctx(spark, scratch, snapshot_ts=T1)
     node.raw_code = (
         f"SELECT s_suppkey, s_name, TIMESTAMP '{T1}' AS updated_at FROM supplier"
     )
@@ -964,23 +961,18 @@ unit_tests:
 }
 
 
-def unit_test_fixture_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def unit_test_fixture_diff(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """dbt-native unit tests through the REAL engine (`dbt test` over
     fixture-driven micro-manifests, reference parser/unit_tests.py:60-198 +
     task/test.py:205-283): source refs replaced by literal fixture rows, the
     model's SQL runs on them, actual vs expect is diffed. One passing and one
     deliberately-failing test; the result statuses are the query output."""
-    from dbt_spark.runner import Engine
-
-    tmp = tempfile.mkdtemp(prefix="dbt_spark_ut_")
-    for rel, content in UNIT_TEST_PROJECT_FILES.items():
-        p = os.path.join(tmp, rel)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(content.replace("__SF__", sf_dir))
-    eng = Engine(tmp, spark=spark)
+    eng = _engine_project(spark, scratch.root, UNIT_TEST_PROJECT_FILES, sf_dir)
     r = eng.invoke(["test", "--select", "ut_doc_stats_pass ut_doc_stats_fail"])
     rows = [(x.unique_id.rsplit(".", 1)[-1], x.status) for x in r.results]
+    scratch.remove()  # the result below is built from driver-side rows
     return spark.createDataFrame(rows, "unit_test string, status string").orderBy(
         "unit_test"
     )
@@ -1503,7 +1495,9 @@ def semantic_metric_input_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cobucketed_join_zeroshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def cobucketed_join_zeroshuffle(spark: SparkSession, sf_dir: str,
+                                scratch: Scratch) -> DataFrame:
     """Co-bucketed join through the REAL bucketed-table writer: orders and
     customer both hash-bucketed by custkey into the same bucket count, then
     joined on the bucket key — Catalyst reads the bucket spec as the scans'
@@ -1513,7 +1507,7 @@ def cobucketed_join_zeroshuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The 100 TB primitive: a nightly fact⋈fact join over co-bucketed layouts
     is a per-bucket local merge, not a cluster-wide shuffle."""
-    ctx = _mini_ctx(spark)
+    ctx = _mini_ctx(spark, scratch)
     t = load_tables(spark, sf_dir, "orders", "customer")
     ctx.store.write_bucketed(
         "main", "orders_b", t["orders"].select("o_orderkey", "o_custkey",

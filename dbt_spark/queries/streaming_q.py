@@ -19,12 +19,15 @@ checkpoint + watermark machinery owns that.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_spark.session import read_parquet, stream_conf
+from dbt_spark.queries.scratch import Scratch, scratch_query
+from dbt_spark.session import read_parquet
+from dbt_spark.streaming.stream import drain
 
 GAP_MIN = 30
 
@@ -39,7 +42,6 @@ def _land_two_batches(b1: DataFrame, b2: DataFrame, src: str) -> None:
     two renames with EXPLICIT strictly-increasing mtimes halves the setup
     jobs and removes the sleep; batch 0 is always ``b1``'s file."""
     import glob as _glob
-    import shutil as _sh
     import time as _time
 
     stage = src.rstrip("/") + "__stage"
@@ -61,19 +63,60 @@ def _land_two_batches(b1: DataFrame, b2: DataFrame, src: str) -> None:
         os.rename(part[0], dst)
         os.utime(dst, (now + i, now + i))
     for leftover in _glob.glob(stage + "*"):
-        _sh.rmtree(leftover, ignore_errors=True)
+        shutil.rmtree(leftover, ignore_errors=True)
 
 
-def streaming_ingest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_spark.queries.materializations import _mini_ctx, _model_node
+def fold_into(store: str, part: DataFrame,
+              merge: Callable[[DataFrame], DataFrame]) -> None:
+    """foreachBatch sink of a lattice-merge store: fold one micro-batch's
+    partial state ``part`` into the parquet dir ``store`` as
+    ``merge(previous store ∪ part)`` (``part`` alone on the first batch).
+    The merged state is written to a sibling dir and swapped in, so the
+    read (old store) and the write (next) never touch the same path and
+    no driver materialization is needed; the store stays as small as
+    ``merge`` keeps it, regardless of how many batches fold in."""
+    if os.path.isdir(store):
+        prev = part.sparkSession.read.parquet(store)
+        part = merge(prev.unionByName(part))
+    part.coalesce(1).write.mode("overwrite").parquet(store + "_next")
+    shutil.rmtree(store, ignore_errors=True)
+    os.rename(store + "_next", store)
+
+
+def _fold_stream(spark: SparkSession, scratch: Scratch, df: DataFrame,
+                 key: str, partial: Callable[[DataFrame], DataFrame],
+                 merge: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """The sketch/partial-sum streaming shape: land ``df`` as two
+    micro-batch files split at the midpoint of ``key``, stream them one
+    file per trigger, fold each batch's ``partial(batch)`` into
+    ``scratch.store`` with ``merge`` (``fold_into``), and return the
+    merged store."""
+    mid = df.agg(F.max(key)).collect()[0][0] // 2  # harness split
+    _land_two_batches(df.filter(F.col(key) <= mid),
+                      df.filter(F.col(key) > mid), scratch.landing)
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1).parquet(scratch.landing)
+    )
+
+    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+        fold_into(scratch.store, partial(batch_df), merge)
+
+    drain(stream.writeStream.foreachBatch(fold)
+          .option("checkpointLocation", scratch.checkpoint),
+          spark, scratch.landing)
+    return spark.read.parquet(scratch.store)
+
+
+def _landing_stream_model(spark: SparkSession, scratch: Scratch,
+                          name: str, sql: str):
+    """A mini engine context in ``scratch`` holding the source
+    ``landing.events`` (files under ``scratch.landing``) and the
+    streaming_table model ``name`` whose ``sql`` reads it."""
     from dbt_spark.plans.manifest import ManifestNode, NodeType
-    from dbt_spark.streaming.stream import materialize_streaming
+    from dbt_spark.queries.materializations import _mini_ctx, _model_node
 
-    ctx = _mini_ctx(spark)
-    landing = tempfile.mkdtemp(prefix="dbt_spark_landing_")
-    events = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
-    mid = events.agg(F.max("event_id")).collect()[0][0] // 2
-
+    ctx = _mini_ctx(spark, scratch)
     src = ManifestNode(
         unique_id="source.matq.landing.events",
         name="events",
@@ -82,20 +125,30 @@ def streaming_ingest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         resource_type=NodeType.Source,
         source_name="landing",
     )
-    src.config.meta["location"] = landing
+    src.config.meta["location"] = scratch.landing
     ctx.manifest.add(src)
-
-    node = _model_node(
-        "events_stream",
-        "SELECT event_id, user_id, ts, event_type, value "
-        "FROM {{ source('landing', 'events') }}",
-        materialized="streaming_table",
-    )
+    node = _model_node(name, sql, materialized="streaming_table")
     node.sources = [("landing", "events")]
     node.depends_on = [src.unique_id]
     ctx.manifest.add(node)
+    return ctx, node
+
+
+@scratch_query
+def streaming_ingest_checkpoint(spark: SparkSession, sf_dir: str,
+                                scratch: Scratch) -> DataFrame:
+    from dbt_spark.streaming.stream import materialize_streaming
+
+    events = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    mid = events.agg(F.max("event_id")).collect()[0][0] // 2
+    ctx, node = _landing_stream_model(
+        spark, scratch, "events_stream",
+        "SELECT event_id, user_id, ts, event_type, value "
+        "FROM {{ source('landing', 'events') }}",
+    )
 
     # batch 1 → run; batch 2 → run again (checkpoint skips batch 1's files)
+    landing = scratch.landing
     events.filter(F.col("event_id") <= mid).write.mode("append").parquet(landing)
     materialize_streaming(ctx, node)
     events.filter(F.col("event_id") > mid).write.mode("append").parquet(landing)
@@ -103,7 +156,9 @@ def streaming_ingest_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ctx.store.read("main", "events_stream")
 
 
-def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_dedup_watermark(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """dropDuplicatesWithinWatermark over a file stream: the same slice of
     events lands TWICE (duplicate files across micro-batches); the stream
     emits each event_id once, with state bounded by the 1-hour watermark
@@ -116,27 +171,22 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts", "value")
         .filter(F.col("event_id") < 3000)
     )
-    src = tempfile.mkdtemp(prefix="dbt_spark_ddsrc_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_ddout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_ddckpt_")
+    src = scratch.landing
     _land_two_batches(events, events, src)  # second file = exact duplicates
 
     stream = spark.readStream.schema(events.schema).parquet(src)
     deduped = streaming_dedup(stream, ["event_id"], event_time="ts", watermark="1 hour")
-    with stream_conf(spark, src):
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select("event_id", "user_id", "value")
+    drain(deduped.writeStream.format("parquet")
+          .option("path", scratch.output)
+          .option("checkpointLocation", scratch.checkpoint)
+          .outputMode("append"), spark, src)
+    return spark.read.parquet(scratch.output).select(
+        "event_id", "user_id", "value")
 
 
-def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_static_join(spark: SparkSession, sf_dir: str,
+                       scratch: Scratch) -> DataFrame:
     """Stream-static enrichment: a streaming_table model whose SQL joins the
     streaming source (events landing dir) against a static ref (customer
     dim) — the canonical streaming enrichment shape. availableNow processes
@@ -144,14 +194,17 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the static side is a broadcast per micro-batch (Spark re-plans it
     each batch); no stream-side shuffle — enrichment is map-only."""
-    from dbt_spark.queries.materializations import _mini_ctx, _model_node
-    from dbt_spark.plans.manifest import ManifestNode, NodeType
+    from dbt_spark.queries.materializations import _model_node
     from dbt_spark.streaming.stream import materialize_streaming
 
-    ctx = _mini_ctx(spark)
-    landing = tempfile.mkdtemp(prefix="dbt_spark_enrich_")
+    ctx, node = _landing_stream_model(
+        spark, scratch, "events_enriched",
+        "SELECT e.event_id, e.user_id, e.value, d.c_mktsegment AS segment "
+        "FROM {{ source('landing', 'events') }} e "
+        "JOIN {{ ref('cust_dim') }} d ON e.user_id = d.c_custkey",
+    )
     events = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
-    events.write.mode("append").parquet(landing)
+    events.write.mode("append").parquet(scratch.landing)
 
     cust = read_parquet(spark, os.path.join(sf_dir, "customer.parquet")).select(
         "c_custkey", "c_mktsegment"
@@ -159,35 +212,16 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ctx.store.write_table("main", "cust_dim", cust, kind="table")
     dim = _model_node("cust_dim", "select 1", materialized="table")
     ctx.manifest.add(dim)
-
-    src = ManifestNode(
-        unique_id="source.matq.landing.events",
-        name="events",
-        package_name="matq",
-        path="models/sources.yml",
-        resource_type=NodeType.Source,
-        source_name="landing",
-    )
-    src.config.meta["location"] = landing
-    ctx.manifest.add(src)
-
-    node = _model_node(
-        "events_enriched",
-        "SELECT e.event_id, e.user_id, e.value, d.c_mktsegment AS segment "
-        "FROM {{ source('landing', 'events') }} e "
-        "JOIN {{ ref('cust_dim') }} d ON e.user_id = d.c_custkey",
-        materialized="streaming_table",
-    )
-    node.sources = [("landing", "events")]
     node.refs = [(None, "cust_dim")]
-    node.depends_on = [src.unique_id, dim.unique_id]
-    ctx.manifest.add(node)
+    node.depends_on.append(dim.unique_id)
 
     materialize_streaming(ctx, node)
     return ctx.store.read("main", "events_enriched").orderBy("event_id")
 
 
-def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_stream_interval_join(spark: SparkSession, sf_dir: str,
+                                scratch: Scratch) -> DataFrame:
     """Watermarked stream-stream inner join with a time-interval condition:
     clicks joined to the same user's purchases within the next 30 minutes —
     the canonical funnel/attribution shape (Structured Streaming's
@@ -206,9 +240,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts", "event_type")
         .filter(F.col("event_id") < 3000)
     )
-    src = tempfile.mkdtemp(prefix="dbt_spark_ssj_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_ssjout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_ssjckpt_")
+    src = scratch.landing
     events.coalesce(1).write.mode("append").parquet(src)
 
     from dbt_spark.streaming.stateful import _watermarkable
@@ -235,17 +267,11 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("c_user = p_user AND p_ts >= c_ts "
                "AND p_ts <= c_ts + INTERVAL 30 MINUTES"),
     ).select("click_id", "purchase_id", F.col("c_user").alias("user_id"))
-    with stream_conf(spark, src):
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    drain(joined.writeStream.format("parquet")
+          .option("path", scratch.output)
+          .option("checkpointLocation", scratch.checkpoint)
+          .outputMode("append"), spark, src)
+    return spark.read.parquet(scratch.output)
 
 
 def session_window_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +329,9 @@ def hopping_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
+                               scratch: Scratch) -> DataFrame:
     """Streaming keyed-upsert sink via foreachBatch (the canonical pattern
     from the public Structured Streaming docs: foreachBatch + MERGE into the
     warehouse; at 100 TB the inner rewrite becomes Delta/Iceberg MERGE —
@@ -314,8 +342,6 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's row for the same user) are actually exercised, checkpointed and
     deterministic. Final state = keep-latest-by-(ts, event_id) per user —
     exactly the batch window-rank, which is the oracle."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as W
 
     from dbt_spark.catalog import RelationStore
@@ -325,10 +351,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "user_id", "ts", "value")
         .filter(F.col("event_id") < 2000)
     )
-    src = _tf.mkdtemp(prefix="dbt_spark_fbsrc_")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_fbckpt_")
-    wh = _tf.mkdtemp(prefix="dbt_spark_fbwh_")
-    store = RelationStore(spark, wh)
+    src = scratch.landing
+    store = RelationStore(spark, scratch.store)
     # two files -> two micro-batches
     _land_two_batches(events.filter(F.col("event_id") < 1000),
                       events.filter(F.col("event_id") >= 1000), src)
@@ -352,14 +376,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         store.write_table("main", "user_latest", latest, kind="table")
 
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(upsert)
+          .option("checkpointLocation", scratch.checkpoint), spark, src)
     return store.read("main", "user_latest").select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -367,7 +385,9 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_neardup_ingest(spark: SparkSession, sf_dir: str,
+                          scratch: Scratch) -> DataFrame:
     """Cross-batch streaming near-dup ingestion
     (streaming/stateful.py:minhash_ingest_gate): two micro-batches of
     documents, the second carrying PLANTED near-duplicates of batch-1 docs
@@ -378,8 +398,6 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (within-batch minhash_dedup + bucket-collision gate), so the driver's
     rows check doubles as the cross-batch-semantics gate (bucket keys are
     engine hashes → rows-only, like the other LSH ops)."""
-    import tempfile as _tf
-
     from dbt_spark.functions.dedup import _banded_signatures, minhash_dedup
     from dbt_spark.streaming.stateful import minhash_ingest_gate
 
@@ -397,23 +415,18 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = docs.filter((F.col("doc_id") >= 120) & (F.col("doc_id") < 240)
                      ).unionByName(planted)
 
-    src = _tf.mkdtemp(prefix="dbt_spark_ndsrc_")
-    out_dir = os.path.join(_tf.mkdtemp(prefix="dbt_spark_ndout_"), "docs")
-    sig_dir = os.path.join(_tf.mkdtemp(prefix="dbt_spark_ndsig_"), "sigs")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_ndckpt_")
+    src = scratch.landing
     _land_two_batches(b1, b2, src)
 
     stream = (spark.readStream.schema(b1.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    with stream_conf(spark, src):
-        q = (stream.writeStream
-             .foreachBatch(minhash_ingest_gate(out_dir, sig_dir))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    drain(stream.writeStream
+          .foreachBatch(minhash_ingest_gate(scratch.output, scratch.store))
+          .option("checkpointLocation", scratch.checkpoint), spark, src)
     got = {r["doc_id"] for r in
-           spark.read.parquet(out_dir).select("doc_id").collect()}
+           spark.read.parquet(scratch.output).select("doc_id").collect()}
+    # the result below is built from driver-side rows
+    scratch.remove()
 
     # sequential batch-mode replay with the same library primitives
     k1 = minhash_dedup(b1, "text", "doc_id", threshold=0.5,
@@ -439,7 +452,9 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sorted((int(d),) for d in got), "doc_id long")
 
 
-def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_heavy_hitters(spark: SparkSession, sf_dir: str,
+                         scratch: Scratch) -> DataFrame:
     """STREAMING per-source heavy hitters, value-paired: a cross-batch
     Misra-Gries summary per source (applyInPandasWithState,
     streaming/stateful.py:mg_heavy_hitters_stream — counters persist in
@@ -456,7 +471,6 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is k counters per source; per-batch traffic is the
     summary rows; the verify aggregate holds candidates, never the
     vocabulary — the streaming twin of heavy_hitters_mg."""
-    import tempfile as _tf
     import uuid as _uuid
 
     from dbt_spark.streaming.stateful import mg_heavy_hitters_stream
@@ -468,8 +482,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b1 = docs.filter(F.col("doc_id") < 250)
     b2 = docs.filter(F.col("doc_id") >= 250)
-    src = _tf.mkdtemp(prefix="dbt_spark_hhsrc_")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_hhckpt_")
+    src = scratch.landing
     _land_two_batches(b1, b2, src)
 
     stream = (spark.readStream.schema(docs.schema)
@@ -479,13 +492,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token"),
     ).filter(F.col("token") != "")
     name = f"hh_mg_{_uuid.uuid4().hex[:8]}"
-    with stream_conf(spark, src):
-        q = (mg_heavy_hitters_stream(tok_stream, k)
-             .writeStream.format("memory").queryName(name)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    drain(mg_heavy_hitters_stream(tok_stream, k)
+          .writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", scratch.checkpoint), spark, src)
     cands = spark.table(name).select("source", "token").distinct()
 
     toks = docs.select(
@@ -509,6 +518,10 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "token")
     )
     verified = verified.localCheckpoint()
+    # the pinned result no longer reads the memory sink or the landing
+    # files: release the sink's rows and the scratch tree now
+    spark.catalog.dropTempView(name)
+    scratch.remove()
     missed = direct.join(verified, ["source", "token"], "left_anti").count()
     extra = verified.join(direct, ["source", "token"], "left_semi").count()
     if missed != 0 or extra != verified.count():
@@ -518,7 +531,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified
 
 
-def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str,
+                                    scratch: Scratch) -> DataFrame:
     """Streaming upsert with PER-BATCH TRANSACTIONAL MERGE — the exact
     shape the public docs prescribe for Delta (`foreachBatch` + MERGE, one
     transaction per micro-batch), executed here over the in-repo
@@ -533,8 +548,6 @@ def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str) -> DataFra
     each batch commit rewrites ONLY the data files containing matched
     users; the commit is metadata. This is the per-batch-transaction sink
     that keeps a 100 TB keyed table ingesting continuously."""
-    import tempfile as _tf
-
     from pyspark.sql import Window as W
 
     from dbt_spark.catalog import RelationStore
@@ -545,10 +558,8 @@ def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str) -> DataFra
         .select("event_id", "user_id", "ts", "value")
         .filter(F.col("event_id") < 2000)
     )
-    src = _tf.mkdtemp(prefix="dbt_spark_fbasrc_")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_fbackpt_")
-    wh = _tf.mkdtemp(prefix="dbt_spark_fbawh_")
-    store = RelationStore(spark, wh)
+    src = scratch.landing
+    store = RelationStore(spark, scratch.store)
     fmt = table_format("txparquet")
     # two files -> two micro-batches; _land_two_batches stamps explicit
     # strictly-increasing mtimes, replacing the 1.1 s sleep this query
@@ -578,14 +589,8 @@ def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str) -> DataFra
             fmt.merge_into(spark, rel.path, latest, ["user_id"])
             store.invalidate(rel)
 
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(stream.writeStream.foreachBatch(upsert)
+          .option("checkpointLocation", scratch.checkpoint), spark, src)
     rel = store.get("main", "user_latest_acid")
     if fmt.latest_version(rel.path) < 2:
         raise RuntimeError("expected one commit per micro-batch")
@@ -596,7 +601,9 @@ def stream_foreachbatch_upsert_acid(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_pii_scrub(spark: SparkSession, sf_dir: str,
+                     scratch: Scratch) -> DataFrame:
     """STREAMING PII scrub gate: the chained email→phone→ipv4 redaction
     (functions/pii.py) runs INSIDE a file stream — documents land in two
     micro-batch file drops, each availableNow run scrubs only the new
@@ -615,9 +622,7 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
     dirty = _with_pii(docs).select("doc_id", "lang", "full_text")
     mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    src = tempfile.mkdtemp(prefix="dbt_spark_piisrc_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_piiout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_piickpt_")
+    src = scratch.landing
 
     def run_once() -> None:
         stream = spark.readStream.schema(dirty.schema).parquet(src)
@@ -629,16 +634,10 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             cols["ips"].alias("ips"),
             cols["redacted"].alias("redacted"),
         )
-        with stream_conf(spark, src):
-            q = (
-                scrubbed.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(scrubbed.writeStream.format("parquet")
+              .option("path", scratch.output)
+              .option("checkpointLocation", scratch.checkpoint)
+              .outputMode("append"), spark, src)
 
     dirty.filter(F.col("doc_id") <= mid).coalesce(1).write.mode(
         "append").parquet(src)
@@ -647,7 +646,7 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append").parquet(src)
     run_once()
 
-    res = spark.read.parquet(out_dir)
+    res = spark.read.parquet(scratch.output)
     return (
         res.groupBy("lang")
         .agg(
@@ -676,7 +675,9 @@ def stream_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_turn_dedup(spark: SparkSession, sf_dir: str,
+                      scratch: Scratch) -> DataFrame:
     """STREAMING turn-level dedup — the streaming twin of
     queries/sft.py::turn_dedup_normalized: conversation turns land in two
     micro-batch file drops and a STATEFUL ``dropDuplicates(conv_id,
@@ -700,9 +701,7 @@ def stream_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     turns = _turns(spark, sf_dir).select("conv_id", "doc_id", "content")
     mid = turns.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
-    src = tempfile.mkdtemp(prefix="dbt_spark_tdsrc_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_tdout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_tdckpt_")
+    src = scratch.landing
 
     def run_once() -> None:
         stream = spark.readStream.schema(
@@ -712,16 +711,10 @@ def stream_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.select("conv_id", norm.alias("norm"))
             .dropDuplicates(["conv_id", "norm"])
         )
-        with stream_conf(spark, src):
-            q = (
-                deduped.writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(deduped.writeStream.format("parquet")
+              .option("path", scratch.output)
+              .option("checkpointLocation", scratch.checkpoint)
+              .outputMode("append"), spark, src)
 
     turns.filter(F.col("doc_id") <= mid).select(
         "conv_id", "content").coalesce(1).write.mode("append").parquet(src)
@@ -730,7 +723,7 @@ def stream_turn_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conv_id", "content").coalesce(1).write.mode("append").parquet(src)
     run_once()
 
-    kept = spark.read.parquet(out_dir)
+    kept = spark.read.parquet(scratch.output)
     totals = turns.groupBy("conv_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_turns"))
     uniq = kept.groupBy("conv_id").agg(
@@ -924,7 +917,9 @@ ORACLES = {
 
 
 
-def stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_media_triage(spark: SparkSession, sf_dir: str,
+                        scratch: Scratch) -> DataFrame:
     """Streaming media-ingest triage (streaming/stateful.py:
     media_triage_gate): two micro-batches of binary blobs — genuine
     PNG/JPEG/GIF/BMP container files (REAL header builders), plus PLANTED
@@ -935,8 +930,6 @@ def stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-mode triage of the same blobs; the per-doc routing is
     closed-form, so the final table is ORACLE-PAIRED (a value-checked
     STREAMING query)."""
-    import tempfile as _tf
-
     from dbt_spark.functions.multimodal import _make_header_builders
     from dbt_spark.streaming.stateful import media_triage_gate
 
@@ -971,31 +964,23 @@ def stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = docs.mapInPandas(
         gen, schema="doc_id long, payload binary").localCheckpoint()
 
-    src = _tf.mkdtemp(prefix="dbt_spark_mtsrc_")
-    kept_dir = os.path.join(_tf.mkdtemp(prefix="dbt_spark_mtkeep_"), "k")
-    quar_dir = os.path.join(_tf.mkdtemp(prefix="dbt_spark_mtquar_"), "q")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_mtckpt_")
+    src = scratch.landing
+    kept_dir, quar_dir = scratch.path("kept"), scratch.path("quarantined")
     _land_two_batches(blobs.filter(F.col("doc_id") % 2 == 0),
                       blobs.filter(F.col("doc_id") % 2 == 1), src)
 
     stream = (spark.readStream.schema(blobs.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    with stream_conf(spark, src):
-        q = (stream.writeStream
-             .foreachBatch(media_triage_gate(kept_dir, quar_dir))
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
+    drain(stream.writeStream
+          .foreachBatch(media_triage_gate(kept_dir, quar_dir))
+          .option("checkpointLocation", scratch.checkpoint), spark, src)
 
     kept = spark.read.parquet(kept_dir)
     quar = spark.read.parquet(quar_dir)
     streamed = kept.unionByName(quar)
 
     # batch-mode replay check: run the SAME gate body once over all blobs
-    rsrc = _tf.mkdtemp(prefix="dbt_spark_mtrsrc_")
-    rk = os.path.join(rsrc, "k")
-    rq = os.path.join(rsrc, "q")
+    rk, rq = scratch.path("replay_kept"), scratch.path("replay_quarantined")
     media_triage_gate(rk, rq)(blobs, 0)
     replay = spark.read.parquet(rk).unionByName(spark.read.parquet(rq))
     a = {tuple(r) for r in streamed.collect()}
@@ -1007,7 +992,9 @@ def stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streamed.select("doc_id", "status", "media_format", "reason")
 
 
-def stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_hll_cardinality(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """STREAMING distinct-token cardinality via explicit HyperLogLog
     registers merged across micro-batches — VALUE-PAIRED because HLL
     registers are a lattice (max-merge is associative/commutative/
@@ -1020,21 +1007,13 @@ def stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-shard sketch state a 100 TB ingest keeps instead of a distinct
     set); the final estimate reads the merged store. Portable md5 hash
     → the DuckDB oracle rebuilds the registers from the full corpus."""
-    import tempfile as _tf
-
     from dbt_spark.functions.sketches import hll_registers
 
     docs = read_parquet(
         spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "lang", "text")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    src = _tf.mkdtemp(prefix="dbt_spark_hllsrc_")
-    store = os.path.join(_tf.mkdtemp(prefix="dbt_spark_hllstore_"), "regs")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_hllckpt_")
-    _land_two_batches(docs.filter(F.col("doc_id") <= mid),
-                      docs.filter(F.col("doc_id") > mid), src)
 
-    def fold(batch_df, batch_id) -> None:
+    def registers(batch_df: DataFrame) -> DataFrame:
         # a micro-batch scans ONE landing file = one input split: spread
         # the per-token md5 map work across cores before the explode
         # (stream_conf's 4 shuffle partitions only govern the aggregate)
@@ -1049,41 +1028,15 @@ def stream_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("bigint")
         regs = hll_registers(toks, p=12, group_cols=["lang"],
                              hash_col=h60, hash_bits=60)
-        b_spark = batch_df.sparkSession
-        if os.path.isdir(store):
-            prev = b_spark.read.parquet(store)
-            regs = (
-                prev.unionByName(regs)
-                .groupBy("lang", "bucket")
-                .agg(F.max("rho").alias("rho"))
-            )
-        # write the merged registers to a sibling dir, then swap — the
-        # read (old store) and write (next) never touch the same path,
-        # so no driver materialization is needed; state stays bounded at
-        # langs x 2^p rows regardless
-        regs.select(
+        return regs.select(
             F.col("lang"), F.col("bucket").cast("long"),
             F.col("rho").cast("int"),
-        ).coalesce(1).write.mode("overwrite").parquet(store + "_next")
-        import shutil as _sh
-
-        _sh.rmtree(store, ignore_errors=True)
-        os.rename(store + "_next", store)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
-    regs = spark.read.parquet(store)
+    # state stays bounded at langs x 2^p registers regardless
+    regs = _fold_stream(
+        spark, scratch, docs, "doc_id", registers,
+        lambda u: u.groupBy("lang", "bucket").agg(F.max("rho").alias("rho")))
     m = 4096
     alpha = 0.7213 / (1.0 + 1.079 / m)
     agg = regs.groupBy("lang").agg(
@@ -1120,7 +1073,9 @@ ORACLES["stream_pii_scrub"] = ORACLES["stream_pii_scrub"].replace(
 
 from dbt_spark.queries.sft import _TURNS_CTE as _SFT_TURNS_CTE  # noqa: E402
 
-def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_kmv_cardinality(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """STREAMING per-source distinct-3-gram cardinality via bottom-k
     (KMV/theta) sketches merged across micro-batches — VALUE-PAIRED
     because bottom-k merge is a lattice operation (the k smallest of a
@@ -1135,20 +1090,11 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     source — bounded state), re-truncating to k each fold; the final
     estimate reads the merged store, with the exact distinct count
     alongside as the validation twin."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from dbt_spark.queries.curation import _KMV_K
 
     docs = read_parquet(
         spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "source", "text")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
-    src = _tf.mkdtemp(prefix="dbt_spark_kmvsrc_")
-    store = os.path.join(_tf.mkdtemp(prefix="dbt_spark_kmvstore_"), "kmv")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_kmvckpt_")
-    _land_two_batches(docs.filter(F.col("doc_id") <= mid),
-                      docs.filter(F.col("doc_id") > mid), src)
 
     def _gram_hashes(df: DataFrame) -> DataFrame:
         toks = F.split(F.trim(F.lower("text")), r"\s+")
@@ -1182,35 +1128,16 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (df.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") <= _KMV_K).select("source", "h"))
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
+    def sketch(batch_df: DataFrame) -> DataFrame:
         # one landing file = one input split: spread the gram explode +
         # md5 map work across cores (the shuffle after it stays at the
         # stream_conf partition count)
         batch_df = batch_df.repartition(
             batch_df.sparkSession.sparkContext.defaultParallelism)
-        kmv = _bottom_k(_gram_hashes(batch_df))
-        b_spark = batch_df.sparkSession
-        if os.path.isdir(store):
-            prev = b_spark.read.parquet(store)
-            kmv = _bottom_k(prev.unionByName(kmv).distinct())
-        kmv.coalesce(1).write.mode("overwrite").parquet(store + "_next")
-        _sh.rmtree(store, ignore_errors=True)
-        os.rename(store + "_next", store)
+        return _bottom_k(_gram_hashes(batch_df))
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    kmv = spark.read.parquet(store)
+    kmv = _fold_stream(spark, scratch, docs, "doc_id", sketch,
+                       lambda u: _bottom_k(u.distinct()))
     sk = kmv.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kmv"),
         F.max("h").alias("h_k"),
@@ -1234,7 +1161,9 @@ def stream_kmv_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_prompt_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_prompt_decontam(spark: SparkSession, sf_dir: str,
+                           scratch: Scratch) -> DataFrame:
     """STREAMING prompt decontamination — the streaming twin of
     queries/sft.py::prompt_decontam_ngram: train user turns land in two
     micro-batch file drops and each batch is gated against the STATIC
@@ -1268,27 +1197,19 @@ def stream_prompt_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = turns.filter(~is_bench).select("conv_id", "doc_id", "content")
     mid = train.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
-    src = tempfile.mkdtemp(prefix="dbt_spark_pdcsrc_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_pdcout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_pdcckpt_")
+    src = scratch.landing
 
     def gate(batch_df: DataFrame, _batch_id: int) -> None:
         report = _decontam_report(_user_turn_gram_hashes(batch_df), bench)
-        report.write.mode("append").parquet(out_dir)
+        report.write.mode("append").parquet(scratch.output)
 
     def run_once() -> None:
         stream = (
             spark.readStream.schema(train.schema).parquet(src)
             .dropDuplicates(["doc_id"])
         )
-        with stream_conf(spark, src):
-            q = (
-                stream.writeStream.foreachBatch(gate)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(stream.writeStream.foreachBatch(gate)
+              .option("checkpointLocation", scratch.checkpoint), spark, src)
 
     first = train.filter(F.col("doc_id") <= mid)
     first.coalesce(1).write.mode("append").parquet(src)
@@ -1300,7 +1221,8 @@ def stream_prompt_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
      .coalesce(1).write.mode("append").parquet(src))
     run_once()
 
-    return read_parquet(spark, out_dir).orderBy("conv_id", "doc_id")
+    # a plain read: this per-call dir would only grow read_parquet's cache
+    return spark.read.parquet(scratch.output).orderBy("conv_id", "doc_id")
 
 
 from dbt_spark.queries.sft import (  # noqa: E402
@@ -1372,7 +1294,9 @@ ORACLES["stream_turn_dedup"] = f"""
     ORDER BY t.conv_id
 """
 
-def stream_pair_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_pair_phash_dedup(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
     """STREAMING image-ingest dedup — the streaming twin of
     queries/llmops.py::multimodal_pair_dedup's IMAGE gate: image blobs
     land in two micro-batch file drops, each batch REAL-decodes its
@@ -1412,24 +1336,16 @@ def stream_pair_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pair_blob_gen((codecs[0], codecs[2])),
         schema="doc_id long, payload binary").localCheckpoint()
     mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
-    src = tempfile.mkdtemp(prefix="dbt_spark_ppdsrc_")
-    out_dir = tempfile.mkdtemp(prefix="dbt_spark_ppdout_")
-    ckpt = tempfile.mkdtemp(prefix="dbt_spark_ppdckpt_")
+    src = scratch.landing
 
     def run_once() -> None:
         stream = spark.readStream.schema(blobs.schema).parquet(src)
         hashed = perceptual_phash(stream).select("doc_id", "phash")
-        with stream_conf(spark, src):
-            q = (
-                hashed.dropDuplicates(["phash"])
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(hashed.dropDuplicates(["phash"])
+              .writeStream.format("parquet")
+              .option("path", scratch.output)
+              .option("checkpointLocation", scratch.checkpoint)
+              .outputMode("append"), spark, src)
 
     blobs.filter(F.col("doc_id") <= mid).coalesce(1).write.mode(
         "append").parquet(src)
@@ -1438,7 +1354,7 @@ def stream_pair_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append").parquet(src)
     run_once()
 
-    kept = spark.read.parquet(out_dir)
+    kept = spark.read.parquet(scratch.output)
     return (
         kept.groupBy((F.col("phash") % 8).cast("bigint").alias("bucket"))
         .agg(
@@ -1469,7 +1385,9 @@ def _pair_phash_oracle() -> str:
 ORACLES["stream_pair_phash_dedup"] = _pair_phash_oracle()
 
 
-def stream_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_mixture_reweight(spark: SparkSession, sf_dir: str,
+                            scratch: Scratch) -> DataFrame:
     """STREAMING domain-mixture reweighting — the streaming twin of
     queries/llmops.py::domain_mixture_reweight. The corpus-touching stage
     is a per-source (n_docs, toks, letters) aggregate whose partials are
@@ -1483,52 +1401,24 @@ def stream_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the production shape for mixture optimization over a live
     ingest: state is source-cardinality-sized (three longs per source),
     never corpus-sized, and the optimization never rescans history."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from dbt_spark.queries.llmops import (mixture_partials,
                                           mixture_weights_from_partials)
 
     docs = read_parquet(
         spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id", "source", "text")
-    mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
-    src = _tf.mkdtemp(prefix="dbt_spark_mixsrc_")
-    store = os.path.join(_tf.mkdtemp(prefix="dbt_spark_mixstore_"), "mix")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_mixckpt_")
-    _land_two_batches(docs.filter(F.col("doc_id") <= mid),
-                      docs.filter(F.col("doc_id") > mid), src)
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        part = mixture_partials(batch_df)
-        b_spark = batch_df.sparkSession
-        if os.path.isdir(store):
-            prev = b_spark.read.parquet(store)
-            part = prev.unionByName(part).groupBy("source").agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("toks").cast("bigint").alias("toks"),
-                F.sum("letters").cast("bigint").alias("letters"),
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(store + "_next")
-        _sh.rmtree(store, ignore_errors=True)
-        os.rename(store + "_next", store)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return mixture_weights_from_partials(spark.read.parquet(store))
+    return mixture_weights_from_partials(_fold_stream(
+        spark, scratch, docs, "doc_id", mixture_partials,
+        lambda u: u.groupBy("source").agg(
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("toks").cast("bigint").alias("toks"),
+            F.sum("letters").cast("bigint").alias("letters"),
+        )))
 
 
-def stream_bt_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_bt_strength(spark: SparkSession, sf_dir: str,
+                       scratch: Scratch) -> DataFrame:
     """STREAMING Bradley-Terry strength fitting — the streaming twin of
     queries/curation.py::bt_preference_strength. Per-(user, event_type)
     DECIMAL engagement sums are additive, so each micro-batch's partials
@@ -1540,49 +1430,21 @@ def stream_bt_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is one decimal per active (user, type) key — the standard
     streaming-aggregation state shape, never event-volume-sized; the
     winrate fit itself never rescans history."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from dbt_spark.queries.curation import (bt_engagement_partials,
                                             bt_strength_from_partials)
 
     ev = read_parquet(
         spark, os.path.join(sf_dir, "events.parquet")
     ).select("event_id", "user_id", "event_type", "value")
-    mid = ev.agg(F.max("event_id")).collect()[0][0] // 2  # harness split
-    src = _tf.mkdtemp(prefix="dbt_spark_btsrc_")
-    store = os.path.join(_tf.mkdtemp(prefix="dbt_spark_btstore_"), "bt")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_btckpt_")
-    _land_two_batches(ev.filter(F.col("event_id") <= mid),
-                      ev.filter(F.col("event_id") > mid), src)
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        part = bt_engagement_partials(batch_df)
-        b_spark = batch_df.sparkSession
-        if os.path.isdir(store):
-            prev = b_spark.read.parquet(store)
-            part = prev.unionByName(part).groupBy(
-                "user_id", "event_type").agg(F.sum("s").alias("s"))
-        part.coalesce(1).write.mode("overwrite").parquet(store + "_next")
-        _sh.rmtree(store, ignore_errors=True)
-        os.rename(store + "_next", store)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return bt_strength_from_partials(spark.read.parquet(store))
+    return bt_strength_from_partials(_fold_stream(
+        spark, scratch, ev, "event_id", bt_engagement_partials,
+        lambda u: u.groupBy("user_id", "event_type").agg(
+            F.sum("s").alias("s"))))
 
 
-def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch_query
+def stream_rollup_cascade(spark: SparkSession, sf_dir: str,
+                          scratch: Scratch) -> DataFrame:
     """STREAMING continuous aggregate — the streaming twin of
     queries/curation.py::timeseries_rollup_cascade and the literal
     production form of the pattern: MINUTE-level decimal partials fold
@@ -1596,18 +1458,9 @@ def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is one (count, decimal) pair per active (event_type, minute)
     key — the continuous-aggregate state shape; coarse resolutions never
     touch raw history."""
-    import shutil as _sh
-    import tempfile as _tf
-
     ev_raw = read_parquet(
         spark, os.path.join(sf_dir, "events.parquet")
     ).select("event_id", "event_type", "ts", "value")
-    mid = ev_raw.agg(F.max("event_id")).collect()[0][0] // 2
-    src = _tf.mkdtemp(prefix="dbt_spark_rollsrc_")
-    store = os.path.join(_tf.mkdtemp(prefix="dbt_spark_rollstore_"), "min")
-    ckpt = _tf.mkdtemp(prefix="dbt_spark_rollckpt_")
-    _land_two_batches(ev_raw.filter(F.col("event_id") <= mid),
-                      ev_raw.filter(F.col("event_id") > mid), src)
 
     def _minute(df: DataFrame) -> DataFrame:
         return df.groupBy(
@@ -1617,33 +1470,12 @@ def stream_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.round("value", 3).cast("decimal(15,3)")).alias("s"),
         )
 
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        part = _minute(batch_df)
-        b_spark = batch_df.sparkSession
-        if os.path.isdir(store):
-            prev = b_spark.read.parquet(store)
-            part = prev.unionByName(part).groupBy("event_type", "m").agg(
-                F.sum("n").cast("bigint").alias("n"),
-                F.sum("s").alias("s"),
-            )
-        part.coalesce(1).write.mode("overwrite").parquet(store + "_next")
-        _sh.rmtree(store, ignore_errors=True)
-        os.rename(store + "_next", store)
-
-    stream = (
-        spark.readStream.schema(ev_raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    with stream_conf(spark, src):
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    minute = spark.read.parquet(store)
+    minute = _fold_stream(
+        spark, scratch, ev_raw, "event_id", _minute,
+        lambda u: u.groupBy("event_type", "m").agg(
+            F.sum("n").cast("bigint").alias("n"),
+            F.sum("s").alias("s"),
+        ))
     hour = minute.groupBy(
         "event_type", F.date_trunc("hour", "m").alias("h")
     ).agg(F.sum("n").cast("bigint").alias("n"), F.sum("s").alias("s"))

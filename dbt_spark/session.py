@@ -318,6 +318,15 @@ def read_parquet(spark: SparkSession, path: str):
     return df
 
 
+def forget_scans(root: str) -> None:
+    """Drop the scan-cache entries of paths under ``root``, a directory
+    that is about to be removed: they can never hit again."""
+    prefix = os.path.join(os.path.abspath(root), "")
+    for key in list(_scan_cache):
+        if os.path.join(key[1], "").startswith(prefix):
+            _scan_cache.pop(key, None)
+
+
 def spread(df, spark: SparkSession, target: int | None = None):
     """Round-robin repartition a scan whose file layout yields fewer input
     splits than cores.

@@ -32,12 +32,14 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from dbt_spark.catalog import Relation
 from dbt_spark.operators.incremental import merge_upsert
 from dbt_spark.operators.materialize import ExecutionContext, compile_sql
 from dbt_spark.plans.manifest import ManifestNode, NodeType
+from dbt_spark.session import stream_conf
 
 
 class StreamingError(Exception):
@@ -58,6 +60,16 @@ def _streaming_source_df(ctx: ExecutionContext, node: ManifestNode) -> DataFrame
     if max_files:
         reader = reader.option("maxFilesPerTrigger", int(max_files))
     return getattr(reader, fmt)(location)
+
+
+def drain(writer: DataStreamWriter, spark: SparkSession, *source_dirs: str) -> None:
+    """Run a configured stream writer to completion: ``availableNow``
+    processes every file pending in the stream's sources, then stops. The
+    start runs under ``stream_conf`` (sized from ``source_dirs``), which
+    freezes the stream's shuffle-partition count into its checkpoint.
+    Every stream in the package starts here."""
+    with stream_conf(spark, *source_dirs):
+        writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def _checkpoint_dir(ctx: ExecutionContext, node: ManifestNode) -> str:
@@ -109,19 +121,14 @@ def materialize_streaming(ctx: ExecutionContext, node: ManifestNode) -> Relation
         aggregating = bool(node.config.unique_key) or _plan_aggregates(out)
         strategy = "merge" if aggregating else "append"
 
-    from dbt_spark.session import stream_conf
-
     if strategy == "append":
-        with stream_conf(ctx.spark, *source_dirs):
-            q = (
-                out.writeStream.format("parquet")
-                .option("path", path)
-                .option("checkpointLocation", checkpoint)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(
+            out.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append"),
+            ctx.spark, *source_dirs,
+        )
     elif strategy == "merge":
         keys = node.config.unique_key
         keys = [keys] if isinstance(keys, str) else list(keys or [])
@@ -138,15 +145,12 @@ def materialize_streaming(ctx: ExecutionContext, node: ManifestNode) -> Relation
             else:
                 ctx.store.write_table(schema, ctx.name_for(node), batch_df, kind="streaming")
 
-        with stream_conf(ctx.spark, *source_dirs):
-            q = (
-                out.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", checkpoint)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(
+            out.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("update"),
+            ctx.spark, *source_dirs,
+        )
     else:
         raise StreamingError(f"{node.unique_id}: unknown stream_strategy {strategy!r}")
 

@@ -76,3 +76,23 @@ def test_deps_source_selects_entry_form(project_dir, spark):
     eng.invoke(["deps", "--add-package", "sub/pkg", "--source", "local"])
     doc = yaml.safe_load(open(os.path.join(pdir, "packages.yml")))
     assert {"local": "sub/pkg"} in doc["packages"]
+
+
+def test_log_rotation_failure_keeps_logging(tmp_path, monkeypatch):
+    """A failed rotation (os.replace raising) must not leave the log
+    handle closed: the event that triggered it, and every later one, is
+    appended to the unrotated file."""
+    from dbt_spark.events import EventBus
+
+    log = tmp_path / "logs" / "dbt.log"
+    bus = EventBus(log_path=str(log), max_bytes=300)
+
+    def refuse(src, dst):
+        raise PermissionError(f"cannot rename {src}")
+
+    monkeypatch.setattr(os, "replace", refuse)
+    for i in range(10):
+        bus.fire("Note", msg=f"event {i}")
+    lines = log.read_text().splitlines()
+    assert len(lines) == 10 and "event 9" in lines[-1]
+    assert not os.path.exists(str(log) + ".1")

@@ -416,3 +416,46 @@ def test_stream_kmv_estimates_sane(spark):
         assert r["exact_distinct"] > 0
         assert r["kmv_estimate_r6"] > 0
         assert abs(r["rel_err_r6"]) < 0.25
+
+
+def test_streaming_queries_release_their_dirs(spark, tmp_path, monkeypatch):
+    """One query of each streaming shape, consumed and dropped the way
+    every registry consumer does it, leaves nothing behind: no scratch
+    dir, no temp view, no scan-cache entry. Shapes: file-sink output
+    (pii_scrub), fold store (hll), memory sink (heavy_hitters),
+    foreachBatch output dir (prompt_decontam), two output dirs
+    (media_triage), the mini engine context (ingest_checkpoint) and a
+    raise-checked replay with a driver-side result (neardup)."""
+    import gc
+    import tempfile
+
+    from dbt_spark import session
+    from dbt_spark.queries import QUERIES
+
+    names = ["stream_pii_scrub", "stream_hll_cardinality",
+             "stream_heavy_hitters", "stream_prompt_decontam",
+             "stream_media_triage", "streaming_ingest_checkpoint",
+             "stream_neardup_ingest"]
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def temp_views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def run_all() -> None:
+        for name in names:
+            df = QUERIES[name](spark, SF_DIR)
+            df.write.mode("overwrite").format("noop").save()
+            del df
+        gc.collect()
+
+    run_all()
+    assert sorted(os.listdir(tmp)) == []
+    # a repeat call replaces the views it names; none may accumulate
+    views, cached = temp_views(), len(session._scan_cache)
+    run_all()
+    assert sorted(os.listdir(tmp)) == []
+    assert temp_views() == views
+    assert len(session._scan_cache) == cached

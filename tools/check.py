@@ -11,9 +11,12 @@ Usage: python tools/check.py [--sf /root/testdata/sf0.01] [--only name1,name2]
 from __future__ import annotations
 
 import argparse
+import gc
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -160,6 +163,10 @@ def main():
     oracles = entrymod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
     n_ok = n_bad = 0
+    # the sweep's Python-side temp dirs go to a fresh dir, so what is left
+    # in it at the end is what the queries leaked (the JVM extracts its
+    # native libraries and artifact dirs to java.io.tmpdir, not here)
+    tmp = tempfile.tempdir = tempfile.mkdtemp(prefix="check_tmp_")
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -174,6 +181,9 @@ def main():
             n_bad += 1
         print(f"[{flag}] {name:28s} {status:18s} {t_spark:6.2f}s  {detail}")
     print(f"\n{n_ok} ok, {n_bad} bad")
+    gc.collect()  # drop the last result: its scratch dirs go with it
+    print(f"tmpdirs_leaked={len(os.listdir(tmp))}")
+    shutil.rmtree(tmp, ignore_errors=True)
     return 1 if n_bad else 0
 
 
