@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from dbt_spark.functions.text import fingerprint, tokens
+from dbt_spark.session import pin
 
 
 # --------------------------------------------------------------------------
@@ -339,12 +340,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     pattern GraphX/graphframes uses under the hood).
     """
     sym = edges.selectExpr("src", "dst").union(edges.selectExpr("dst AS src", "src AS dst"))
-    sym = sym.repartition("src").localCheckpoint()
-    labels = (
+    sym = pin(sym.repartition("src"))
+    labels = pin(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -352,7 +352,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             .groupBy("src")
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = (
+        new_labels = pin(
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
                 "id",
@@ -360,7 +360,6 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
                     F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
                 ).alias("component"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -392,20 +391,20 @@ def connected_components_star(edges: DataFrame, max_iter: int = 20) -> DataFrame
     order-independent edge-set fingerprint (sum of per-edge hashes + count
     — one aggregate row, no full comparison)."""
     # self-loops carry no information; canonical (big, small) orientation
-    e = (
+    e = pin(
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
-    verts = (
+    verts = pin(
         e.select(F.col("u").alias("id"))
         .unionAll(e.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
 
     def fingerprint(df: DataFrame) -> tuple:
@@ -436,15 +435,15 @@ def connected_components_star(edges: DataFrame, max_iter: int = 20) -> DataFrame
         # small-star on canonical larger->smaller edges
         mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
         joined = large.join(mins2, "u")
-        small = (
+        small = pin(
             joined.select(F.col("u"), F.col("m").alias("v"))
             .unionAll(
                 joined.filter(F.col("v") != F.col("m"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
             )
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
+            .distinct(),
+            eager=False,
         )
         nfp = fingerprint(small)
         e = small

@@ -24,20 +24,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_spark.functions.keys import HALF, pack, unpack
+from dbt_spark.session import pin
+
 __all__ = ["canonical_edges", "pagerank", "triangle_stats"]
 
-#: (degree, node) total order packed into one sortable long — node ids must
-#: fit in 32 bits (true for every key column in the test corpus; a general
-#: deployment would dense-rank ids first). Enforced per NODE (not per
-#: wedge) by ``_checked_node``: an id outside [0, 2^32) would silently
-#: corrupt both the (degree, node) order and the packed closing-join key.
-_KEY = 1 << 32
 
-
+# The (degree, node) total order is packed into one sortable long — node
+# ids must fit in 32 bits (true for every key column in the test corpus; a
+# general deployment would dense-rank ids first). Enforced per NODE (not per
+# wedge) by ``_checked_node``: an id outside [0, 2^32) would silently
+# corrupt both the (degree, node) order and the packed closing-join key.
 def _checked_node(col: F.Column, where: str) -> F.Column:
     """Raise (at execution) on any node id outside [0, 2^32) instead of
     silently mis-packing it; identity for valid ids."""
-    return F.when((col >= 0) & (col < F.lit(_KEY)), col).otherwise(
+    return F.when((col >= 0) & (col < F.lit(HALF)), col).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"{where}: node id outside [0, 2^32) breaks the "
@@ -69,8 +70,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # closing) — without checkpoints every reference recomputes the whole
     # upstream edge build (distinct over the basket self-join), ~9 full
     # rebuilds per run. localCheckpoint makes each level compute ONCE.
-    edges = edges.localCheckpoint(eager=False)
-    deg = (
+    edges = pin(edges, eager=False)
+    deg = pin(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
@@ -79,8 +80,9 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         # one comparison per NODE (never per wedge)
         .agg(F.count(F.lit(1)).alias("degree"))
         .select(_checked_node(F.col("node"), "triangle_stats").alias("node"),
-                "degree")
-    ).localCheckpoint(eager=False)
+                "degree"),
+        eager=False,
+    )
     keyed = (
         edges.join(deg.withColumnRenamed("node", "u"), "u")
         .withColumnRenamed("degree", "du")
@@ -88,16 +90,16 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         .withColumnRenamed("degree", "dv")
         .select(
             "u", "v",
-            (F.col("du") * F.lit(_KEY) + F.col("u")).alias("ku"),
-            (F.col("dv") * F.lit(_KEY) + F.col("v")).alias("kv"),
+            pack(F.col("du"), F.col("u")).alias("ku"),
+            pack(F.col("dv"), F.col("v")).alias("kv"),
         )
     )
-    oriented = keyed.select(
+    oriented = pin(keyed.select(
         F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("lo"),
         F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("hi"),
         F.least("ku", "kv").alias("klo"),
         F.greatest("ku", "kv").alias("khi"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     e1 = oriented.select(
         F.col("lo").alias("a"), F.col("klo").alias("ka"),
         F.col("khi").alias("kb"),
@@ -119,19 +121,14 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # single key (shiftleft/OR is overflow-free under ANSI, bijective on
     # 32-bit pairs)
     def _bc(lo_key, hi_key):
-        return F.shiftleft(
-            F.col(lo_key).bitwiseAND(F.lit(_KEY - 1)), 32
-        ).bitwiseOR(F.col(hi_key).bitwiseAND(F.lit(_KEY - 1)))
+        return pack(unpack(F.col(lo_key))[1], unpack(F.col(hi_key))[1])
 
     wedges = e1.join(
         e2, (F.col("ka") == F.col("ka2")) & (F.col("kb") < F.col("kc"))
     ).select("a", _bc("kb", "kc").alias("bc"))
     closing = oriented.select(_bc("klo", "khi").alias("bc"))
-    tris = wedges.join(closing, ["bc"]).select(
-        "a",
-        F.shiftright("bc", 32).bitwiseAND(F.lit(_KEY - 1)).alias("b"),
-        F.col("bc").bitwiseAND(F.lit(_KEY - 1)).alias("c"),
-    )
+    b, c = unpack(F.col("bc"))
+    tris = wedges.join(closing, ["bc"]).select("a", b.alias("b"), c.alias("c"))
     corner = (
         tris.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
@@ -181,12 +178,12 @@ def pagerank(edges: DataFrame, iterations: int = 4, damping: float = 0.85) -> Da
     # iteration's plan re-derives directed/deg/ed from scratch — at 4
     # iterations that is 4 full rebuilds of the edge list (itself a
     # distinct over a self-join at the call sites)
-    directed = edges.unionAll(
+    directed = pin(edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    deg = directed.groupBy("u").agg(
-        F.count(F.lit(1)).alias("deg")).localCheckpoint(eager=False)
-    ed = directed.join(deg, "u").localCheckpoint(eager=False)
+    ), eager=False)
+    deg = pin(directed.groupBy("u").agg(
+        F.count(F.lit(1)).alias("deg")), eager=False)
+    ed = pin(directed.join(deg, "u"), eager=False)
     ranks = deg.select(F.col("u").alias("node"), F.lit(1.0).alias("rank"))
     base = F.lit(1.0 - damping)
     for _ in range(iterations):
@@ -218,7 +215,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     so an unpersisted linear chain would recompute the upstream 3^rounds
     times. Returns (node, degree) of the surviving core, degree measured
     within the core."""
-    e = edges.localCheckpoint(eager=False)
+    e = pin(edges, eager=False)
     for _ in range(rounds):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -227,10 +224,11 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("degree"))
         )
         keep = deg.filter(F.col("degree") >= k).select("node")
-        e = (
+        e = pin(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-        ).localCheckpoint(eager=False)
+            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi"),
+            eager=False,
+        )
     return (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from dbt_spark.session import pin
+
 DEC = "decimal(18,9)"
 
 
@@ -254,7 +256,7 @@ def train_centroids(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
         F.col("__norm2").alias("n2"),
     )
-    cents = _init_centroids(base, n_centroids).localCheckpoint(eager=False)
+    cents = pin(_init_centroids(base, n_centroids), eager=False)
     for _ in range(n_iter):
         assigned = base.crossJoin(F.broadcast(cents)).withColumn(
             "__csim",
@@ -268,7 +270,7 @@ def train_centroids(
             .filter(F.col("__ar") == 1)
             .select("cid", "v")
         )
-        cents = (
+        cents = pin(
             members.select("cid", F.posexplode("v").alias("pos", "val"))
             .groupBy("cid", "pos")
             .agg(F.avg("val").alias("m"))
@@ -278,8 +280,8 @@ def train_centroids(
                 "cid",
                 F.expr("transform(pm, x -> CAST(x.m AS FLOAT))").alias("cv"),
             )
-            .withColumn("cn2", _dot_exact("cv", "cv"))
-            .localCheckpoint(eager=False)
+            .withColumn("cn2", _dot_exact("cv", "cv")),
+            eager=False,
         )
     return cents
 
@@ -489,23 +491,23 @@ def pq_train(
     if d % m != 0:
         raise ValueError(f"pq_train: dim {d} not divisible by m={m}")
     sub = d // m
-    base = emb.select(
+    base = pin(emb.select(
         F.col(id_col).alias("id"),
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m"),
         F.col(vec_col).alias("v"),
     ).select(
         "id", "m",
         F.expr(f"slice(v, m * {sub} + 1, {sub})").alias("sv"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     seeds = emb.orderBy(
         F.xxhash64(F.col(id_col).cast("string")), F.col(id_col)
     ).limit(k).select(
         F.col(id_col).cast("bigint").alias("cid"), F.col(vec_col).alias("v"))
-    cents = seeds.select(
+    cents = pin(seeds.select(
         "cid", F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m"), "v",
     ).select(
         "m", "cid", F.expr(f"slice(v, m * {sub} + 1, {sub})").alias("cv"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     for _ in range(n_iter):
         assigned = base.join(F.broadcast(cents), "m").withColumn(
             "__d2", _l2sq("sv", "cv"))
@@ -513,15 +515,15 @@ def pq_train(
             F.min_by("cid", F.struct("__d2", F.col("cid").cast("double")))
             .alias("cid"))
         members = base.join(picked, ["id", "m"])
-        cents = (
+        cents = pin(
             members.select("m", "cid", F.posexplode("sv").alias("pos", "val"))
             .groupBy("m", "cid", "pos").agg(F.avg("val").alias("mu"))
             .groupBy("m", "cid")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "mu"))).alias("pm"))
             .select("m", "cid",
                     F.expr("transform(pm, x -> CAST(x.mu AS FLOAT))")
-                    .alias("cv"))
-            .localCheckpoint(eager=False)
+                    .alias("cv")),
+            eager=False,
         )
     return cents
 

@@ -63,6 +63,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_spark.functions.keys import HALF, pack, unpack
+from dbt_spark.session import pin
+
 #: seed prefix length — the granule of the rank tables. 64 (vs the
 #: classic 16) trades a wider key in the ONE seed range-sort for two
 #: fewer doubling rounds and four fewer lifting joins to reach a
@@ -75,10 +78,6 @@ GRANULE = 64
 
 #: sentinel LCP for pairs already decided by equal final ranks
 _DECIDED = 1 << 40
-
-#: (doc, pos) single-long packing base for the adjacency/lifting tables —
-#: doc ids and positions must fit 32 bits (guarded at pair construction)
-_PACK = 1 << 32
 
 #: salt buckets for the within-block SA-index window: bounds the widest
 #: single window task at block_size/_IDX_SALT (adversarial corpora)
@@ -104,9 +103,9 @@ def _spread_docs(docs: DataFrame) -> DataFrame:
     if getattr(docs, "_sfx_spread", False):  # already prepared by caller
         return docs
     spark = docs.sparkSession
-    out = docs.repartition(
+    out = pin(docs.repartition(
         spark.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     out._sfx_spread = True
     return out
 
@@ -149,10 +148,10 @@ def global_head_ranks(
     exactly that predicate."""
     spark = df.sparkSession
     npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part = (
+    part = pin(
         df.repartitionByRange(npart, F.col(key))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=False,
     )
     sizes = sorted(
         part.groupBy("__pid").count().collect(), key=lambda r: r["__pid"]
@@ -336,13 +335,12 @@ def suffix_rank_tables(
     # checkpoint pins the exploded keys so repartitionByRange's boundary
     # SAMPLING pass and the real shuffle pass don't each re-run the
     # explode + substring (measured -10% on the whole pipeline)
-    seeded = global_head_ranks(
-        positions.withColumn("__k", key_expr).drop("__text")
-        .localCheckpoint(eager=False),
+    seeded = pin(global_head_ranks(
+        pin(positions.withColumn("__k", key_expr).drop("__text"), eager=False),
         key="__k",
         tiebreak=["doc_id", "pos"],
         skew_safe=skew_safe,
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     tables: list[tuple[int, DataFrame]] = [(GRANULE, seeded)]
     depth = GRANULE
     while depth < max_depth:
@@ -350,10 +348,10 @@ def suffix_rank_tables(
         # next round refines `rank`: the final table then holds every
         # shallower depth's rank per position, and LCP lifting at offset 0
         # is a column comparison instead of a join against this table
-        nxt = _double(
+        nxt = pin(_double(
             tables[-1][1].withColumn(f"r{depth}", F.col("rank")),
             depth, skew_safe,
-        ).localCheckpoint(eager=False)
+        ), eager=False)
         depth *= 2
         tables.append((depth, nxt))
     return tables
@@ -472,15 +470,10 @@ def suffix_repeat_lengths(
     # a per-pair CONSTANT, so it is folded into `cap` here instead of
     # carrying both doc lengths through the loop. Guarded: ids/positions
     # outside 32 bits would corrupt the packing (same contract as the
-    # graph key pack). The shift runs on a long: shiftleft keeps an int
-    # id's type and masks the count to 5 bits, so an int doc_id would
-    # pack to d | p and keys would collide.
-    def _key(d: F.Column, p: F.Column) -> F.Column:
-        return F.shiftleft(d.cast("long"), 32).bitwiseOR(p)
-
-    def _pack(d: F.Column, p: F.Column) -> F.Column:
-        ok = (d >= 0) & (d < F.lit(_PACK)) & (p > 0) & (p < F.lit(_PACK) - max_depth)
-        return F.when(ok, _key(d, p)).otherwise(
+    # graph key pack).
+    def _checked_pack(d: F.Column, p: F.Column) -> F.Column:
+        ok = (d >= 0) & (d < F.lit(HALF)) & (p > 0) & (p < F.lit(HALF) - max_depth)
+        return F.when(ok, pack(d, p)).otherwise(
             F.raise_error(F.concat(
                 F.lit("suffix pack: doc_id/pos outside [0, 2^32): "),
                 d.cast("string"), F.lit("/"), p.cast("string"))))
@@ -488,14 +481,14 @@ def suffix_repeat_lengths(
     depths = [d for d, _ in tables[:-1]]  # shallower depths, ascending
     left = sa.select(
         F.col("idx").alias("i"),
-        _pack(F.col("doc_id"), F.col("pos")).alias("k1"),
+        _checked_pack(F.col("doc_id"), F.col("pos")).alias("k1"),
         (F.col("doc_len") - F.col("pos") + 1).alias("rem1"),
         F.col("rank").alias("r1"),
         *[F.col(f"r{d}").alias(f"q1_{d}") for d in depths],
     )
     right = sa.select(
         (F.col("idx") - F.lit(1)).alias("i"),
-        _key(F.col("doc_id"), F.col("pos")).alias("k2"),
+        pack(F.col("doc_id"), F.col("pos")).alias("k2"),
         (F.col("doc_len") - F.col("pos") + 1).alias("rem2"),
         F.col("rank").alias("r2"),
         *[F.col(f"r{d}").alias(f"q2_{d}") for d in depths],
@@ -512,12 +505,12 @@ def suffix_repeat_lengths(
         lcp0 = lcp0.when(
             F.col(f"q1_{top}") == F.col(f"q2_{top}"), F.lit(top).cast("long"))
     carry_q = [(f"q1_{d}", f"q2_{d}") for d in depths[:-1]]
-    pairs = left.join(right, "i", "inner").select(
+    pairs = pin(left.join(right, "i", "inner").select(
         "k1", "k2",
         F.least("rem1", "rem2", F.lit(max_depth).cast("long")).alias("cap"),
         lcp0.otherwise(F.lit(0).cast("long")).alias("lcp"),
         *[c for pair in carry_q for c in pair],
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     # Remaining rounds, shallowest-table ranks consumed deepest-first. Per
     # round, three branches instead of a full-table join pair:
     #   - DECIDED pairs pass through untouched;
@@ -534,11 +527,11 @@ def suffix_repeat_lengths(
         remaining = [(f"q1_{d}", f"q2_{d}") for d in depths[:-1 - ridx]]
         keep = [c for pair in remaining for c in pair]
         ra = table.select(
-            _key(F.col("doc_id"), F.col("pos")).alias("ka"),
+            pack(F.col("doc_id"), F.col("pos")).alias("ka"),
             F.col("rank").alias("a_rank"),
         )
         rb = table.select(
-            _key(F.col("doc_id"), F.col("pos")).alias("kb"),
+            pack(F.col("doc_id"), F.col("pos")).alias("kb"),
             F.col("rank").alias("b_rank"),
         )
         dec = pairs.filter(F.col("lcp") == F.lit(_DECIDED)).select(
@@ -566,8 +559,7 @@ def suffix_repeat_lengths(
             )
             .select(*cols, *keep)
         )
-        pairs = dec.unionByName(zero).unionByName(ext).localCheckpoint(
-            eager=False)
+        pairs = pin(dec.unionByName(zero).unionByName(ext), eager=False)
     # … then sub-granule refinement: direct compare of ≤(GRANULE-1)-char
     # fragments fetched by doc-keyed joins (broadcast-sized dimension at
     # test scale; plain hash join at corpus scale); decided pairs skip the
@@ -577,12 +569,14 @@ def suffix_repeat_lengths(
     frag_w = GRANULE - 1
     dec = pairs.filter(F.col("lcp") == F.lit(_DECIDED)).select(
         "k1", "k2", F.col("cap").alias("lcp"))
+    d1, p1 = unpack(F.col("k1"))
+    d2, p2 = unpack(F.col("k2"))
     und = (
         pairs.filter(F.col("lcp") < F.lit(_DECIDED))
-        .withColumn("d1", F.shiftrightunsigned("k1", 32))
-        .withColumn("p1", F.col("k1").bitwiseAND(F.lit(_PACK - 1)))
-        .withColumn("d2", F.shiftrightunsigned("k2", 32))
-        .withColumn("p2", F.col("k2").bitwiseAND(F.lit(_PACK - 1)))
+        .withColumn("d1", d1)
+        .withColumn("p1", p1)
+        .withColumn("d2", d2)
+        .withColumn("p2", p2)
         .join(t1, "d1").join(t2, "d2")
         # fragments land in NAMED columns first: _frag_lcp's nested-WHEN
         # tree references its inputs at ~3^levels leaves, so an inline
@@ -606,11 +600,8 @@ def suffix_repeat_lengths(
     pairs = dec.unionByName(und)
     both = pairs.select(F.col("k1").alias("k"), "lcp").unionAll(
         pairs.select(F.col("k2").alias("k"), "lcp"))
+    doc_id, pos = unpack(F.col("k"))
     return (
         both.groupBy("k").agg(F.max("lcp").alias("rep"))
-        .select(
-            F.shiftrightunsigned("k", 32).alias("doc_id"),
-            F.col("k").bitwiseAND(F.lit(_PACK - 1)).alias("pos"),
-            "rep",
-        )
+        .select(doc_id.alias("doc_id"), pos.alias("pos"), "rep")
     )

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbt_spark.session import pin
+
 # Deterministic stopword lists (tiny on purpose: broadcast as literals into the
 # plan; a production list would be a broadcast join against a dimension table).
 STOPWORDS = ["the", "a", "an", "and", "of", "to", "in", "is", "it", "for"]
@@ -153,11 +155,11 @@ def bpe_learn_merges(docs: DataFrame, k_merges: int = 12,
              .select(F.explode(tokens(text_col)).alias("w"))
              .where(F.length("w") > 0)
              .groupBy("w").agg(F.count("*").alias("n")))
-    seqs = words.select(
+    seqs = pin(words.select(
         "n",
         F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
         .alias("seq"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     merges: list[tuple] = []
     for rank in range(1, k_merges + 1):
         pairs = (seqs
@@ -178,7 +180,7 @@ def bpe_learn_merges(docs: DataFrame, k_merges: int = 12,
         # leftmost-first non-overlapping replacement: fold the symbol array,
         # merging when the accumulated tail is `a` and the next symbol is
         # `b` (a freshly-merged tail spells a+b, so it can never re-merge)
-        seqs = seqs.select(
+        seqs = pin(seqs.select(
             "n",
             F.expr(
                 "aggregate(seq, CAST(array() AS array<string>), "
@@ -186,7 +188,7 @@ def bpe_learn_merges(docs: DataFrame, k_merges: int = 12,
                 f"AND element_at(acc, -1) = '{qa}' AND x = '{qb}' "
                 f"THEN concat(slice(acc, 1, size(acc) - 1), array('{qm}')) "
                 "ELSE concat(acc, array(x)) END)").alias("seq"),
-        ).localCheckpoint(eager=False)  # materialized by next round's argmax
+        ), eager=False)  # materialized by next round's argmax
     # keep the session tidy: checkpoints release with the DataFrames
     _ = spark
     return merges
@@ -223,11 +225,10 @@ def unigram_train(docs: DataFrame, vocab_size: int = 60,
     pure-Python reference in tests."""
     import math
 
-    words = (docs
-             .select(F.explode(tokens(text_col)).alias("w"))
-             .where(F.length("w") > 0)
-             .groupBy("w").agg(F.count("*").alias("n"))
-             .localCheckpoint())
+    words = pin(docs
+                .select(F.explode(tokens(text_col)).alias("w"))
+                .where(F.length("w") > 0)
+                .groupBy("w").agg(F.count("*").alias("n")))
     subs = words.select(
         "n",
         F.explode(F.expr(

@@ -247,6 +247,17 @@ class ExecutionContext:
             df.createOrReplaceTempView(ident)
             self._location_scans[ident] = scan
 
+    def drop_views(self) -> None:
+        """Drop the temp views this context's store and source resolution
+        registered, for a context whose warehouse is about to be removed: a
+        view must not outlive the files it reads. DataFrames already built
+        from them keep their analyzed plans."""
+        with self.store._lock, self._location_lock:
+            for ident in [*self.store._registered, *self._location_scans]:
+                self.spark.catalog.dropTempView(ident)
+                self.store._unregister(ident)
+            self._location_scans.clear()
+
     def source_df(self, node: ManifestNode) -> DataFrame:
         ident = self.resolve_source(node)
         return self.spark.sql(f"SELECT * FROM {ident}")
@@ -346,12 +357,17 @@ class ExecutionContext:
         df = self.execute_sql(sql)
         return QueryResult(list(df.columns), [tuple(r) for r in df.limit(10000).collect()])
 
-    def ensure_upstream_registered(self, node: ManifestNode) -> None:
+    def ensure_upstream_registered(self, node: ManifestNode,
+                                   direct_sources: bool = True) -> None:
         """Re-register upstream relations AND sources, transitively, in
         dependency order (fresh session / subset runs): a persisted *view*'s
         SQL references the temp views of its own upstreams, so those must be
         registered first — the role the warehouse metastore plays for the
-        reference, recreated per session here."""
+        reference, recreated per session here.
+
+        ``direct_sources=False`` skips the node's own source parents: a
+        streaming model reads those as streams, never as batch views. A
+        source reached through a ref parent still registers."""
         seen: set[str] = {node.unique_id}
 
         def visit(uid: str) -> None:
@@ -385,7 +401,8 @@ class ExecutionContext:
                     self.store.register(rel)
 
         for dep_uid in node.depends_on:
-            visit(dep_uid)
+            if direct_sources or dep_uid not in self.manifest.sources:
+                visit(dep_uid)
 
 
 def compile_sql(

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from dbt_spark.functions import dedup as D
 from dbt_spark.functions.text import STOPWORDS
-from dbt_spark.session import load_tables, spread
+from dbt_spark.session import load_tables, pin, spread
 
 _TOKS_L = "string_split_regex(trim(lower(text)), '\\s+')"
 _STOP_SQL = "['" + "', '".join(STOPWORDS) + "']"
@@ -63,8 +63,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it; doc lengths and the query-term frequency table both derive from
     # tf (Σ tf over terms / docs — bit-identical counts), and the pin
     # stops tf's four consumers re-running the explode+shuffle
-    tf = (toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint(eager=False))
+    tf = pin(toks.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf")),
+             eager=False)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     corpus = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -320,17 +320,18 @@ def bt_strength_from_partials(per: DataFrame) -> DataFrame:
                         F.lit(0).cast("bigint").alias("wij")))
         .groupBy("i", "j").agg(F.sum("wij").cast("bigint").alias("wij"))
     )
-    games = (
+    # lazy: the totals.count() right below materializes it — one blocking
+    # job fewer than an eager checkpoint (same pattern as k-means rounds)
+    games = pin(
         pm.alias("x")
         .join(pm.alias("y"),
               (F.col("x.i") == F.col("y.j")) & (F.col("x.j") == F.col("y.i")))
         .select(F.col("x.i").alias("i"), F.col("x.j").alias("j"),
                 F.col("x.wij").alias("wij"),
                 (F.col("x.wij") + F.col("y.wij")).cast("bigint")
-                .alias("games"))
-    # lazy: the totals.count() right below materializes it — one blocking
-    # job fewer than an eager checkpoint (same pattern as k-means rounds)
-    ).localCheckpoint(eager=False)
+                .alias("games")),
+        eager=False,
+    )
     totals = games.groupBy("i").agg(
         F.sum("wij").cast("bigint").alias("n_wins"),
         F.sum("games").cast("bigint").alias("n_contests"),
@@ -359,11 +360,12 @@ def bt_strength_from_partials(per: DataFrame) -> DataFrame:
         # each round references s twice (denominator join + update join):
         # pin the 5-row frame per round or the lineage re-derives the
         # whole upstream 2^rounds times (same fix as the mixture query)
-        s = (
+        s = pin(
             raw.crossJoin(F.broadcast(tot))
             .select("i", "n_wins", "n_contests",
-                    F.round(F.col("raw") / F.col("tot"), 6).alias("s"))
-        ).localCheckpoint(eager=False)  # materialized by next round's jobs
+                    F.round(F.col("raw") / F.col("tot"), 6).alias("s")),
+            eager=False,
+        )  # materialized by next round's jobs
     return (
         s.select(F.col("i").alias("event_type"), "n_wins", "n_contests",
                  F.col("s").alias("s_bt_r6"),
@@ -2038,11 +2040,11 @@ def kmv_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the gram explode + md5 + distinct feeds FOUR consumers (the
     # per-source KMV window, both sides of the exact self-join, and the
     # size aggregate) — unpinned the corpus pass replays per consumer
-    hashed = grams.select(
+    hashed = pin(grams.select(
         "source",
         F.conv(F.substring(F.md5("g"), 1, 15), 16, 10)
         .cast("bigint").alias("h"),
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct(), eager=False)
     w_src = Window.partitionBy("source").orderBy("h")
     kmv = (hashed.withColumn("rn", F.row_number().over(w_src))
            .filter(F.col("rn") <= _KMV_K).select("source", "h"))

@@ -20,7 +20,7 @@ from dbt_spark.functions import similarity as S
 from dbt_spark.functions import text as X
 from dbt_spark.functions.multimodal import attach_binary_payload, decode_media_meta
 from dbt_spark.queries.scratch import Scratch, scratch_query
-from dbt_spark.session import load_tables, spread
+from dbt_spark.session import load_tables, pin, spread
 
 STOP_ARR = "['" + "', '".join(X.STOPWORDS) + "']"
 # GPT-2-style pre-tokenizer classes as one regex, as a DuckDB SQL literal
@@ -101,10 +101,10 @@ def _encoded_codes(spark: SparkSession, sf_dir: str,
                    m: int = 8, k: int = 16) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, m, k)
     if key not in _PQ_CODES:
-        _PQ_CODES[key] = S.pq_encode(
+        _PQ_CODES[key] = pin(S.pq_encode(
             _emb(spark, sf_dir),
             _trained_codebooks(spark, sf_dir, m=m, k=k),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     return _PQ_CODES[key]
 
 
@@ -112,11 +112,11 @@ def _ivfpq_idx(spark: SparkSession, sf_dir: str,
                m: int = 8, k: int = 16, n_centroids: int = 8) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir, m, k, n_centroids)
     if key not in _IVFPQ_INDEX:
-        _IVFPQ_INDEX[key] = S.ivfpq_index(
+        _IVFPQ_INDEX[key] = pin(S.ivfpq_index(
             _emb(spark, sf_dir),
             _trained_centroids(spark, sf_dir, n_centroids=n_centroids),
             _trained_codebooks(spark, sf_dir, m=m, k=k),
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     return _IVFPQ_INDEX[key]
 
 
@@ -162,7 +162,7 @@ def _docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = 0
         target = min(spark.sparkContext.defaultParallelism, max(1, rows // 400))
         _DOCS_RAW_SPREAD[key] = (
-            docs.repartition(target).localCheckpoint(eager=False)
+            pin(docs.repartition(target), eager=False)
             if target > 1 else docs
         )
     return _DOCS_RAW_SPREAD[key]
@@ -623,8 +623,8 @@ def rag_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qg = grams3(queries, "qtext", [F.col("qid")])
     # pinned: the chunk-gram explode+distinct feeds BOTH the hot-gram DF
     # aggregate and the anti-join probe side — unpinned it runs twice
-    cg = grams3(chunks, "ctext", [F.col("doc_id"), F.col("chunk_idx")]
-                ).localCheckpoint(eager=False)
+    cg = pin(grams3(chunks, "ctext", [F.col("doc_id"), F.col("chunk_idx")]),
+             eager=False)
     hot = (cg.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
            .filter(F.col("df") > _RAG_DF_CAP).select("h"))
     cg = cg.join(F.broadcast(hot), "h", "left_anti")
@@ -691,7 +691,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint instead of sorting every row within each hash partition.
     """
     docs = _docs(spark, sf_dir)
-    feats = docs.select(
+    feats = pin(docs.select(
         "doc_id",
         X.token_count("text").alias("n_tokens"),
         X.quality_score("text").alias("quality_score"),
@@ -704,7 +704,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NARROW rows (5 columns, no text), well below the materialization
     # knee; the score/lang/fingerprint math runs exactly once, spread
     # across cores. Same-window A/B: 1.12 -> 0.82 s.
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     kept = feats.filter(F.col("quality_score") >= 0.2)
     deduped = (
         kept.groupBy("fp")
@@ -1093,20 +1093,22 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     # re-runs the corpus self-join per reference; likewise pin each
     # round's d-row Av frame, which is referenced twice (scale + update)
     # — without it the upstream doubles per iteration
-    mat = (
+    mat = pin(
         a.join(b, "vec_id")
         .groupBy(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-        .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("m"))
-    ).localCheckpoint(eager=False)
+        .agg(F.sum(F.col("a.xq") * F.col("b.xq")).alias("m")),
+        eager=False,
+    )
     v = mat.select("i").distinct().select(
         F.col("i").alias("dim"), F.lit(int(_PCA_Q)).cast("bigint").alias("val"))
     scale = None
     for _ in range(_PCA_ITERS):
-        av = (
+        av = pin(
             mat.join(F.broadcast(v), mat["j"] == v["dim"])
             .groupBy("i")
-            .agg(F.sum(F.col("m") * F.col("val")).alias("num"))
-        ).localCheckpoint(eager=False)
+            .agg(F.sum(F.col("m") * F.col("val")).alias("num")),
+            eager=False,
+        )
         scale = av.agg(F.max(F.abs("num")).cast("bigint").alias("s"))
         v = (
             av.crossJoin(F.broadcast(scale))  # 1-row scale frame
@@ -1517,9 +1519,9 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                 with_norm, within_cell_pairs)
 
     emb = _emb(spark, sf_dir)
-    out = semdedup_prune(
+    out = pin(semdedup_prune(
         emb, _trained_centroids(spark, sf_dir), threshold=0.93
-    ).localCheckpoint()
+    ))
     kept = out.filter(F.col("keep")).select("vec_id", "cell")
     kv = with_norm(emb).join(kept, "vec_id")
     viol = (
@@ -1672,9 +1674,9 @@ def ngram_lm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one pass over the target gram stream: the unigram table and vocab
     # size derive from the pinned bigram count table (Σ over w2 /
     # countDistinct w2 — bit-identical counts), never re-scanning docs
-    c2 = tgt.groupBy("w1", "w2").agg(
+    c2 = pin(tgt.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("double").alias("c2")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = c2.agg(
         F.countDistinct("w2").cast("double").alias("v"))
@@ -1728,11 +1730,11 @@ def moore_lewis_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin stops the c1/v/scored-join consumers re-running the corpus
     # explode+shuffle. A w1-seen-only-in-general row carries c2_in = 0.0
     # exactly where the old per-model LEFT joins produced NULL→coalesce 0.
-    c2 = bi.groupBy("w1", "w2").agg(
+    c2 = pin(bi.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).cast("double").alias("c2_gen"),
         F.count(F.when(F.col("lang") == "en", F.lit(1)))
         .cast("double").alias("c2_in"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     c1 = c2.groupBy("w1").agg(
         F.sum("c2_gen").alias("c1_gen"),
         F.sum("c2_in").alias("c1_in"))
@@ -1930,12 +1932,12 @@ def _kn_gram_tables(spark: SparkSession, sf_dir: str) -> dict:
             "transform(sequence(0, size(ws)-2), i -> struct(ws[i] AS a, "
             "ws[i+1] AS b))")).alias("g"),
     ).select(F.col("g.a").alias("a"), F.col("g.b").alias("b"))
-    c3 = tri_en.groupBy("w1", "w2", "w3").agg(
+    c3 = pin(tri_en.groupBy("w1", "w2", "w3").agg(
         F.count(F.lit(1)).cast("double").alias("c3")
-    ).localCheckpoint(eager=False)
-    c2b = bi_en.groupBy("a", "b").agg(
+    ), eager=False)
+    c2b = pin(bi_en.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("double").alias("c2b")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     cont = c2b.groupBy("b").agg(
         F.count(F.lit(1)).cast("double").alias("cont"))
     scal = cont.agg(
@@ -2700,8 +2702,8 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the benchmark gram set: bloom_build's collect materializes it,
     # and the exact broadcast join then reuses the pinned rows instead of
     # re-running the doc-slice explode+distinct a second time
-    bench = (grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
-             .localCheckpoint(eager=False))
+    bench = pin(grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct(),
+                eager=False)
     words = bloom_build(bench, "g")
     pre = grams.filter(F.col("doc_id") % 97 != 0).filter(
         bloom_might_contain(words, "g")
@@ -2803,9 +2805,9 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("t"))
-    tf = toks.groupBy("doc_id", "t").agg(
+    tf = pin(toks.groupBy("doc_id", "t").agg(
         F.count("*").cast("bigint").alias("tf")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     dfreq = tf.groupBy("t").agg(F.count("*").cast("bigint").alias("df"))
     n = docs.agg(F.count("*").cast("bigint").alias("n"))
     scored = (
@@ -3051,19 +3053,19 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document ordering at all."""
     nbuck = 1000
     docs = _docs(spark, sf_dir)
-    base = (docs
-            .select("source", "doc_id",
-                    F.split(F.trim("text"), r"\s+").alias("ws"))
-            .select("source", "doc_id",
-                    F.size("ws").cast("long").alias("toks"),
-                    (F.size(F.array_distinct("ws")).cast("double")
-                     / F.size("ws")).alias("q"))
-            .withColumn("bucket",
-                        F.floor(F.col("q") * nbuck).cast("long"))
-            # pinned: the tokenize/TTR pass feeds totals, the bucket
-            # histogram AND the boundary-bucket pick — 3 passes unpinned;
-            # the pinned frame is 5 narrow columns per doc, not text
-            .localCheckpoint(eager=False))
+    # pinned: the tokenize/TTR pass feeds totals, the bucket histogram AND
+    # the boundary-bucket pick — 3 passes unpinned; the pinned frame is 5
+    # narrow columns per doc, not text
+    base = pin(docs
+               .select("source", "doc_id",
+                       F.split(F.trim("text"), r"\s+").alias("ws"))
+               .select("source", "doc_id",
+                       F.size("ws").cast("long").alias("toks"),
+                       (F.size(F.array_distinct("ws")).cast("double")
+                        / F.size("ws")).alias("q"))
+               .withColumn("bucket",
+                           F.floor(F.col("q") * nbuck).cast("long")),
+               eager=False)
     from pyspark.sql import Window
 
     totals = base.groupBy("source").agg(
@@ -3769,8 +3771,7 @@ def multimodal_pair_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="doc_id long, payload binary")
     # pinned: referenced by the img_min aggregate AND the final join —
     # without the checkpoint the real decode chain runs twice
-    ph = perceptual_phash(blobs).select("doc_id", "phash").localCheckpoint(
-        eager=False)
+    ph = pin(perceptual_phash(blobs).select("doc_id", "phash"), eager=False)
 
     # captions: first 15 tokens of the group-base doc's text + a per-pair
     # variant token (near-dup captions with Jaccard just under 1)
@@ -4008,8 +4009,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="doc_id long, payload binary")
     # pinned: referenced by the distinct hash table AND the canonical-map
     # join-back — without the checkpoint the real decode chain runs twice
-    ph = perceptual_phash(blobs).select("doc_id", "phash").localCheckpoint(
-        eager=False)
+    ph = pin(perceptual_phash(blobs).select("doc_id", "phash"), eager=False)
 
     hashes = ph.select("phash").distinct()
     bands = hashes.select(
@@ -4258,7 +4258,7 @@ def mixture_weights_from_partials(agg: DataFrame) -> DataFrame:
     # lineage re-derives the corpus scan 2^rounds times. One eager
     # localCheckpoint of the source-cardinality frame caps the corpus at
     # exactly ONE scan; the rounds then run on ~20 rows.
-    base = base.localCheckpoint(eager=True)
+    base = pin(base, eager=True)
     w = base.withColumn("w", F.col("w0"))
     for _ in range(3):
         m = w.agg(F.round(F.sum(F.col("w") * F.col("loss")), 9).alias("m"))

@@ -33,10 +33,12 @@ def _mini_ctx(spark: SparkSession, scratch: Scratch, **ctx_kwargs) -> ExecutionC
         profile={"warehouse": scratch.store, "schema": "main", "threads": 2},
     )
     store = RelationStore(spark, project.profile["warehouse"])
-    return ExecutionContext(
+    ctx = ExecutionContext(
         spark=spark, store=store, manifest=Manifest(project_name="matq"),
         project=project, **ctx_kwargs
     )
+    scratch.contexts.append(ctx)
+    return ctx
 
 
 def _model_node(name: str, sql: str, **config) -> ManifestNode:

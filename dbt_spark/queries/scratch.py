@@ -32,6 +32,9 @@ class Scratch:
         self.checkpoint = self.path("checkpoint")
         self.output = self.path("output")
         self.store = self.path("store")
+        #: engine contexts over this tree (``_mini_ctx``), whose temp views
+        #: are dropped when the query returns
+        self.contexts: list = []
         os.mkdir(self.landing)
 
     def path(self, name: str) -> str:
@@ -54,7 +57,9 @@ def scratch_query(
       propagates;
     - the query returns: ``landing`` and ``checkpoint`` are removed (the
       stream has drained; the result reads neither), and the root's
-      scan-cache entries are dropped;
+      scan-cache entries and its engine contexts' temp views are dropped
+      (the returned DataFrame is already analyzed, so it no longer needs
+      the view names);
     - the rest of the root (output, store, warehouse) belongs to the
       returned DataFrame: ``weakref.finalize`` removes it when that
       object is garbage collected, or at interpreter exit.
@@ -73,6 +78,9 @@ def scratch_query(
         except BaseException:
             scratch.remove()
             raise
+        finally:
+            for ctx in scratch.contexts:
+                ctx.drop_views()
         forget_scans(scratch.root)
         for done in (scratch.landing, scratch.checkpoint):
             shutil.rmtree(done, ignore_errors=True)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_spark.queries.scratch import Scratch, scratch_query
-from dbt_spark.session import read_parquet
+from dbt_spark.session import pin, read_parquet
 from dbt_spark.streaming.stream import drain
 
 GAP_MIN = 30
@@ -517,7 +517,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str,
         .filter(F.col("cnt") > F.col("n_src") / float(k))
         .select("source", "token")
     )
-    verified = verified.localCheckpoint()
+    verified = pin(verified)
     # the pinned result no longer reads the memory sink or the landing
     # files: release the sink's rows and the scratch tree now
     spark.catalog.dropTempView(name)
@@ -961,8 +961,8 @@ def stream_media_triage(spark: SparkSession, sf_dir: str,
     docs = _docs_raw(spark, sf_dir).select("doc_id")
     # EAGER pin (see stream_pair_phash_dedup): coalesce(1) writes would
     # otherwise fold the whole encode into their single task
-    blobs = docs.mapInPandas(
-        gen, schema="doc_id long, payload binary").localCheckpoint()
+    blobs = pin(docs.mapInPandas(
+        gen, schema="doc_id long, payload binary"))
 
     src = scratch.landing
     kept_dir, quar_dir = scratch.path("kept"), scratch.path("quarantined")
@@ -1332,9 +1332,9 @@ def stream_pair_phash_dedup(spark: SparkSession, sf_dir: str,
     # EAGER pin: the first consumer is a coalesce(1) single-file write —
     # a lazy checkpoint would materialize (i.e. run the whole encode)
     # inside that one task; eager materializes it as a parallel job
-    blobs = docs.mapInPandas(
+    blobs = pin(docs.mapInPandas(
         _pair_blob_gen((codecs[0], codecs[2])),
-        schema="doc_id long, payload binary").localCheckpoint()
+        schema="doc_id long, payload binary"))
     mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2  # harness split
     src = scratch.landing
 

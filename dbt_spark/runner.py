@@ -1046,6 +1046,10 @@ class Engine:
         # ones a consuming statement hit mid-run) back to the owning node.
         lazy_errors = self.store.flush_lazy_views(
             threads=min(16, self.spark.sparkContext.defaultParallelism))
+        # a failure with no runnable owner (an upstream view registered
+        # for a subset run, a store.read or a deferral) is reported on its
+        # own and fails the invocation
+        orphaned = False
         if lazy_errors:
             ident_uid: dict[str, str] = {}
             for uid in runnable:
@@ -1060,6 +1064,11 @@ class Engine:
             for ident, err in lazy_errors.items():
                 uid = ident_uid.get(ident)
                 if uid is None:
+                    orphaned = True
+                    self.events.fire(
+                        "RunResultError",
+                        msg=f"view registration failed for {ident}: "
+                            f"{str(err)[:300]}")
                     continue
                 for rr in results:
                     if rr.unique_id == uid and rr.status == "success":
@@ -1079,7 +1088,8 @@ class Engine:
             except Exception:  # noqa: BLE001 - cache release is best-effort
                 pass
 
-        success = all(r.status in ("success", "pass", "warn", "skipped") for r in results)
+        success = not orphaned and all(
+            r.status in ("success", "pass", "warn", "skipped") for r in results)
         if getattr(self, "_write_json", True):
             self._write_run_results(results, success, command=command)
         if record_timing_path:

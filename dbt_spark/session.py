@@ -11,7 +11,7 @@ import os
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -130,40 +130,25 @@ def get_spark(app_name: str = "dbt_spark", *, extra_conf: dict | None = None) ->
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _install_reliable_checkpoint(spark)
     return spark
 
 
-def _install_reliable_checkpoint(spark: SparkSession) -> None:
-    """``SPARK_GRAFT_RELIABLE_CKPT=<dir>``: lineage pins survive executor
-    loss.
+def pin(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: the one lineage pin of the package.
 
-    The engine cuts lineage in its iterative pipelines (suffix array,
-    graph rounds, PCA/k-means, LM count tables) with ``localCheckpoint``,
-    which stores blocks in EXECUTOR storage — cheap, but at cluster scale
-    losing one executor kills the job because the truncated lineage cannot
-    recompute. Pointing this knob at a reliable directory (HDFS/object
-    store) reroutes every ``localCheckpoint`` in the session to a reliable
-    ``checkpoint()`` there, preserving each call site's eager/lazy choice.
-    Off by default: on local[N] there are no executors to lose and the
-    local form avoids the write-to-storage round trip."""
-    ckpt_dir = os.environ.get("SPARK_GRAFT_RELIABLE_CKPT")
-    if not ckpt_dir:
-        return
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    # patch the CONCRETE DataFrame class (Spark 4's classic session returns
-    # pyspark.sql.classic.dataframe.DataFrame, which overrides the abstract
-    # base's methods — patching pyspark.sql.DataFrame would be a no-op)
-    cls = type(spark.range(0))
-    if getattr(cls.localCheckpoint, "_graft_reliable", False):
-        return
-
-    def _reliable_local_checkpoint(self, eager: bool = True):
-        return cls.checkpoint(self, eager=eager)
-
-    _reliable_local_checkpoint._graft_reliable = True
-    cls._graft_local_checkpoint = cls.localCheckpoint
-    cls.localCheckpoint = _reliable_local_checkpoint
+    The iterative pipelines (suffix array, graph rounds, PCA/k-means, LM
+    count tables) pin their per-round frames so a plan does not grow, or
+    re-derive its upstream, with every round. A ``localCheckpoint`` keeps
+    the pinned blocks in EXECUTOR storage: cheap, but at cluster scale
+    losing one executor kills the job, because the cut lineage cannot be
+    recomputed. When the session's SparkContext has a checkpoint
+    directory (Spark's ``spark.checkpoint.dir``, or ``setCheckpointDir``)
+    the pin is a reliable ``checkpoint()`` into it instead. Either way the
+    caller's eager/lazy choice holds. On local[N] there are no executors
+    to lose, and the local form skips the write to storage."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
 
 
 #: session -> [shuffle.partitions saved by the first stream_conf in, number

@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import TimestampNTZType
 
+from dbt_spark.session import pin
+
 
 def _watermarkable(df: DataFrame, ts_col: str) -> DataFrame:
     """Spark watermarks require TIMESTAMP (with local-tz semantics); parquet
@@ -335,7 +337,7 @@ def minhash_ingest_gate(out_dir: str, sig_dir: str, text_col: str = "text",
                 dup_ids.withColumnRenamed("id", id_col), id_col, "left_anti")
             sigs = sigs.join(dup_ids, "id", "left_anti")
         # cache: kept/sigs share lineage; two actions below
-        kept = kept.localCheckpoint()
+        kept = pin(kept)
         kept.write.mode("append").parquet(out_dir)
         (sigs.join(kept.select(SF.col(id_col).alias("id")), "id", "left_semi")
          .write.mode("append").parquet(sig_dir))

@@ -81,7 +81,7 @@ def _checkpoint_dir(ctx: ExecutionContext, node: ManifestNode) -> str:
 def materialize_streaming(ctx: ExecutionContext, node: ManifestNode) -> Relation:
     """Compile the model with streaming sources, run to completion
     (availableNow), leave the checkpoint for the next run."""
-    ctx.ensure_upstream_registered(node)
+    ctx.ensure_upstream_registered(node, direct_sources=False)
 
     registered: list[str] = []
     source_dirs: list[str] = []
@@ -134,16 +134,13 @@ def materialize_streaming(ctx: ExecutionContext, node: ManifestNode) -> Relation
         keys = [keys] if isinstance(keys, str) else list(keys or [])
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
+            # keyed: upsert into the table. Aggregate restatement without
+            # keys: complete refresh of the affected groups is the batch's
+            # full content. The first batch creates the table.
             if ctx.store.exists(schema, ctx.name_for(node)) and keys:
                 existing = ctx.store.read(schema, ctx.name_for(node))
-                combined = merge_upsert(existing, batch_df, keys)
-                ctx.store.write_table(schema, ctx.name_for(node), combined, kind="streaming")
-            elif ctx.store.exists(schema, ctx.name_for(node)):
-                # aggregate restatement without keys: complete refresh of the
-                # affected groups is the batch's full content
-                ctx.store.write_table(schema, ctx.name_for(node), batch_df, kind="streaming")
-            else:
-                ctx.store.write_table(schema, ctx.name_for(node), batch_df, kind="streaming")
+                batch_df = merge_upsert(existing, batch_df, keys)
+            ctx.store.write_table(schema, ctx.name_for(node), batch_df, kind="streaming")
 
         drain(
             out.writeStream.foreachBatch(sink)

@@ -81,12 +81,18 @@ def test_triangle_stats_vs_bruteforce(spark, seed):
 
 
 def test_triangle_stats_clique_and_coefficient(spark):
-    # K5: every node degree 4, C(4,2)=6 triangles per corner, coeff 1.0
+    # K5: every node degree 4, C(4,2)=6 triangles per corner, coeff 1.0;
+    # int-typed (u, v) ids pack into the same long keys as long ones
     edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    df = spark.createDataFrame(edges, "x long, y long")
-    rows = triangle_stats(canonical_edges(df, "x", "y")).collect()
-    assert all(r["degree"] == 4 and r["triangles"] == 6
-               and r["clustering_coeff"] == 1.0 for r in rows)
+    for df in (
+        canonical_edges(spark.createDataFrame(edges, "x long, y long"),
+                        "x", "y"),
+        spark.createDataFrame(edges, "u int, v int"),
+    ):
+        rows = triangle_stats(df).collect()
+        assert len(rows) == 5
+        assert all(r["degree"] == 4 and r["triangles"] == 6
+                   and r["clustering_coeff"] == 1.0 for r in rows)
 
 
 def test_triangle_stats_rejects_out_of_range_node_ids(spark):

@@ -67,6 +67,34 @@ def test_broken_view_fails_its_own_node(project_dir, spark):
     assert statuses["model.lazybroke.fine"] == "success"
 
 
+def test_orphaned_broken_view_fails_the_run(project_dir, spark):
+    """A lazy view whose owner is not in the run (an upstream view that a
+    subset run re-registers) still fails the invocation when it cannot
+    be created, and the failure is reported as an error event."""
+    pdir = project_dir({
+        "dbt_project.yml": "name: lazyorphan\n",
+        "models/g.sql": "select 1 as id",
+        "models/p.sql": (
+            "{{ config(materialized='table') }}\n"
+            "select * from {{ ref('g') }}"),
+        "models/c.sql": (
+            "{{ config(materialized='table') }}\n"
+            "select * from {{ ref('p') }}"),
+    })
+    assert Engine(pdir, spark=spark).invoke(["run"]).success
+    # a fresh session's view of the warehouse, with g's stored SQL broken
+    eng = Engine(pdir, spark=spark)
+    eng.store.get("main", "g").compiled_sql = (
+        "select id from table_that_does_not_exist_orphan")
+    errors: list = []
+    eng.events.callbacks.append(
+        lambda ev: ev.name == "RunResultError" and errors.append(ev.msg))
+    r = eng.invoke(["run", "--select", "c"])
+    assert [x.status for x in r.results] == ["success"]
+    assert not r.success
+    assert any("main__g" in m for m in errors), errors
+
+
 def test_static_render_matches_full_jinja_render():
     import jinja2
 

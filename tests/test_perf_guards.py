@@ -89,28 +89,81 @@ def test_iterative_queries_pin_their_round_lineage(spark):
         assert n_scans == scans_allowed, (fn.__name__, n_scans)
 
 
-def test_reliable_checkpoint_knob(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_RELIABLE_CKPT reroutes every localCheckpoint to a
-    reliable checkpoint() in the configured dir (the 100 TB escape hatch:
-    local checkpoints die with their executor; reliable ones recompute-proof
-    the iterative pipelines)."""
-    from dbt_spark.session import _install_reliable_checkpoint
+def test_lineage_pins_go_through_one_helper():
+    """Every lineage pin in the package is ``session.pin``, which picks a
+    reliable checkpoint when the session has a checkpoint directory and a
+    local one otherwise, for any session however it was built. Guard: no
+    ``localCheckpoint(`` or ``.checkpoint(`` outside ``pin``."""
+    import ast
+    import re
 
-    ckpt = tmp_path / "rckpt"
-    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CKPT", str(ckpt))
-    cls = type(spark.range(0))
-    orig = cls.localCheckpoint
-    try:
-        _install_reliable_checkpoint(spark)
-        df = spark.range(100).localCheckpoint(eager=True)
-        assert df.count() == 100
-        files = [p for p in ckpt.rglob("*") if p.is_file()]
-        assert files, "no reliable checkpoint files written"
-        # lazy form still works (materializes on first action)
-        lazy = spark.range(10).localCheckpoint(eager=False)
-        assert lazy.count() == 10
-    finally:
-        cls.localCheckpoint = orig
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "dbt_spark")
+    session_py = os.path.join(root, "session.py")
+    with open(session_py) as f:
+        fn = next(n for n in ast.parse(f.read()).body
+                  if isinstance(n, ast.FunctionDef) and n.name == "pin")
+    pat = re.compile(r"localCheckpoint\(|\.checkpoint\(")
+    offenders, inside = [], 0
+    for dirpath, _dirs, files in os.walk(root):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                for ln, line in enumerate(f, 1):
+                    if not pat.search(line):
+                        continue
+                    if path == session_py and fn.lineno <= ln <= fn.end_lineno:
+                        inside += 1
+                    else:
+                        offenders.append(f"{path}:{ln}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
+    assert inside == 2
+
+
+def test_pin_is_reliable_when_the_session_has_a_checkpoint_dir(tmp_path):
+    """A session built with Spark's own ``spark.checkpoint.dir`` (not by
+    ``get_spark``) gets reliable pins: eager and lazy ``pin`` write
+    checkpoint files there and keep their rows. Runs in its own Spark
+    process: a live SparkContext cannot unset its checkpoint directory,
+    and the shared session must keep local pins."""
+    import json
+    import subprocess
+    import sys
+
+    ckpt = tmp_path / "ckpt"
+    script = f"""
+import json, os, sys
+sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
+from pyspark.sql import SparkSession
+from dbt_spark.session import pin
+
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.checkpoint.dir", {str(ckpt)!r}).getOrCreate())
+
+def files():
+    return sum(len(fs) for _r, _d, fs in os.walk({str(ckpt)!r}))
+
+eager = pin(spark.range(100), eager=True)
+after_eager = files()
+lazy = pin(spark.range(10), eager=False)
+before_lazy_action = files()
+counts = [eager.count(), lazy.count()]
+print(json.dumps({{"after_eager": after_eager,
+                   "before_lazy_action": before_lazy_action,
+                   "after_lazy_action": files(), "counts": counts}}))
+spark.stop()
+"""
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["counts"] == [100, 10]
+    assert got["after_eager"] > 0
+    assert got["before_lazy_action"] == got["after_eager"]
+    assert got["after_lazy_action"] > got["after_eager"]
 
 
 def test_codegen_cache_holds_the_working_set(spark):

@@ -418,6 +418,34 @@ def test_stream_kmv_estimates_sane(spark):
         assert abs(r["rel_err_r6"]) < 0.25
 
 
+def test_streaming_model_skips_batch_views_of_its_sources(spark):
+    """A streaming_table model reads its own sources as streams, so
+    materializing it registers no batch view over them: no scan of the
+    landing dir is built, and no ``src__`` view is left."""
+    from dbt_spark import session
+    from dbt_spark.queries.scratch import Scratch
+    from dbt_spark.queries.streaming_q import _landing_stream_model
+    from dbt_spark.streaming.stream import materialize_streaming
+
+    spark.catalog.dropTempView("src__landing__events")
+    scratch = Scratch("skip_batch_views")
+    try:
+        ctx, node = _landing_stream_model(
+            spark, scratch, "events_stream",
+            "SELECT event_id, value FROM {{ source('landing', 'events') }}")
+        spark.range(5).selectExpr("id AS event_id", "id * 2 AS value") \
+            .write.mode("append").parquet(scratch.landing)
+        materialize_streaming(ctx, node)
+        assert ctx.store.read("main", "events_stream").count() == 5
+        landing = os.path.abspath(scratch.landing)
+        assert not [k for k in session._scan_cache if k[1] == landing]
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        assert "src__landing__events" not in views
+    finally:
+        spark.catalog.dropTempView("main__events_stream")
+        scratch.remove()
+
+
 def test_streaming_queries_release_their_dirs(spark, tmp_path, monkeypatch):
     """One query of each streaming shape, consumed and dropped the way
     every registry consumer does it, leaves nothing behind: no scratch
@@ -451,8 +479,13 @@ def test_streaming_queries_release_their_dirs(spark, tmp_path, monkeypatch):
             del df
         gc.collect()
 
+    views = temp_views()
     run_all()
     assert sorted(os.listdir(tmp)) == []
+    # the only views a pass may add are load_tables' input-table views: an
+    # engine context's views would read the removed scratch dir
+    inputs = {f.removesuffix(".parquet") for f in os.listdir(SF_DIR)}
+    assert temp_views() - views <= inputs
     # a repeat call replaces the views it names; none may accumulate
     views, cached = temp_views(), len(session._scan_cache)
     run_all()
