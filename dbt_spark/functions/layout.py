@@ -34,6 +34,12 @@ def zorder_layout(
     - interleave bits (bit j of column i lands at position j*k + i),
     - repartitionByRange + sortWithinPartitions on the interleaved key so
       both file boundaries and row groups cluster in every dimension.
+
+    The output has up to ``out_partitions`` files (one per non-empty key
+    range), or the session's ``spark.sql.shuffle.partitions`` when that is
+    not given, and the clustering granularity follows that count: 2^m equal
+    key ranges halve each column's span about m/k times (the top bits go to
+    the last columns).
     """
     k = len(cols)
     if not 2 <= k <= 4:

@@ -6,6 +6,13 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def needs_schemas(*paths: str):
+    """Skip a test unless every reference jsonschema it opens is on disk."""
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(
+        bool(missing), reason=f"reference jsonschema not found: {', '.join(missing)}")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dbt_spark.session import get_spark

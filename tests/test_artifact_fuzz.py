@@ -21,6 +21,7 @@ import jsonschema
 import pytest
 
 from dbt_spark.project import Project, parse_project
+from tests.conftest import needs_schemas
 from tests.test_partial_parse_fuzz import (
     ENV_NAME,
     _gen_state,
@@ -40,6 +41,7 @@ def _validate(doc) -> list:
     return list(jsonschema.Draft7Validator(schema).iter_errors(doc))
 
 
+@needs_schemas(MANIFEST_SCHEMA)
 @pytest.mark.parametrize("seed", [_BASE + _OFF + i for i in range(10)])
 def test_random_project_manifest_validates_v12(seed, tmp_path, monkeypatch):
     rng = random.Random(seed)
@@ -72,6 +74,7 @@ CATALOG_SCHEMA = "/root/reference/schemas/dbt/catalog/v1.json"
 RUN_RESULTS_SCHEMA = "/root/reference/schemas/dbt/run-results/v5.json"
 
 
+@needs_schemas(CATALOG_SCHEMA, RUN_RESULTS_SCHEMA)
 @pytest.mark.parametrize("seed", [_BASE + _OFF + 100 + i for i in range(4)])
 def test_random_project_catalog_and_run_results_validate(
     seed, tmp_path, monkeypatch, spark

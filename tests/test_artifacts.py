@@ -10,7 +10,7 @@ import jsonschema
 import pytest
 
 from dbt_spark.runner import Engine
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, needs_schemas
 
 MANIFEST_SCHEMA = "/root/reference/schemas/dbt/manifest/v12.json"
 RUN_RESULTS_SCHEMA = "/root/reference/schemas/dbt/run-results/v5.json"
@@ -107,6 +107,7 @@ def _errors(doc, schema_path):
     return list(jsonschema.Draft7Validator(schema).iter_errors(doc))
 
 
+@needs_schemas(MANIFEST_SCHEMA)
 def test_manifest_validates_against_v12(built):
     root, _ = built
     doc = json.load(open(os.path.join(root, "target", "manifest.json")))
@@ -127,6 +128,7 @@ def test_manifest_validates_against_v12(built):
     assert "metric.arts.row_total" in doc["child_map"]["semantic_model.arts.sem_base"]
 
 
+@needs_schemas(RUN_RESULTS_SCHEMA)
 def test_run_results_validates_against_v5(built):
     root, _ = built
     doc = json.load(open(os.path.join(root, "target", "run_results.json")))

@@ -21,6 +21,8 @@ import os
 
 import jsonschema
 
+from tests.conftest import needs_schemas
+
 MANIFEST_SCHEMA = "/root/reference/schemas/dbt/manifest/v12.json"
 CATALOG_SCHEMA = "/root/reference/schemas/dbt/catalog/v1.json"
 RUN_RESULTS_SCHEMA = "/root/reference/schemas/dbt/run-results/v5.json"
@@ -59,6 +61,7 @@ def _validate(doc, schema_path):
     return list(jsonschema.Draft7Validator(schema).iter_errors(doc))
 
 
+@needs_schemas(MANIFEST_SCHEMA)
 def test_doc_blocks_on_nodes_columns_sources(project_dir, spark):
     from dbt_spark.runner import Engine
 
@@ -110,6 +113,7 @@ def test_unresolvable_doc_ref_yields_no_block(project_dir, spark):
     assert doc["nodes"]["model.nodoc.m"]["doc_blocks"] == []
 
 
+@needs_schemas(MANIFEST_SCHEMA, CATALOG_SCHEMA, RUN_RESULTS_SCHEMA)
 def test_invocation_metadata_in_artifacts(project_dir, spark):
     from dbt_spark.runner import Engine
 

@@ -23,6 +23,7 @@ import jsonschema
 import pytest
 
 from dbt_spark.project import Project, parse_project
+from tests.conftest import needs_schemas
 
 _OFF = int(os.environ.get("DBT_SPARK_FUZZ_OFFSET", "0"))
 _BASE = 370_000
@@ -91,6 +92,7 @@ def _write_project(root: str, rng: random.Random) -> None:
         f.write(_yml(rng))
 
 
+@needs_schemas(MANIFEST_SCHEMA)
 @pytest.mark.parametrize("seed", range(6))
 def test_semantic_meta_and_tags_roundtrip_v12(seed, tmp_path):
     rng = random.Random(_BASE + _OFF + seed)
