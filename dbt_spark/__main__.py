@@ -2,9 +2,12 @@
 
 The command surface mirrors core/dbt/cli/main.py registrations (SURVEY §2B
 CLI inventory): run, build, test, seed, snapshot, compile, ls/list, show,
-run-operation, docs generate, source freshness, retry. Flags: --project-dir,
---select/-s, --exclude, --full-refresh, --vars, --state, --args, --inline,
---limit.
+run-operation, docs generate|serve, source freshness, retry, clone, deps,
+debug, init, parse, clean. The CLI parses only its own flags
+(``_cli_parser``): what ``Engine(...)`` takes, console output, ``init -S``,
+``debug --config-dir`` and ``--version``. Every other argument goes to
+``Engine.invoke`` unchanged, which parses it with the one per-invocation
+flag table, ``dbt_spark.runner.FLAGS``. ``--help`` lists both tables.
 """
 
 from __future__ import annotations
@@ -16,141 +19,95 @@ import sys
 import yaml
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser(prog="dbt_spark")
-    ap.add_argument(
+class _Help(argparse.Action):
+    """-h/--help: print the CLI's flags and the per-invocation flag table
+    in one listing, then exit."""
+
+    def __init__(self, option_strings, dest, **kwargs):
+        super().__init__(option_strings, dest, nargs=0, **kwargs)
+
+    def __call__(self, parser, namespace, values, option_string=None):
+        from dbt_spark.runner import FLAGS
+
+        argparse.ArgumentParser(
+            prog=parser.prog, add_help=False, parents=[parser, FLAGS],
+        ).print_help()
+        parser.exit()
+
+
+def _cli_parser() -> argparse.ArgumentParser:
+    """The flags only the CLI takes; read at call time, so the
+    environment defaults are the current ones."""
+    cli = argparse.ArgumentParser(prog="dbt_spark", add_help=False,
+                                  allow_abbrev=False)
+    cli.add_argument(
         "command",
         choices=["run", "build", "test", "seed", "snapshot", "compile", "ls",
                  "list", "show", "run-operation", "docs", "source", "retry",
                  "clone", "deps", "debug", "init", "parse", "clean"],
-    )
-    ap.add_argument("subcommand", nargs="?", default=None,
-                    help="docs generate | source freshness | run-operation <macro>")
-    ap.add_argument("--project-dir", default=".")
-    ap.add_argument("--select", "-s", action="append", default=[])
-    ap.add_argument("--models", "--model", "-m", action="append", default=[],
-                    dest="models_alias",
-                    help="alias for --select (reference -m/--models)")
-    ap.add_argument("--exclude", action="append", default=[])
-    ap.add_argument("--full-refresh", action="store_true")
-    ap.add_argument("--vars", default=None)
-    ap.add_argument("--state", default=None)
-    ap.add_argument("--args", dest="op_args", default=None)
-    ap.add_argument("--inline", default=None)
-    ap.add_argument("--inline-direct", default=None,
-                    help="show: raw SQL with no Jinja/ref resolution "
-                         "(reference --inline-direct)")
-    ap.add_argument("--limit", type=int, default=None)
-    ap.add_argument("--defer", action="store_true", dest="defer_flag")
-    ap.add_argument("--empty", action="store_true")
-    ap.add_argument("--threads", type=int, default=None)
-    ap.add_argument("--sample", default=None,
-                    help="trailing event-time window, e.g. '3 days'")
-    ap.add_argument("--selector", default=None)
-    ap.add_argument("--indirect-selection", dest="indirect", default=None)
-    ap.add_argument("--warn-error", action="store_true")
-    ap.add_argument("--log-level", default=os.environ.get("DBT_LOG_LEVEL", "none"),
-                    choices=["debug", "info", "warn", "error", "none"],
-                    help="stream structured events at/above this level to "
-                         "stderr (reference --log-level; 'none' = summary "
-                         "output only)")
-    ap.add_argument("--log-format", default=os.environ.get("DBT_LOG_FORMAT", "text"),
-                    choices=["text", "json"],
-                    help="console event encoding (reference --log-format)")
-    ap.add_argument("--quiet", "-q", action="store_true",
-                    help="suppress per-node result lines and the summary; "
-                         "errors still print (reference --quiet)")
-    ap.add_argument("--warn-error-options",
-                    default=os.environ.get("DBT_WARN_ERROR_OPTIONS"),
-                    help="YAML/JSON {error|warn|silence: [EventName,...]} "
-                         "(error/warn alias include/exclude)")
-    ap.add_argument("--fail-fast", "-x", action="store_true")
-    ap.add_argument("--port", type=int, default=None)
-    ap.add_argument("--host", default=None,
-                    help="docs serve bind address (reference --host)")
-    ap.add_argument("--target", "-t", default=None)
-    ap.add_argument("--output", default="default",
-                    choices=["default", "selector", "name", "path", "fqn", "json"],
-                    help="ls output format")
-    ap.add_argument("--output-keys", default=None,
-                    help="keys to keep in --output json entries")
-    ap.add_argument("--favor-state", action="store_true",
-                    help="with --defer, unselected upstreams prefer --state")
-    ap.add_argument("--store-failures", action="store_true")
-    ap.add_argument("--include-saved-query", action="store_true")
-    ap.add_argument("--resource-type", "--resource-types",
-                    action="append", default=[])
-    ap.add_argument("--exclude-resource-type", "--exclude-resource-types",
-                    action="append", default=[])
-    ap.add_argument("--record-timing-info", default=None,
-                    help="write per-node timing profile to this path "
-                         "(reference --record-timing-info)")
-    ap.add_argument("--source", dest="deps_source", default="hub",
-                    choices=["hub", "git", "local"],
-                    help="deps --add-package source (reference --source)")
-    ap.add_argument("--log-format-file",
-                    default=os.environ.get("DBT_LOG_FORMAT_FILE"),
-                    choices=["text", "debug", "json", "default", None],
-                    help="file log encoding, overrides --log-format for the "
-                         "file sink (reference --log-format-file)")
-    ap.add_argument("--log-file-max-bytes", type=int,
-                    default=os.environ.get("DBT_LOG_FILE_MAX_BYTES"),
-                    help="roll dbt.log past this size; 0 = unlimited "
-                         "(reference --log-file-max-bytes)")
-    ap.add_argument("--no-partial-parse", action="store_true")
-    ap.add_argument("--no-write-json", action="store_true")
-    ap.add_argument("--defer-state", default=None,
-                    help="state dir for --defer resolution (overrides --state)")
-    ap.add_argument("--add-package", default=None,
-                    help="deps: add 'org/name@versionspec' to packages.yml "
-                         "and install")
-    ap.add_argument("--upgrade", action="store_true",
-                    help="deps: ignore package-lock.yml and re-resolve")
-    ap.add_argument("--lock", action="store_true",
-                    help="deps: resolve + write package-lock.yml, no install")
-    ap.add_argument("--event-time-start", default=None)
-    ap.add_argument("--event-time-end", default=None)
-    ap.add_argument("--profile", default=None,
-                    help="profiles.yml entry to use (overrides the "
-                         "project's profile: key; reference --profile)")
-    ap.add_argument("--profiles-dir", default=None,
-                    help="directory containing profiles.yml (reference "
-                         "--profiles-dir / DBT_PROFILES_DIR)")
-    ap.add_argument("--target-path", default=None,
-                    help="artifact output dir (reference --target-path / "
-                         "DBT_TARGET_PATH; default <project>/target)")
-    ap.add_argument("--log-level-file",
-                    default=os.environ.get("DBT_LOG_LEVEL_FILE"),
-                    choices=["debug", "info", "warn", "error", None],
-                    help="minimum level written to the JSONL log file "
-                         "(reference --log-level-file; default debug=all)")
-    ap.add_argument("--log-path", default=None,
-                    help="log directory (reference --log-path / "
-                         "DBT_LOG_PATH; default <target-path>/logs)")
-    ap.add_argument("--empty-catalog", action="store_true",
-                    help="docs generate: skip warehouse introspection")
-    ap.add_argument("--static", action="store_true",
-                    help="docs generate: self-contained index.html (always "
-                         "on; accepted for reference parity)")
-    ap.add_argument("--config-dir", action="store_true",
-                    help="debug: print the profiles directory and exit "
-                         "(reference --config-dir)")
-    ap.add_argument("--connection", action="store_true",
-                    help="debug: test the connection only, skip "
-                         "project/parse checks (reference --connection)")
-    ap.add_argument("--skip-profile-setup", "-S", action="store_true",
-                    help="init: do not scaffold profiles.yml "
-                         "(reference --skip-profile-setup)")
-    ap.add_argument("--partial-parse-file-path", default=None,
-                    help="override the partial-parse cache location "
-                         "(reference --partial-parse-file-path)")
-    ap.add_argument("--version", action="version",
-                    version="dbt_spark 1.10.0 (PySpark analytics engine; "
-                            "reference-parity CLI)")
-    args = ap.parse_args()
+        help="docs generate|serve, source freshness and run-operation "
+             "<macro> take a second word")
+    cli.add_argument("-h", "--help", action=_Help,
+                     help="show this message and exit")
+    cli.add_argument("--version", action="version",
+                     version="dbt_spark 1.10.0 (PySpark analytics engine; "
+                             "reference-parity CLI)")
+    cli.add_argument("--project-dir", default=".")
+    cli.add_argument("--vars", default=None)
+    cli.add_argument("--target", "-t", default=None)
+    cli.add_argument("--profile", default=None,
+                     help="profiles.yml entry to use (overrides the "
+                          "project's profile: key; reference --profile)")
+    cli.add_argument("--profiles-dir", default=None,
+                     help="directory containing profiles.yml (reference "
+                          "--profiles-dir / DBT_PROFILES_DIR)")
+    cli.add_argument("--target-path", default=None,
+                     help="artifact output dir (reference --target-path / "
+                          "DBT_TARGET_PATH; default <project>/target)")
+    cli.add_argument("--log-path", default=None,
+                     help="log directory (reference --log-path / "
+                          "DBT_LOG_PATH; default <target-path>/logs)")
+    cli.add_argument("--log-level-file",
+                     default=os.environ.get("DBT_LOG_LEVEL_FILE"),
+                     choices=["debug", "info", "warn", "error", None],
+                     help="minimum level written to the JSONL log file "
+                          "(reference --log-level-file; default debug=all)")
+    cli.add_argument("--log-format-file",
+                     default=os.environ.get("DBT_LOG_FORMAT_FILE"),
+                     choices=["text", "debug", "json", "default", None],
+                     help="file log encoding, overrides --log-format for the "
+                          "file sink (reference --log-format-file)")
+    cli.add_argument("--log-file-max-bytes", type=int,
+                     default=os.environ.get("DBT_LOG_FILE_MAX_BYTES"),
+                     help="roll dbt.log past this size; 0 = unlimited "
+                          "(reference --log-file-max-bytes)")
+    cli.add_argument("--log-level",
+                     default=os.environ.get("DBT_LOG_LEVEL", "none"),
+                     choices=["debug", "info", "warn", "error", "none"],
+                     help="stream structured events at/above this level to "
+                          "stderr (reference --log-level; 'none' = summary "
+                          "output only)")
+    cli.add_argument("--log-format",
+                     default=os.environ.get("DBT_LOG_FORMAT", "text"),
+                     choices=["text", "json"],
+                     help="console event encoding (reference --log-format)")
+    cli.add_argument("--quiet", "-q", action="store_true",
+                     help="suppress per-node result lines and the summary; "
+                          "errors still print (reference --quiet)")
+    cli.add_argument("--skip-profile-setup", "-S", action="store_true",
+                     help="init: do not scaffold profiles.yml "
+                          "(reference --skip-profile-setup)")
+    cli.add_argument("--config-dir", action="store_true",
+                     help="debug: print the profiles directory and exit "
+                          "(reference --config-dir)")
+    return cli
+
+
+def main() -> int:
+    args, rest = _cli_parser().parse_known_args()
 
     if args.command == "init":
-        return _init(args.subcommand or "my_dbt_spark_project",
+        return _init(rest[0] if rest else "my_dbt_spark_project",
                      skip_profile=args.skip_profile_setup)
 
     if args.command == "debug" and args.config_dir:
@@ -172,16 +129,12 @@ def main() -> int:
         log_path=args.log_path,
         log_level_file=args.log_level_file,
         log_format_file=args.log_format_file,
-        log_file_max_bytes=(int(args.log_file_max_bytes)
-                            if args.log_file_max_bytes is not None else None),
+        log_file_max_bytes=args.log_file_max_bytes,
     )
-    if args.threads:
-        engine.project.profile["threads"] = args.threads
     if args.log_level != "none":
         # stream events live to stderr, like the reference's console logger
         # (core/dbt/events/logging.py): file JSONL always written regardless
         import json as _json
-        import sys as _sys
 
         rank = {"debug": 0, "info": 1, "warn": 2, "error": 3}
         floor = rank[args.log_level]
@@ -190,105 +143,23 @@ def main() -> int:
             if rank.get(ev.level, 1) < floor:
                 return
             if args.log_format == "json":
-                print(_json.dumps(ev.to_dict(), default=str), file=_sys.stderr)
+                print(_json.dumps(ev.to_dict(), default=str), file=sys.stderr)
             else:
                 ts = (ev.ts or "")[11:19]
                 print(f"{ts}  [{ev.level:5s}] {ev.msg or ev.name}",
-                      file=_sys.stderr)
+                      file=sys.stderr)
 
         engine.events.callbacks.append(_sink)
-    argv = [command]
-    if args.subcommand:
-        argv.append(args.subcommand)
-    for s in args.select + args.models_alias:
-        argv += ["--select", s]
-    for e in args.exclude:
-        argv += ["--exclude", e]
-    if args.full_refresh:
-        argv.append("--full-refresh")
-    if args.state:
-        argv += ["--state", args.state]
-    if args.op_args:
-        argv += ["--args", args.op_args]
-    if args.inline:
-        argv += ["--inline", args.inline]
-    if args.inline_direct:
-        argv += ["--inline-direct", args.inline_direct]
-    if args.limit is not None:
-        argv += ["--limit", str(args.limit)]
-    if args.defer_flag:
-        argv.append("--defer")
-    if args.empty:
-        argv.append("--empty")
-    if args.sample:
-        argv += ["--sample", args.sample]
-    if args.selector:
-        argv += ["--selector", args.selector]
-    if args.indirect:
-        argv += ["--indirect-selection", args.indirect]
-    if args.warn_error:
-        argv.append("--warn-error")
-    if args.warn_error_options:
-        argv += ["--warn-error-options", args.warn_error_options]
-    if args.fail_fast:
-        argv.append("--fail-fast")
-    if args.port is not None:
-        argv += ["--port", str(args.port)]
-    if args.host:
-        argv += ["--host", args.host]
-    if args.output and args.output != "default":
-        argv += ["--output", args.output]
-    if args.output_keys:
-        argv += ["--output-keys", args.output_keys]
-    if args.favor_state:
-        argv.append("--favor-state")
-    if args.store_failures:
-        argv.append("--store-failures")
-    if args.include_saved_query:
-        argv.append("--include-saved-query")
-    for rt in args.resource_type:
-        argv += ["--resource-type", rt]
-    for rt in args.exclude_resource_type:
-        argv += ["--exclude-resource-type", rt]
-    if args.no_partial_parse:
-        argv.append("--no-partial-parse")
-    if args.no_write_json:
-        argv.append("--no-write-json")
-    if args.defer_state:
-        argv += ["--defer-state", args.defer_state]
-    if args.add_package:
-        argv += ["--add-package", args.add_package]
-        if args.deps_source != "hub":
-            argv += ["--source", args.deps_source]
-    if args.record_timing_info:
-        argv += ["--record-timing-info", args.record_timing_info]
-    if args.upgrade:
-        argv.append("--upgrade")
-    if args.lock:
-        argv.append("--lock")
-    if args.event_time_start:
-        argv += ["--event-time-start", args.event_time_start]
-    if args.event_time_end:
-        argv += ["--event-time-end", args.event_time_end]
-    if args.empty_catalog:
-        argv.append("--empty-catalog")
-    if args.static:
-        argv.append("--static")
-    if args.connection:
-        argv.append("--connection")
-    if args.partial_parse_file_path:
-        argv += ["--partial-parse-file-path", args.partial_parse_file_path]
     try:
-        result = engine.invoke(argv)
+        result = engine.invoke([command, *rest])
     except Exception as e:  # noqa: BLE001 — CLI boundary: clean error, not a
         # traceback (reference prints "Encountered an error:" and exits 2)
-        import sys as _sys
-
         print(f"Encountered an error:\n  {type(e).__name__}: {e}",
-              file=_sys.stderr)
+              file=sys.stderr)
         return 2
+    output = engine.flags.output
     if result.preview is not None:
-        if command == "show" and args.output == "json":
+        if command == "show" and output == "json":
             # reference `dbt show --output json` (cli/params.py:570,
             # task/show.py:95-96): machine-readable preview rows
             import json as _json
@@ -297,7 +168,7 @@ def main() -> int:
             return 0 if result.success else 1
         for row in result.preview:
             print(row)
-    if command == "ls" and args.output != "default":
+    if command == "ls" and output is not None:
         # reference `dbt ls --output ...` (task/list.py:27-212): the runner
         # already rendered each row via _ls_render into the result message
         for r in result.results:

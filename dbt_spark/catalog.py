@@ -299,6 +299,16 @@ class RelationStore:
             self._lazy_failures.clear()
         return failed
 
+    def drop_views(self, idents=()) -> None:
+        """Drop the temp views of every relation registered here, plus
+        ``idents``, for a store whose warehouse is about to be removed: a
+        view must not outlive the files it reads. DataFrames already built
+        from them keep their analyzed plans."""
+        with self._lock:
+            for ident in [*self._registered, *idents]:
+                self.spark.catalog.dropTempView(ident)
+                self._unregister(ident)
+
     def _unregister(self, ident: str) -> None:
         """Forget a registration (both the done-set and any pending lazy
         view) so the next ``register`` re-registers fresh SQL."""

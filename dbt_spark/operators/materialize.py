@@ -249,13 +249,9 @@ class ExecutionContext:
 
     def drop_views(self) -> None:
         """Drop the temp views this context's store and source resolution
-        registered, for a context whose warehouse is about to be removed: a
-        view must not outlive the files it reads. DataFrames already built
-        from them keep their analyzed plans."""
+        registered (``RelationStore.drop_views``)."""
         with self.store._lock, self._location_lock:
-            for ident in [*self.store._registered, *self._location_scans]:
-                self.spark.catalog.dropTempView(ident)
-                self.store._unregister(ident)
+            self.store.drop_views(self._location_scans)
             self._location_scans.clear()
 
     def source_df(self, node: ManifestNode) -> DataFrame:

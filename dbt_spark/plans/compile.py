@@ -420,10 +420,14 @@ def runtime_render(
     # of the engine's per-node cost at 2,000-model scale and provably
     # unreachable from such a template. Any other construct (a bare name
     # like {{ this }}, a block, a macro call) fails static_extract and
-    # takes the full-context render below.
-    from dbt_spark.plans.static_parser import static_render_parts
+    # takes the full-context render below. The static parser mode applies
+    # as at parse time (static_parser.extract_or_render): ``off`` always
+    # renders in full, ``sample`` renders both ways and raises on a mismatch.
+    from dbt_spark.plans.static_parser import parser_mode, static_render_parts
 
-    plan = static_render_parts(node.raw_code)
+    mode = parser_mode((extra or {}).get("project_flags"))
+    plan = static_render_parts(node.raw_code) if mode != "off" else None
+    static_sql = None
     if plan is not None:
         out: list[str] = []
         for part in plan:
@@ -436,7 +440,9 @@ def runtime_render(
                 out.append(source(part[1], part[2]))
             else:  # ("config",) renders as the runtime config() hook: ""
                 out.append("")
-        return "".join(out)
+        static_sql = "".join(out)
+        if mode == "on":
+            return static_sql
 
     from dbt_spark.plans.macros import RelationProxy
 
@@ -493,9 +499,14 @@ def runtime_render(
         },
     )
     try:
-        return _ENV.from_string(node.raw_code).render(**ctx)
+        rendered = _ENV.from_string(node.raw_code).render(**ctx)
     except jinja2.TemplateError as e:
         raise CompilationError(f"jinja error in {node.unique_id}: {e}") from e
+    if static_sql is not None and static_sql != rendered:
+        raise AssertionError(
+            f"static render disagreement on {node.unique_id}: "
+            f"static={static_sql!r} rendered={rendered!r}")
+    return rendered
 
 
 _CONFIG_BLOCK_RE = re.compile(r"{{\s*config\s*\(", re.DOTALL)

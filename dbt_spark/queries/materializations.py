@@ -567,17 +567,23 @@ def utilpack_cardinality_equality(spark: SparkSession, sf_dir: str,
 # full engine end-to-end (parse → DAG → materialize → read back)
 # --------------------------------------------------------------------------
 
-def _engine_project(spark: SparkSession, root: str, files: dict, sf_dir: str):
-    """An ``Engine`` over a project written to ``root`` from ``files``
-    (relpath -> content; ``__SF__`` stands for ``sf_dir``)."""
+def _engine_project(spark: SparkSession, scratch: Scratch, files: dict,
+                    sf_dir: str, subdir: str = ""):
+    """An ``Engine`` over a project written to ``scratch`` (or its
+    ``subdir``) from ``files`` (relpath -> content; ``__SF__`` stands for
+    ``sf_dir``), registered on ``scratch`` so its temp views are dropped
+    when the query returns."""
     from dbt_spark.runner import Engine
 
+    root = scratch.path(subdir) if subdir else scratch.root
     for rel, content in files.items():
         p = os.path.join(root, rel)
         os.makedirs(os.path.dirname(p), exist_ok=True)
         with open(p, "w") as f:
             f.write(content.replace("__SF__", sf_dir))
-    return Engine(root, spark=spark)
+    eng = Engine(root, spark=spark)
+    scratch.contexts.append(eng)
+    return eng
 
 
 ENGINE_PROJECT_FILES = {
@@ -621,7 +627,7 @@ left join order_stats s on c.c_custkey = s.o_custkey
 @scratch_query
 def engine_run_e2e(spark: SparkSession, sf_dir: str, scratch: Scratch) -> DataFrame:
     """The flagship integration: a real project through Engine.invoke(['run'])."""
-    eng = _engine_project(spark, scratch.root, ENGINE_PROJECT_FILES, sf_dir)
+    eng = _engine_project(spark, scratch, ENGINE_PROJECT_FILES, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(f"engine run failed: {[r.message for r in result.results]}")
@@ -659,7 +665,7 @@ def engine_custom_materialization(spark: SparkSession, sf_dir: str,
             "from {{ source('tpch', 'orders') }} group by o_orderstatus"
         ),
     }
-    eng = _engine_project(spark, scratch.root, files, sf_dir)
+    eng = _engine_project(spark, scratch, files, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(
@@ -693,7 +699,7 @@ def engine_pii_scrub_model(spark: SparkSession, sf_dir: str,
             "as text from {{ source('corpus', 'documents') }}"
         ),
     }
-    eng = _engine_project(spark, scratch.root, files, sf_dir)
+    eng = _engine_project(spark, scratch, files, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(
@@ -731,7 +737,7 @@ def zorder_layout_scan(spark: SparkSession, sf_dir: str, scratch: Scratch) -> Da
             "from {{ source('tpch', 'orders') }}"
         ),
     }
-    eng = _engine_project(spark, scratch.root, files, sf_dir)
+    eng = _engine_project(spark, scratch, files, sf_dir)
     if not eng.invoke(["run"]).success:
         raise RuntimeError("zorder run failed")
     return eng.store.read("main", "zlaid").select(
@@ -774,7 +780,7 @@ def contract_enforced_model(spark: SparkSession, sf_dir: str,
             "1.5 as surprise from {{ source('tpch', 'nation') }}"
         ),
     }
-    eng = _engine_project(spark, scratch.root, files, sf_dir)
+    eng = _engine_project(spark, scratch, files, sf_dir)
     ok = eng.invoke(["run", "--select", "nations_ok"])
     bad = eng.invoke(["run", "--select", "nations_bad"])
     if not ok.success or bad.success:
@@ -807,10 +813,10 @@ def clone_state_relations(spark: SparkSession, sf_dir: str,
         ),
     }
 
-    prod = _engine_project(spark, scratch.path("prod"), files, sf_dir)
+    prod = _engine_project(spark, scratch, files, sf_dir, "prod")
     if not prod.invoke(["run"]).success:
         raise RuntimeError("prod run failed")
-    dev = _engine_project(spark, scratch.path("dev"), files, sf_dir)
+    dev = _engine_project(spark, scratch, files, sf_dir, "dev")
     r = dev.invoke(["clone", "--state", os.path.join(prod.project.root, "target")])
     if not r.success:
         raise RuntimeError(f"clone failed: {[x.message for x in r.results]}")
@@ -838,7 +844,7 @@ def hooks_audit_trail(spark: SparkSession, sf_dir: str, scratch: Scratch) -> Dat
             "where o_orderpriority = '1-URGENT'"
         ),
     }
-    eng = _engine_project(spark, scratch.root, files, sf_dir)
+    eng = _engine_project(spark, scratch, files, sf_dir)
     if not eng.invoke(["run"]).success:
         raise RuntimeError("hooked run failed")
     return spark.table("hook_audit")
@@ -884,7 +890,7 @@ def python_model_run(spark: SparkSession, sf_dir: str, scratch: Scratch) -> Data
     """A Python model (`def model(dbt, session)`) through the REAL engine:
     AST-parsed dbt.ref/dbt.config capture, DAG-linked after its SQL upstream,
     executed natively on the SparkSession."""
-    eng = _engine_project(spark, scratch.root, PYTHON_MODEL_PROJECT_FILES, sf_dir)
+    eng = _engine_project(spark, scratch, PYTHON_MODEL_PROJECT_FILES, sf_dir)
     result = eng.invoke(["run"])
     if not result.success:
         raise RuntimeError(f"python model run failed: {[r.message for r in result.results]}")
@@ -971,7 +977,7 @@ def unit_test_fixture_diff(spark: SparkSession, sf_dir: str,
     task/test.py:205-283): source refs replaced by literal fixture rows, the
     model's SQL runs on them, actual vs expect is diffed. One passing and one
     deliberately-failing test; the result statuses are the query output."""
-    eng = _engine_project(spark, scratch.root, UNIT_TEST_PROJECT_FILES, sf_dir)
+    eng = _engine_project(spark, scratch, UNIT_TEST_PROJECT_FILES, sf_dir)
     r = eng.invoke(["test", "--select", "ut_doc_stats_pass ut_doc_stats_fail"])
     rows = [(x.unique_id.rsplit(".", 1)[-1], x.status) for x in r.results]
     scratch.remove()  # the result below is built from driver-side rows

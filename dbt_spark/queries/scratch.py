@@ -32,8 +32,9 @@ class Scratch:
         self.checkpoint = self.path("checkpoint")
         self.output = self.path("output")
         self.store = self.path("store")
-        #: engine contexts over this tree (``_mini_ctx``), whose temp views
-        #: are dropped when the query returns
+        #: engine contexts and engines over this tree (``_mini_ctx``,
+        #: ``_engine_project``), whose temp views are dropped when the
+        #: query returns
         self.contexts: list = []
         os.mkdir(self.landing)
 

@@ -13,6 +13,7 @@ seeds/models/snapshots/tests in one DAG, exactly like BuildTask
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import os
@@ -26,6 +27,7 @@ from typing import Any, Optional
 from pyspark.sql import SparkSession
 
 from dbt_spark.catalog import RelationStore
+from dbt_spark.events import WarnErrorOptions
 from dbt_spark.operators import MATERIALIZATIONS
 from dbt_spark.operators.materialize import ExecutionContext
 from dbt_spark.operators.tests import run_test
@@ -81,6 +83,110 @@ RESOURCE_FOR_COMMAND = {
     "compile": {NodeType.Model, NodeType.Test, NodeType.Analysis},
     "ls": set(NodeType),
 }
+
+#: ``ls --output`` formats (reference task/list.py:27-212)
+LS_OUTPUTS = ("selector", "name", "path", "fqn", "json")
+
+
+class _FlagParser(argparse.ArgumentParser):
+    """argparse that reports a bad argument list as ValueError: an
+    in-process caller gets an exception, never a usage print and
+    SystemExit."""
+
+    def error(self, message: str):
+        raise ValueError(message)
+
+
+def _yaml_arg(text: str) -> Any:
+    import yaml
+
+    return yaml.safe_load(text) or {}
+
+
+#: Every per-invocation flag, declared once. ``Engine.invoke`` parses its
+#: argument list with this table, and ``python -m dbt_spark`` passes it every
+#: flag the CLI does not take itself (reference: the ``dbt`` binary and
+#: ``dbtRunner.invoke`` share one set of click params, cli/main.py:41-99).
+#: Spellings match exactly (no abbreviations) and there is no ``-h``.
+FLAGS = _FlagParser(prog="dbt_spark", add_help=False, allow_abbrev=False)
+_flag = FLAGS.add_argument
+_flag("--select", "-s", "--models", "--model", "-m", action="extend",
+      type=lambda s: s.split(" "), help="node selection (reference "
+      "-m/--models are aliases)")
+_flag("--exclude", action="extend", type=lambda s: s.split(" "))
+_flag("--selector", help="a named selector from selectors.yml")
+_flag("--indirect-selection", default="eager")
+# both spellings accepted (cli/params.py:500-501)
+_flag("--resource-type", "--resource-types", action="append")
+_flag("--exclude-resource-type", "--exclude-resource-types", action="append")
+_flag("--full-refresh", action="store_true")
+_flag("--state", help="artifacts of a previous run, for state: selection")
+_flag("--defer", action="store_true")
+_flag("--defer-state", help="state dir for --defer resolution (overrides "
+      "--state)")
+_flag("--favor-state", action="store_true",
+      help="with --defer, unselected upstreams prefer --state")
+_flag("--empty", action="store_true")
+_flag("--sample", help="trailing event-time window, e.g. '3 days'")
+_flag("--event-time-start", type=datetime.fromisoformat)
+_flag("--event-time-end", type=datetime.fromisoformat)
+_flag("--threads", type=int)
+_flag("--fail-fast", "-x", action="store_true")
+_flag("--warn-error", action="store_true")
+_flag("--warn-error-options", type=WarnErrorOptions.parse,
+      help="YAML/JSON {error|warn|silence: [EventName,...]} (error/warn "
+           "alias include/exclude); default $DBT_WARN_ERROR_OPTIONS")
+_flag("--store-failures", action="store_true")
+# --export-saved-queries is the current spelling on `build`
+# (cli/main.py:175); --include-saved-query is its deprecated alias
+# (p.deprecated_include_saved_query)
+_flag("--include-saved-query", "--export-saved-queries", action="store_true")
+_flag("--inline")
+# raw SQL straight to the engine: no Jinja, no ref()/source() resolution
+# (reference cli/params.py "--inline-direct", task/show.py ShowTaskDirect)
+_flag("--inline-direct", help="show: raw SQL with no Jinja/ref resolution")
+_flag("--limit", type=int, default=5)
+_flag("--args", type=_yaml_arg, help="run-operation: YAML macro kwargs")
+# no choices: `source freshness --output` is a PATH (reference
+# cli/params.py "--output" on freshness), while ls takes a format
+# (LS_OUTPUTS, checked in invoke) and show takes json
+_flag("--output", help="ls: selector|name|path|fqn|json; show: json; "
+      "source freshness: sources.json path")
+_flag("--output-keys", action="extend",
+      type=lambda s: s.replace(",", " ").split(),
+      help="keys to keep in --output json entries")
+# low-level per-node timing profile written to the given path
+# (cli/params.py:190 "--record-timing-info")
+_flag("--record-timing-info", help="write the per-node timing profile here")
+_flag("--no-partial-parse", action="store_true")
+_flag("--partial-parse-file-path",
+      help="override the partial-parse cache location")
+_flag("--no-write-json", dest="write_json", action="store_false")
+# dbt clean may delete clean-paths outside the project only with the
+# explicit --no-clean-project-files-only opt-out (reference cli/params.py
+# "--clean-project-files-only", default True)
+_flag("--clean-project-files-only", action=argparse.BooleanOptionalAction,
+      default=True)
+_flag("--add-package", help="deps: add 'org/name@versionspec' to "
+      "packages.yml and install")
+# deps --add-package source (cli/params.py:606)
+_flag("--source", default="hub", choices=["hub", "git", "local"])
+_flag("--upgrade", action="store_true",
+      help="deps: ignore package-lock.yml and re-resolve")
+_flag("--lock", action="store_true",
+      help="deps: resolve + write package-lock.yml, no install")
+_flag("--connection", action="store_true",
+      help="debug: test the connection only, skip project/parse checks")
+# docs generate: skip warehouse introspection entirely (reference
+# cli/params.py "--empty-catalog")
+_flag("--empty-catalog", action="store_true")
+# reference --static inlines manifest/catalog into one self-contained
+# index.html; our site is always built that way, so the flag is a no-op
+_flag("--static", action="store_true")
+_flag("--port", type=int, help="docs serve port (default 8080)")
+# docs serve bind address (reference cli/params.py "--host")
+_flag("--host", default="127.0.0.1")
+del _flag
 
 
 class Engine:
@@ -412,6 +518,14 @@ class Engine:
                     ref_model_deprecation_date=node.deprecation_date.isoformat(),
                 )
 
+    def drop_views(self) -> None:
+        """Drop the temp views this engine's invocations left: its store's
+        relations and its sources' ``src__*`` scans
+        (``RelationStore.drop_views``)."""
+        sources = self.manifest.sources.values() if self.manifest else ()
+        self.store.drop_views(
+            f"src__{s.source_name}__{s.name}" for s in sources)
+
     def _resolve_fk_constraint_refs(self) -> None:
         """Compile ``to: ref('model')`` in foreign-key constraints to the
         target's relation name (reference compilation.py:631-654
@@ -471,189 +585,26 @@ class Engine:
             command, rest = "docs-serve", rest[1:]
         if command == "source" and rest and rest[0] == "freshness":
             command, rest = "source-freshness", rest[1:]
-        select: list[str] = []
-        exclude: list[str] = []
-        inline: Optional[str] = None
-        inline_direct: Optional[str] = None
-        op_args: dict = {}
-        state_dir: Optional[str] = None
-        positional: list[str] = []
-        limit = 5
-        defer = False
-        empty = False
-        warn_error = False
-        warn_error_options = None
-        store_failures = False
-        include_saved_query = False
-        sample: Optional[str] = None
-        resource_filter: list[str] = []
-        resource_exclude: list[str] = []
-        record_timing_path: Optional[str] = None
-        no_partial_parse = False
-        write_json = True
-        defer_state: Optional[str] = None
-        event_time_start: Optional[datetime] = None
-        event_time_end: Optional[datetime] = None
-        port: Optional[int] = None
-        serve_host = "127.0.0.1"
-        selector_name: Optional[str] = None
-        indirect = "eager"
-        fail_fast = False
-        favor_state = False
-        threads_override: Optional[int] = None
-        ls_output = "selector"
-        ls_output_keys: list[str] = []
-        add_package: Optional[str] = None
-        deps_source = "hub"
-        deps_upgrade = False
-        deps_lock_only = False
-        empty_catalog = False
-        clean_project_files_only = True
-        i = 0
-        while i < len(rest):
-            if rest[i] in ("--select", "-s", "--models", "--model", "-m"):
-                i += 1
-                select.extend(rest[i].split(" "))
-            elif rest[i] == "--exclude":
-                i += 1
-                exclude.extend(rest[i].split(" "))
-            elif rest[i] == "--full-refresh":
-                full_refresh = True
-            elif rest[i] == "--inline":
-                i += 1
-                inline = rest[i]
-            elif rest[i] == "--inline-direct":
-                # raw SQL straight to the engine: no Jinja, no ref()/source()
-                # resolution (reference cli/params.py "--inline-direct",
-                # task/show.py ShowTaskDirect)
-                i += 1
-                inline_direct = rest[i]
-            elif rest[i] == "--args":
-                i += 1
-                import yaml as _yaml
-
-                op_args = _yaml.safe_load(rest[i]) or {}
-            elif rest[i] == "--state":
-                i += 1
-                state_dir = rest[i]
-            elif rest[i] == "--limit":
-                i += 1
-                limit = int(rest[i])
-            elif rest[i] == "--defer":
-                defer = True
-            elif rest[i] == "--favor-state":
-                favor_state = True
-            elif rest[i] == "--empty":
-                empty = True
-            elif rest[i] == "--warn-error":
-                warn_error = True
-            elif rest[i] == "--warn-error-options":
-                i += 1
-                from dbt_spark.events import WarnErrorOptions
-
-                warn_error_options = WarnErrorOptions.parse(rest[i])
-            elif rest[i] == "--store-failures":
-                store_failures = True
-            elif rest[i] in ("--include-saved-query", "--export-saved-queries"):
-                # --export-saved-queries is the current spelling on `build`
-                # (cli/main.py:175); --include-saved-query is its deprecated
-                # alias (p.deprecated_include_saved_query)
-                include_saved_query = True
-            elif rest[i] == "--selector":
-                i += 1
-                selector_name = rest[i]
-            elif rest[i] == "--indirect-selection":
-                i += 1
-                indirect = rest[i]
-            elif rest[i] in ("--fail-fast", "-x"):
-                fail_fast = True
-            elif rest[i] == "--no-clean-project-files-only":
-                # dbt clean may delete clean-paths outside the project only
-                # with this explicit opt-out (reference cli/params.py
-                # "--clean-project-files-only", default True)
-                clean_project_files_only = False
-            elif rest[i] == "--clean-project-files-only":
-                clean_project_files_only = True
-            elif rest[i] == "--empty-catalog":
-                # docs generate: skip warehouse introspection entirely
-                # (reference cli/params.py "--empty-catalog")
-                empty_catalog = True
-            elif rest[i] == "--static":
-                # reference --static inlines manifest/catalog into one
-                # self-contained index.html; our site is always built that
-                # way, so the flag is accepted as a no-op
-                pass
-            elif rest[i] == "--port":
-                i += 1
-                port = int(rest[i])
-            elif rest[i] == "--host":
-                # docs serve bind address (reference cli/params.py "--host")
-                i += 1
-                serve_host = rest[i]
-            elif rest[i] == "--sample":
-                i += 1
-                sample = rest[i]
-            elif rest[i] in ("--resource-type", "--resource-types"):
-                # both spellings accepted (cli/params.py:500-501)
-                i += 1
-                resource_filter.append(rest[i])
-            elif rest[i] in ("--exclude-resource-type",
-                             "--exclude-resource-types"):
-                i += 1
-                resource_exclude.append(rest[i])
-            elif rest[i] == "--record-timing-info":
-                # low-level per-node timing profile written to the given
-                # path (cli/params.py:190 "--record-timing-info")
-                i += 1
-                record_timing_path = rest[i]
-            elif rest[i] == "--no-partial-parse":
-                no_partial_parse = True
-            elif rest[i] == "--partial-parse-file-path":
-                i += 1
-                self._partial_parse_path = rest[i]
-            elif rest[i] == "--connection":
-                self._debug_connection_only = True
-            elif rest[i] == "--no-write-json":
-                write_json = False
-            elif rest[i] == "--defer-state":
-                i += 1
-                defer_state = rest[i]
-            elif rest[i] == "--add-package":
-                i += 1
-                add_package = rest[i]
-            elif rest[i] == "--source":
-                # deps --add-package source: hub (default) | git | local
-                # (cli/params.py:606)
-                i += 1
-                deps_source = rest[i]
-            elif rest[i] == "--upgrade":
-                deps_upgrade = True
-            elif rest[i] == "--lock":
-                deps_lock_only = True
-            elif rest[i] == "--event-time-start":
-                i += 1
-                event_time_start = datetime.fromisoformat(rest[i])
-            elif rest[i] == "--event-time-end":
-                i += 1
-                event_time_end = datetime.fromisoformat(rest[i])
-            elif rest[i] == "--output":
-                i += 1
-                ls_output = rest[i]
-            elif rest[i] == "--output-keys":
-                i += 1
-                ls_output_keys.extend(rest[i].replace(",", " ").split())
-            elif rest[i] == "--threads":
-                i += 1
-                threads_override = int(rest[i])
-            elif not rest[i].startswith("-"):
-                positional.append(rest[i])
-            else:
+        flags, extras = FLAGS.parse_known_args(rest)
+        positional = []
+        for arg in extras:
+            if arg.startswith("-"):
                 # an unrecognized flag must FAIL, not silently no-op — a
                 # dropped flag (e.g. a typo of --full-refresh) changing run
                 # semantics is far worse than an error
                 raise ValueError(
-                    f"unknown flag {rest[i]!r} for command {command!r}")
-            i += 1
+                    f"unknown flag {arg!r} for command {command!r}")
+            positional.append(arg)
+        if command == "ls" and flags.output not in (None, *LS_OUTPUTS):
+            raise ValueError(f"ls --output must be one of {LS_OUTPUTS}, "
+                             f"not {flags.output!r}")
+        full_refresh = full_refresh or flags.full_refresh
+        if flags.partial_parse_file_path:
+            self._partial_parse_path = flags.partial_parse_file_path
+        if flags.connection:
+            self._debug_connection_only = True
+        #: this invocation's parsed flags (the CLI reads --output here)
+        self.flags = flags
 
         if command == "clean":
             # remove the clean-targets dirs (reference: CleanTask,
@@ -687,7 +638,7 @@ class Engine:
                     "dbt will not clean the following source paths: "
                     f"{sorted(str(p) for p in hit)}")
             outside = {p for p in targets if root not in p.parents}
-            if outside and clean_project_files_only:
+            if outside and flags.clean_project_files_only:
                 raise RuntimeError(
                     "dbt will not clean the following directories outside "
                     f"the project: {sorted(str(p) for p in outside)} "
@@ -701,100 +652,108 @@ class Engine:
             # Fixes-20240822-122132: retry ignored --threads)
             return self._retry(full_refresh=full_refresh,
                                snapshot_ts=snapshot_ts, now=now,
-                               threads_override=threads_override)
+                               threads_override=flags.threads)
         if command == "deps":
-            return self._deps(add_package=add_package, source=deps_source,
-                              upgrade=deps_upgrade,
-                              lock_only=deps_lock_only)
+            return self._deps(add_package=flags.add_package,
+                              source=flags.source, upgrade=flags.upgrade,
+                              lock_only=flags.lock)
         if command == "debug":
             return self._debug()
 
-        # dbt_project.yml `flags:` provide defaults the CLI can override
-        # (reference ProjectFlags, core/dbt/contracts/project.py:318)
+        # an absent --warn-error-options falls back to its envvar
+        # DBT_WARN_ERROR_OPTIONS (reference cli/params.py), then to the
+        # dbt_project.yml `flags:` defaults the CLI can override (reference
+        # ProjectFlags, core/dbt/contracts/project.py:318)
+        env_weo = os.environ.get("DBT_WARN_ERROR_OPTIONS")
+        if flags.warn_error_options is None and env_weo:
+            flags.warn_error_options = WarnErrorOptions.parse(env_weo)
         pf = getattr(self.project, "flags", None) or {}
         if pf:
-            fail_fast = fail_fast or bool(pf.get("fail_fast"))
-            warn_error = warn_error or bool(pf.get("warn_error"))
-            if warn_error_options is None and pf.get("warn_error_options"):
-                from dbt_spark.events import WarnErrorOptions
-
-                warn_error_options = WarnErrorOptions.parse(
+            flags.fail_fast = flags.fail_fast or bool(pf.get("fail_fast"))
+            flags.warn_error = flags.warn_error or bool(pf.get("warn_error"))
+            if (flags.warn_error_options is None
+                    and pf.get("warn_error_options")):
+                flags.warn_error_options = WarnErrorOptions.parse(
                     pf["warn_error_options"])
-            if indirect == "eager" and pf.get("indirect_selection"):
-                indirect = str(pf["indirect_selection"]).lower()
+            if (flags.indirect_selection == "eager"
+                    and pf.get("indirect_selection")):
+                flags.indirect_selection = str(
+                    pf["indirect_selection"]).lower()
             if pf.get("partial_parse") is False:
-                no_partial_parse = True
+                flags.no_partial_parse = True
             if pf.get("write_json") is False:
-                write_json = False
+                flags.write_json = False
 
         # --fail-fast asks for the earliest possible failure: views must
         # validate on THEIR node, so registration goes back to eager
-        self.store.eager_views = bool(fail_fast)
+        self.store.eager_views = bool(flags.fail_fast)
 
         # parse-time warnings (deprecations) honor the invocation's flags; a
         # promoted warning fails the invocation like the reference's
         # EventCompilationError out of warn_or_error
-        self._warn_error = warn_error
-        self._warn_error_options = warn_error_options
+        self._warn_error = flags.warn_error
+        self._warn_error_options = flags.warn_error_options
         from dbt_spark.events import WarnErrorPromotion
 
-        self._write_json = write_json
+        self._write_json = flags.write_json
         try:
-            manifest = self.parse(partial=not no_partial_parse)
+            manifest = self.parse(partial=not flags.no_partial_parse)
         except WarnErrorPromotion as e:
             return RunnerResult(False, [
                 RunResult(e.event.name, "error", 0.0, message=str(e))
             ])
-        self.state_dir = state_dir
+        self.state_dir = flags.state
         if command == "parse":
             # manifest.json already written by parse() (task/compile.py analog)
             return RunnerResult(success=True, results=[], manifest=manifest)
 
         if command == "run-operation":
-            return self._run_operation(manifest, positional[0], op_args)
+            return self._run_operation(manifest, positional[0],
+                                       flags.args or {})
         if command == "show":
-            if inline_direct is not None:
-                self.store.ensure_registered_for(inline_direct)
+            if flags.inline_direct is not None:
+                self.store.ensure_registered_for(flags.inline_direct)
                 rows = [r.asDict() for r in
-                        self.spark.sql(inline_direct).limit(limit).collect()]
+                        self.spark.sql(flags.inline_direct)
+                        .limit(flags.limit).collect()]
                 res = RunnerResult(
                     True, [RunResult("show", "success", 0.0)], manifest)
                 res.preview = rows
                 return res
-            return self._show(manifest, inline, select, limit)
+            return self._show(manifest, flags.inline, flags.select, flags.limit)
         if command == "docs-generate":
-            return self._docs_generate(manifest, select=select or None,
-                                       exclude=exclude or None,
-                                       empty_catalog=empty_catalog)
+            return self._docs_generate(manifest, select=flags.select or None,
+                                       exclude=flags.exclude or None,
+                                       empty_catalog=flags.empty_catalog)
         if command == "docs-serve":
-            return self._docs_serve(port=port or 8080, host=serve_host)
+            return self._docs_serve(port=flags.port or 8080, host=flags.host)
         if command == "source-freshness":
             return self._source_freshness(
-                manifest, now=now, warn_error=warn_error,
-                warn_error_options=warn_error_options,
-                select=select or None, exclude=exclude or None,
-                # source freshness -o/--output is a PATH (reference
+                manifest, now=now, warn_error=flags.warn_error,
+                warn_error_options=flags.warn_error_options,
+                select=flags.select or None, exclude=flags.exclude or None,
+                # source freshness --output is a PATH (reference
                 # cli/params.py "--output" on freshness), unlike ls/show
                 # where --output picks a format
-                output_path=(ls_output if ls_output != "selector" else None),
+                output_path=flags.output,
             )
         if command == "clone":
-            return self._clone(manifest, select, exclude)
+            return self._clone(manifest, flags.select, flags.exclude)
         graph = Linker().link_graph(manifest)
         if command == "build":
             graph = add_test_edges(graph, manifest)
         self._write_graph_summary(graph)
 
         selector_def = None
-        if selector_name is not None:
-            entry = self.project.selectors.get(selector_name)
+        if flags.selector is not None:
+            entry = self.project.selectors.get(flags.selector)
             if entry is None:
                 raise ValueError(
-                    f"--selector {selector_name!r} not found in selectors.yml "
+                    f"--selector {flags.selector!r} not found in selectors.yml "
                     f"(available: {sorted(self.project.selectors)})"
                 )
             selector_def = entry.get("definition")
-        elif not select:
+        elif not flags.select:
             # a selector marked default: true applies when nothing is selected
             # (config/selectors.py default flag)
             for entry in self.project.selectors.values():
@@ -802,16 +761,17 @@ class Engine:
                     selector_def = entry.get("definition")
                     break
         selected = select_nodes(
-            manifest, graph, select or None, exclude or None,
-            state=self._load_state(), indirect=indirect, selector_def=selector_def,
+            manifest, graph, flags.select or None, flags.exclude or None,
+            state=self._load_state(), indirect=flags.indirect_selection,
+            selector_def=selector_def,
         )
         resource_types = RESOURCE_FOR_COMMAND[command]
-        if resource_filter:
+        if flags.resource_type:
             # --resource-type narrows the command's executable set; the
             # special values expand per resource_types_from_args
             # (core/dbt/task/base.py:478: "all" -> every type the command
             # can touch, "default" -> the command's default set)
-            names = set(resource_filter)
+            names = set(flags.resource_type)
             if "all" in names:
                 names.remove("all")
                 names |= {t.value for t in RESOURCE_FOR_COMMAND[command]}
@@ -820,9 +780,9 @@ class Engine:
                 names |= {t.value for t in RESOURCE_FOR_COMMAND[command]}
             wanted = {NodeType(v) for v in names}
             resource_types = {t for t in resource_types if t in wanted}
-        if resource_exclude:
+        if flags.exclude_resource_type:
             # --exclude-resource-type (reference cli/params.py:204)
-            dropped = {NodeType(v) for v in resource_exclude}
+            dropped = {NodeType(v) for v in flags.exclude_resource_type}
             resource_types = {t for t in resource_types if t not in dropped}
         runnable = {
             uid
@@ -844,16 +804,17 @@ class Engine:
                 listable |= {uid for uid in selected if uid in manifest.sources}
             results = [
                 RunResult(uid, "success", 0.0,
-                          _ls_render(manifest, uid, ls_output, ls_output_keys))
+                          _ls_render(manifest, uid, flags.output or "selector",
+                                     flags.output_keys))
                 for uid in sorted(listable)
             ]
             return RunnerResult(success=True, results=results, manifest=manifest)
 
         defer_store = None
-        if defer and (defer_state or state_dir):
+        if flags.defer and (flags.defer_state or flags.state):
             # --defer-state overrides --state for defer resolution only
             # (reference cli/params.py:105)
-            wh = os.path.join(defer_state or state_dir, "warehouse")
+            wh = os.path.join(flags.defer_state or flags.state, "warehouse")
             if os.path.isdir(wh):
                 defer_store = RelationStore(self.spark, wh)
         ctx = ExecutionContext(
@@ -866,34 +827,34 @@ class Engine:
             snapshot_ts=snapshot_ts,
             now=now,
             defer_store=defer_store,
-            empty=empty,
-            warn_error=warn_error,
-            warn_error_options=warn_error_options,
+            empty=flags.empty,
+            warn_error=flags.warn_error,
+            warn_error_options=flags.warn_error_options,
             retry_batches=retry_batches or {},
-            event_time_start=event_time_start,
-            event_time_end=event_time_end,
-            include_saved_query=include_saved_query,
-            favor_state=favor_state,
+            event_time_start=flags.event_time_start,
+            event_time_end=flags.event_time_end,
+            include_saved_query=flags.include_saved_query,
+            favor_state=flags.favor_state,
             selected=set(runnable),
             events=self.events,
         )
-        if store_failures:
+        if flags.store_failures:
             # --store-failures: flag-level override of the per-test config
             for uid in runnable:
                 n = manifest.nodes[uid]
                 if n.resource_type == NodeType.Test:
                     n.config.store_failures = True
-        if sample:
-            ctx.event_time_filters["*"] = _sample_window(sample, now)
+        if flags.sample:
+            ctx.event_time_filters["*"] = _sample_window(flags.sample, now)
         if command == "compile":
-            if inline is not None:
+            if flags.inline is not None:
                 # dbt compile --inline: render an ad-hoc jinja string against
                 # the manifest without executing (ShowTaskDirect's sibling)
                 tmp = ManifestNode(
                     unique_id=f"model.{self.project.name}.__inline__",
                     name="__inline__", package_name=self.project.name,
                     path="<inline>", resource_type=NodeType.Model,
-                    raw_code=inline,
+                    raw_code=flags.inline,
                 )
                 sql = compile_sql_lenient(ctx, tmp)
                 return RunnerResult(
@@ -905,7 +866,7 @@ class Engine:
         # include upstream runnable deps in the queue graph for correct ordering
         queue = GraphQueue(graph, runnable)
         results: list[RunResult] = []
-        threads = int(threads_override
+        threads = int(flags.threads
                       or self.project.profile.get("threads", 4))
 
         # reference startup event sequence (task/runnable.py before execution:
@@ -1024,7 +985,7 @@ class Engine:
                         results.append(RunResult(skipped, "skipped", 0.0, "upstream failed"))
                         self.events.fire("SkippingDetails", node_id=skipped,
                                          reason="upstream failed")
-                    if fail_fast:
+                    if flags.fail_fast:
                         # --fail-fast: stop scheduling anything further
                         # (reference fail_fast flag, task/runnable.py)
                         aborted["flag"] = True
@@ -1092,12 +1053,12 @@ class Engine:
             r.status in ("success", "pass", "warn", "skipped") for r in results)
         if getattr(self, "_write_json", True):
             self._write_run_results(results, success, command=command)
-        if record_timing_path:
+        if flags.record_timing_info:
             # --record-timing-info: per-node timing profile at the given
             # path (cli/params.py:190; reference dumps the cProfile-style
             # trace — here the per-node wall timings the engine measures)
             try:
-                with open(record_timing_path, "w") as f:
+                with open(flags.record_timing_info, "w") as f:
                     json.dump(
                         [{"unique_id": r.unique_id, "status": r.status,
                           "execution_time": r.execution_time}

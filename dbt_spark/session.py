@@ -13,8 +13,6 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 #: ``spark.sql.codegen.cache.maxEntries``: Spark's LRU of compiled
 #: whole-stage-codegen classes (default 100). See get_spark for the sizing.
 CODEGEN_CACHE_ENTRIES = 8192
@@ -46,7 +44,7 @@ def _input_bytes(path: str, suffix: str = ".parquet") -> int:
     return total
 
 
-def _initial_partition_num(cpus: str) -> str | None:
+def _initial_partition_num() -> str | None:
     """Size-gate AQE's wide-start shuffle partition count.
 
     Starting shuffles at 256 partitions and letting AQE coalesce DOWN is the
@@ -56,12 +54,8 @@ def _initial_partition_num(cpus: str) -> str | None:
     1.5-1.9x drift on sub-second queries). Gate on the actual input size of
     the working scale-factor directory: wide start only when the scan volume
     could produce map outputs worth spreading (>1 GiB), which is exactly the
-    regime where a 1000-executor cluster runs. Override via
-    SPARK_GRAFT_INITIAL_PARTITIONS.
+    regime where a 1000-executor cluster runs.
     """
-    explicit = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    if explicit:
-        return explicit
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if _input_bytes(sf_dir) > 1 << 30:
         return "256"
@@ -79,11 +73,13 @@ def get_spark(app_name: str = "dbt_spark", *, extra_conf: dict | None = None) ->
       nation, supplier at test SF) broadcast automatically; we additionally
       hint ``F.broadcast`` where the optimizer lacks stats.
     """
+    # one read of SPARK_GRAFT_CPUS sizes both the local master and the
+    # shuffle partition count
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -121,7 +117,7 @@ def get_spark(app_name: str = "dbt_spark", *, extra_conf: dict | None = None) ->
     # wide-start shuffles only when the working inputs are big enough to
     # benefit (see _initial_partition_num) — on small inputs the wide start
     # costs more in task launch than it saves in spill
-    initial = _initial_partition_num(cpus)
+    initial = _initial_partition_num()
     if initial is not None:
         builder = builder.config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum", initial

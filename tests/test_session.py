@@ -93,3 +93,32 @@ def test_read_parquet_sees_files_added_to_a_directory(spark, tmp_path):
     pd.DataFrame({"k": [4, 5]}).to_parquet(os.path.join(src, "b.parquet"))
     assert sorted(r.k for r in read_parquet(spark, src).collect()) == [
         1, 2, 3, 4, 5]
+
+
+def test_shuffle_partitions_follow_cpus_set_after_import():
+    """``SPARK_GRAFT_CPUS`` set after ``dbt_spark.session`` is imported (as
+    the test fixture's ``setdefault`` does) sizes both the local master and
+    the shuffle partition count: the built session has as many shuffle
+    partitions as cores. Own Spark process: the shared session is built."""
+    import json
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import json, os, sys
+sys.path.insert(0, {repo!r})
+os.environ.pop("SPARK_GRAFT_CPUS", None)
+from dbt_spark import session
+os.environ["SPARK_GRAFT_CPUS"] = "3"
+spark = session.get_spark("cpus_probe")
+print(json.dumps({{
+    "cores": spark.sparkContext.defaultParallelism,
+    "shuffle": spark.conf.get("spark.sql.shuffle.partitions")}}))
+spark.stop()
+"""
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                         text=True, env=env, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"cores": 3, "shuffle": "3"}

@@ -119,3 +119,53 @@ def test_engine_parse_same_manifest_static_vs_rendered(project_dir, monkeypatch)
     slow = snapshot()
     assert fast == slow
     assert fast[f"model.sp.c"][0] == [(None, "b")]
+
+
+def _runtime_render_counting(monkeypatch, mode, static_plan=None):
+    """Render ``select * from {{ ref('a') }}`` through runtime_render under
+    ``mode``; return (sql, number of full-context renders)."""
+    from dbt_spark.plans import compile as compile_mod
+    from dbt_spark.plans import static_parser
+    from dbt_spark.plans.manifest import Manifest, ManifestNode, NodeType
+
+    monkeypatch.setenv("DBT_SPARK_STATIC_PARSER", mode)
+    if static_plan is not None:
+        monkeypatch.setattr(static_parser, "static_render_parts",
+                            lambda raw: static_plan)
+    full = []
+    base = compile_mod._base_context
+    monkeypatch.setattr(compile_mod, "_base_context",
+                        lambda *a, **k: full.append(1) or base(*a, **k))
+    manifest = Manifest(project_name="rt")
+    for name, raw in (("a", "select 1 as id"),
+                      ("m", "select * from {{ ref('a') }}")):
+        manifest.nodes[f"model.rt.{name}"] = ManifestNode(
+            unique_id=f"model.rt.{name}", name=name, package_name="rt",
+            path=f"{name}.sql", resource_type=NodeType.Model, raw_code=raw)
+    sql = compile_mod.runtime_render(
+        manifest.nodes["model.rt.m"], manifest,
+        resolve_ref=lambda n: f"main__{n.name}",
+        resolve_source=lambda n: "unused", this_name="main__m",
+        is_incremental=False, full_refresh=False)
+    return sql, len(full)
+
+
+def test_runtime_render_honors_parser_mode(monkeypatch):
+    """The runtime static-render fast path follows the static parser mode
+    like the parse-time path: ``on`` skips the full jinja context, ``off``
+    always builds it, ``sample`` renders both ways and agrees."""
+    assert _runtime_render_counting(monkeypatch, "on") == (
+        "select * from main__a", 0)
+    assert _runtime_render_counting(monkeypatch, "off") == (
+        "select * from main__a", 1)
+    assert _runtime_render_counting(monkeypatch, "sample") == (
+        "select * from main__a", 1)
+
+
+def test_runtime_render_sample_mode_raises_on_disagreement(monkeypatch):
+    """``sample`` cross-checks the static plan against the full render and
+    raises on a mismatch, as extract_or_render does at parse time."""
+    with pytest.raises(AssertionError, match="static render disagreement"):
+        _runtime_render_counting(
+            monkeypatch, "sample",
+            static_plan=["select * from ", ("ref", None, "a"), " limit 0"])

@@ -452,8 +452,9 @@ def test_streaming_queries_release_their_dirs(spark, tmp_path, monkeypatch):
     dir, no temp view, no scan-cache entry. Shapes: file-sink output
     (pii_scrub), fold store (hll), memory sink (heavy_hitters),
     foreachBatch output dir (prompt_decontam), two output dirs
-    (media_triage), the mini engine context (ingest_checkpoint) and a
-    raise-checked replay with a driver-side result (neardup)."""
+    (media_triage), the mini engine context (ingest_checkpoint), a
+    raise-checked replay with a driver-side result (neardup) and a whole
+    Engine over a scratch project (engine_run_e2e)."""
     import gc
     import tempfile
 
@@ -463,7 +464,7 @@ def test_streaming_queries_release_their_dirs(spark, tmp_path, monkeypatch):
     names = ["stream_pii_scrub", "stream_hll_cardinality",
              "stream_heavy_hitters", "stream_prompt_decontam",
              "stream_media_triage", "streaming_ingest_checkpoint",
-             "stream_neardup_ingest"]
+             "stream_neardup_ingest", "engine_run_e2e"]
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.setenv("TMPDIR", str(tmp))
