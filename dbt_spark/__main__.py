@@ -68,17 +68,14 @@ def _cli_parser() -> argparse.ArgumentParser:
                      help="log directory (reference --log-path / "
                           "DBT_LOG_PATH; default <target-path>/logs)")
     cli.add_argument("--log-level-file",
-                     default=os.environ.get("DBT_LOG_LEVEL_FILE"),
                      choices=["debug", "info", "warn", "error", None],
                      help="minimum level written to the JSONL log file "
                           "(reference --log-level-file; default debug=all)")
     cli.add_argument("--log-format-file",
-                     default=os.environ.get("DBT_LOG_FORMAT_FILE"),
                      choices=["text", "debug", "json", "default", None],
                      help="file log encoding, overrides --log-format for the "
                           "file sink (reference --log-format-file)")
     cli.add_argument("--log-file-max-bytes", type=int,
-                     default=os.environ.get("DBT_LOG_FILE_MAX_BYTES"),
                      help="roll dbt.log past this size; 0 = unlimited "
                           "(reference --log-file-max-bytes)")
     cli.add_argument("--log-level",

@@ -8,8 +8,13 @@ write metadata. Relations are exposed to Spark SQL as temp views named
 ``{schema}__{name}`` (registered lazily, re-registerable in a fresh session —
 this is the durable-catalog role the warehouse metastore plays for dbt).
 
-Writes are atomic via staging-dir swap: write to ``<path>.__staging__``, move
-the old dir aside, rename staging into place. The physical write/read path is
+Writes are atomic via one staging-dir swap protocol (``formats.overwrite``):
+write ``<path>.__staging__<ts>``, retire the live dir to
+``<path>.__retired__<ts>``, rename staging into place, remove the retired
+copy; the next overwrite first recovers from a crash between the renames and
+sweeps leftover siblings. Plain, bucketed and compacting rewrites all run
+it, under the store's lock. Every relation upsert is one ``put``: record,
+forget the registration, journal. The physical write/read path is
 pluggable through the ``TableFormat`` seam (dbt_spark/formats.py): plain file
 formats (parquet default | orc | json | csv) use the staged swap
 (single-writer atomicity, documented there), while the ACID formats
@@ -33,6 +38,8 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from dbt_spark.formats import overwrite, table_format
 
 
 @dataclass
@@ -145,6 +152,17 @@ class RelationStore:
         self._log_fh.write(json.dumps(
             {"k": key, "r": None if rel is None else rel.__dict__}) + "\n")
         self._log_fh.flush()
+
+    def put(self, rel: Relation) -> Relation:
+        """The one catalog commit: record ``rel``, forget its registration
+        (the next ``register`` reads the new files or SQL) and journal it.
+        Callers that want it addressable now call ``register`` themselves."""
+        key = self.key(rel.schema, rel.name)
+        with self._lock:
+            self.relations[key] = rel
+            self._unregister(rel.identifier)
+            self._journal(key, rel)
+        return rel
 
     @staticmethod
     def key(schema: str, name: str) -> str:
@@ -343,8 +361,6 @@ class RelationStore:
         """Format-aware scan of a stored relation, routed through the
         TableFormat seam (dbt_spark/formats.py; schema reconstructed from the
         persisted JSON for schema-light file formats)."""
-        from dbt_spark.formats import table_format
-
         return table_format(rel.meta.get("file_format")).read(self.spark, rel)
 
     def _ensure_bucketed_table(self, rel: Relation) -> None:
@@ -385,12 +401,8 @@ class RelationStore:
 
     def save_view(self, schema: str, name: str, compiled_sql: str, **meta: Any) -> Relation:
         meta.setdefault("built_at", time.time())
-        rel = Relation(schema=schema, name=name, kind="view", compiled_sql=compiled_sql,
-                       meta=meta)
-        with self._lock:
-            self.relations[self.key(schema, name)] = rel
-            self._unregister(rel.identifier)
-            self._journal(self.key(schema, name), rel)
+        rel = self.put(Relation(schema=schema, name=name, kind="view",
+                                compiled_sql=compiled_sql, meta=meta))
         self.register(rel)
         return rel
 
@@ -414,8 +426,6 @@ class RelationStore:
         dbt-spark adapter's ``file_format`` / ``location_root`` model
         configs; schema-light file formats persist their schema JSON in
         relation meta so reads reconstruct exact types."""
-        from dbt_spark.formats import table_format
-
         fmt = (meta.get("file_format") or "parquet").lower()
         fmt_obj = table_format(fmt)
         fmt_obj.require(self.spark)
@@ -435,7 +445,7 @@ class RelationStore:
                 self._check_csv_append_schema(schema, name, df)
             fmt_obj.write_append(df, path, partition_by)
         else:
-            fmt_obj.write_overwrite(df, path, partition_by, swap=self._swap)
+            fmt_obj.write_overwrite(df, path, partition_by, lock=self._lock)
             if fmt == "parquet" and not partition_by:
                 # the files hold exactly df's columns (an append keeps older
                 # files, a partitioned write moves columns into the path)
@@ -443,12 +453,8 @@ class RelationStore:
         # build timestamp: consumed by model-level freshness.build_after
         # gating (always refreshed — an append is still a build)
         meta["built_at"] = time.time()
-        rel = Relation(schema=schema, name=name, kind=kind, path=path,
-                       partition_by=partition_by, meta=meta)
-        with self._lock:
-            self.relations[self.key(schema, name)] = rel
-            self._unregister(rel.identifier)
-            self._journal(self.key(schema, name), rel)
+        rel = self.put(Relation(schema=schema, name=name, kind=kind, path=path,
+                                partition_by=partition_by, meta=meta))
         self.register(rel, written_schema)
         return rel
 
@@ -458,12 +464,8 @@ class RelationStore:
         materialization's own DDL) as a catalog relation — journals the
         entry and registers it, no data movement."""
         meta.setdefault("built_at", time.time())
-        rel = Relation(schema=schema, name=name, kind="table", path=path,
-                       meta=meta)
-        with self._lock:
-            self.relations[self.key(schema, name)] = rel
-            self._unregister(rel.identifier)
-            self._journal(self.key(schema, name), rel)
+        rel = self.put(Relation(schema=schema, name=name, kind="table",
+                                path=path, meta=meta))
         self.register(rel)
         return rel
 
@@ -485,10 +487,8 @@ class RelationStore:
         bucket key skip their exchange. The files carry bucket ids in their
         names, so the layout survives session restarts via
         ``_ensure_bucketed_table``."""
-        path = self.path_for(schema, name)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        ident = self.key(schema, name).replace(".", "__")
-        sort_by = list(sort_by or bucket_by)
+        rel = self._bucketed(schema, name, "table", bucket_by, buckets, sort_by)
+        os.makedirs(os.path.dirname(rel.path), exist_ok=True)
         if mode == "append":
             # incremental append preserving the bucket spec: new files get
             # bucket ids from the SAME hash; each file is per-bucket sorted
@@ -496,35 +496,15 @@ class RelationStore:
             existing = self.get(schema, name)
             if existing is not None:
                 self.register(existing)  # ensure the catalog table exists
-            (
-                df.write.mode("append")
-                .format("parquet")
-                .bucketBy(int(buckets), *bucket_by)
-                .sortBy(*sort_by)
-                .option("path", path)
-                .saveAsTable(ident)
-            )
         else:
             with self._lock:
-                self.spark.catalog.dropTempView(ident)
-                self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-            (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(int(buckets), *bucket_by)
-                .sortBy(*sort_by)
-                .option("path", path)
-                .saveAsTable(ident)
-            )
-        rel = Relation(
-            schema=schema, name=name, kind="table", path=path,
-            meta={"buckets": int(buckets), "bucket_by": list(bucket_by),
-                  "sort_by": sort_by, "built_at": time.time()},
-        )
-        with self._lock:
-            self.relations[self.key(schema, name)] = rel
-            self._registered.add(rel.identifier)
-            self._journal(self.key(schema, name), rel)
+                self.spark.catalog.dropTempView(rel.identifier)
+                self.spark.sql(f"DROP TABLE IF EXISTS {rel.identifier}")
+        self._bucketed_writer(df, mode, rel).option(
+            "path", rel.path).saveAsTable(rel.identifier)
+        rel.meta["built_at"] = time.time()
+        self.put(rel)
+        self.register(rel)  # saveAsTable declared the table already
         return rel
 
     def rewrite_bucketed(
@@ -536,37 +516,52 @@ class RelationStore:
         buckets: int,
         sort_by: Optional[list[str]] = None,
     ) -> Relation:
-        """Staged bucketed rewrite for plans that READ the relation being
-        replaced (incremental combine): write a temp bucketed table beside
-        the target, swap directories, recreate the catalog entry. No
-        driver/executor materialization — the staging write streams."""
-        path = self.path_for(schema, name)
-        ident = self.key(schema, name).replace(".", "__")
-        sort_by = list(sort_by or bucket_by)
-        staging = f"{path}.__staging__{int(time.time() * 1000)}"
-        tmp_ident = f"{ident}__rewrite_tmp"
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")
-        (
-            df.write.mode("overwrite").format("parquet")
-            .bucketBy(int(buckets), *bucket_by).sortBy(*sort_by)
-            .option("path", staging).saveAsTable(tmp_ident)
-        )
-        with self._lock:
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")  # files stay
-            self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-            self.spark.catalog.dropTempView(ident)
-            self._swap(path, staging)
-            self._registered.discard(ident)
-        out = Relation(
-            schema=schema, name=name, kind="incremental", path=path,
+        """Bucketed rewrite for plans that READ the relation being replaced
+        (incremental combine), through ``_restage_bucketed``."""
+        rel = self._bucketed(schema, name, "incremental", bucket_by, buckets,
+                             sort_by)
+        self._restage_bucketed(rel, df)
+        rel.meta["built_at"] = time.time()
+        self.put(rel)
+        self.register(rel)  # _ensure_bucketed_table re-declares CLUSTERED BY
+        return rel
+
+    def _bucketed(self, schema: str, name: str, kind: str,
+                  bucket_by: list[str], buckets: int,
+                  sort_by: Optional[list[str]]) -> Relation:
+        return Relation(
+            schema=schema, name=name, kind=kind,
+            path=self.path_for(schema, name),
             meta={"buckets": int(buckets), "bucket_by": list(bucket_by),
-                  "sort_by": sort_by, "built_at": time.time()},
+                  "sort_by": list(sort_by or bucket_by)},
         )
-        with self._lock:
-            self.relations[self.key(schema, name)] = out
-            self._journal(self.key(schema, name), out)
-        self.register(out)
-        return out
+
+    @staticmethod
+    def _bucketed_writer(df: DataFrame, mode: str, rel: Relation):
+        m = rel.meta
+        return (df.write.mode(mode).format("parquet")
+                .bucketBy(int(m["buckets"]), *m["bucket_by"])
+                .sortBy(*(m.get("sort_by") or m["bucket_by"])))
+
+    def _restage_bucketed(self, rel: Relation, df: DataFrame) -> None:
+        """Replace bucketed ``rel``'s files with ``df`` through the one
+        overwrite protocol, for plans that read ``rel`` itself: a temp
+        bucketed table is written to the staging dir, then both catalog
+        tables are dropped (external tables: the files stay) and the dirs
+        swap. No driver/executor materialization — the staging write
+        streams. The next ``register`` re-declares the table (a temp view
+        of the same name would shadow it, so that goes too)."""
+        tmp = f"{rel.identifier}__rewrite_tmp"
+
+        def stage(staging: str) -> None:
+            self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+            self._bucketed_writer(df, "overwrite", rel).option(
+                "path", staging).saveAsTable(tmp)
+            self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+            self.spark.sql(f"DROP TABLE IF EXISTS {rel.identifier}")
+            self.spark.catalog.dropTempView(rel.identifier)
+
+        overwrite(rel.path, stage, self._lock)
 
     def overwrite_partitions(
         self, schema: str, name: str, df: DataFrame, partition_by: list[str]
@@ -582,12 +577,8 @@ class RelationStore:
             .option("partitionOverwriteMode", "dynamic")
             .parquet(path)
         )
-        rel = Relation(schema=schema, name=name, kind="incremental", path=path,
-                       partition_by=partition_by)
-        with self._lock:
-            self.relations[self.key(schema, name)] = rel
-            self._unregister(rel.identifier)
-            self._journal(self.key(schema, name), rel)
+        rel = self.put(Relation(schema=schema, name=name, kind="incremental",
+                                path=path, partition_by=partition_by))
         self.register(rel)
         return rel
 
@@ -608,6 +599,7 @@ class RelationStore:
         rel = self.get(schema, name)
         if rel is None or not rel.path:
             raise KeyError(f"relation {schema}.{name} does not exist")
+        fmt_obj = table_format(rel.meta.get("file_format"))
 
         def _count_files(root: str) -> tuple[int, int]:
             n, total = 0, 0
@@ -619,89 +611,50 @@ class RelationStore:
                         total += os.path.getsize(os.path.join(dirpath, fn))
             return n, total
 
-        before, total_bytes = _count_files(rel.path)
+        def _live_count() -> int:
+            # the commit log's LIVE list where the format keeps one (a walk
+            # would count superseded files + the log)
+            if hasattr(fmt_obj, "latest_version"):
+                c = fmt_obj._load_commit(
+                    rel.path, fmt_obj.latest_version(rel.path))
+                if c is not None:
+                    return len(c["files"])
+            return _count_files(rel.path)[0]
+
+        before = _live_count()
         df = self.read(schema, name)
         if rel.meta.get("buckets"):
             # bucketed layout: compaction must PRESERVE the bucket spec (a
             # plain rewrite would leave the catalog's CLUSTERED BY declaration
             # pointing at unbucketed files → silently wrong shuffle-elided
-            # joins). Stage through a temp bucketed table (can't overwrite a
-            # path being read), swap dirs, recreate the catalog entry.
-            n = int(rel.meta["buckets"])
-            bucket_by = list(rel.meta["bucket_by"])
-            sort_by = list(rel.meta.get("sort_by") or bucket_by)
-            staging = f"{rel.path}.__staging__{int(time.time() * 1000)}"
-            tmp_ident = f"{rel.identifier}__compact_tmp"
-            self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")
-            (
-                df.repartition(n, *bucket_by)  # one task (= one file) per bucket
-                .write.mode("overwrite").format("parquet")
-                .bucketBy(n, *bucket_by).sortBy(*sort_by)
-                .option("path", staging).saveAsTable(tmp_ident)
-            )
-            with self._lock:
-                self.spark.sql(f"DROP TABLE IF EXISTS {tmp_ident}")  # files stay
-                self.spark.sql(f"DROP TABLE IF EXISTS {rel.identifier}")
-                self._swap(rel.path, staging)
-                self._unregister(rel.identifier)
-            self.register(rel)  # _ensure_bucketed_table re-declares CLUSTERED BY
-            after, _ = _count_files(rel.path)
-            return before, after
-        n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        parts = rel.partition_by
-        if zorder_by:
-            from dbt_spark.functions.layout import zorder_layout
-
-            out = zorder_layout(df, list(zorder_by), out_partitions=n_files)
-        elif parts:
-            # spread within partitions without changing the partition layout
-            out = df.repartition(n_files, *parts)
+            # joins); one task (= one file) per bucket
+            self._restage_bucketed(rel, df.repartition(
+                int(rel.meta["buckets"]), *rel.meta["bucket_by"]))
         else:
-            out = df.repartition(n_files)
-        from dbt_spark.formats import table_format
+            _, total_bytes = _count_files(rel.path)
+            n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
+            parts = rel.partition_by
+            if zorder_by:
+                from dbt_spark.functions.layout import zorder_layout
 
-        fmt_obj = table_format(rel.meta.get("file_format"))
-        if fmt_obj.acid:
-            # ACID target: compaction is one transactional overwrite of the
-            # repartitioned data (the commit makes it atomic; no staged
-            # swap), then vacuum drops the superseded small files — the
-            # OPTIMIZE-then-VACUUM shape of the real table formats. File
-            # counts come from the commit log's LIVE list where the format
-            # exposes it (the walk would count superseded files + the log)
-            def _live_count() -> int:
-                if hasattr(fmt_obj, "latest_version"):
-                    c = fmt_obj._load_commit(
-                        rel.path, fmt_obj.latest_version(rel.path))
-                    if c is not None:
-                        return len(c["files"])
-                return _count_files(rel.path)[0]
-
-            before = _live_count()
-            fmt_obj.write_overwrite(out, rel.path, parts or None)
+                out = zorder_layout(df, list(zorder_by), out_partitions=n_files)
+            elif parts:
+                # spread within partitions without changing the partition layout
+                out = df.repartition(n_files, *parts)
+            else:
+                out = df.repartition(n_files)
+            # in the relation's own format: the staged swap for plain files
+            # (a csv/json table must not come back as parquet under unchanged
+            # meta), one transactional overwrite for ACID formats, whose
+            # vacuum then drops the superseded small files (the
+            # OPTIMIZE-then-VACUUM shape of the real table formats)
+            fmt_obj.write_overwrite(out, rel.path, parts or None, lock=self._lock)
             if hasattr(fmt_obj, "vacuum"):
                 fmt_obj.vacuum(rel.path)
-            self.spark.catalog.refreshByPath(rel.path)
-            with self._lock:
-                self._unregister(rel.identifier)
-            self.register(rel)
-            return before, _live_count()
-        staging = f"{rel.path}.__staging__{int(time.time() * 1000)}"
-        # honor the relation's storage format — compacting a csv/json table
-        # must not silently rewrite it as parquet under unchanged meta
-        fmt = rel.meta.get("file_format") or "parquet"
-        writer = out.write.mode("overwrite").format(fmt)
-        if fmt == "csv":
-            writer = writer.option("header", True)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.save(staging)
-        self._swap(rel.path, staging)
         self.spark.catalog.refreshByPath(rel.path)
-        with self._lock:
-            self._unregister(rel.identifier)
+        self.invalidate(rel)
         self.register(rel)
-        after, _ = _count_files(rel.path)
-        return before, after
+        return before, _live_count()
 
     def drop(self, schema: str, name: str) -> None:
         with self._lock:
@@ -714,24 +667,3 @@ class RelationStore:
                 if rel.path and os.path.exists(rel.path):
                     shutil.rmtree(rel.path)
                 self._journal(self.key(schema, name), None)
-
-    def _swap(self, path: str, staging: str) -> None:
-        old = f"{path}.__old__{int(time.time() * 1000)}"
-        with self._lock:
-            if os.path.exists(path):
-                os.rename(path, old)
-            os.rename(staging, path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            # hygiene: a crashed earlier write can leave orphaned staging
-            # dirs beside the target — they never corrupt reads (the live dir
-            # is `path` itself) but they leak disk; sweep them post-swap
-            parent, base = os.path.dirname(path), os.path.basename(path)
-            try:
-                for entry in os.listdir(parent):
-                    full = os.path.join(parent, entry)
-                    if (entry.startswith(f"{base}.__staging__")
-                            or entry.startswith(f"{base}.__old__")):
-                        shutil.rmtree(full, ignore_errors=True)
-            except OSError:
-                pass

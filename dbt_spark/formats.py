@@ -11,14 +11,20 @@ overwrite_partitions / read) stays format-agnostic.
 Concurrent-writer semantics, per format:
 
 - ``SwapFileFormat`` (parquet default, orc, json, csv): plain files plus an
-  atomic staging-dir swap (write to ``<path>.__staging__<ts>``, rename into
-  place). SINGLE-WRITER atomicity: a reader never sees a half-written
-  directory and a crashed writer never corrupts the live copy, but two
-  concurrent writers race on the final rename (last completed swap wins,
-  the loser's output is discarded) and there is no snapshot isolation for
-  in-flight readers across a swap. That is exactly the dbt execution model
-  (one scheduler owns a relation at a time), and it is honest about what
-  plain files can give you. No time travel.
+  atomic staging-dir swap. Every overwrite of a relation directory, from
+  RelationStore or standalone, bucketed or not, runs the one protocol in
+  ``overwrite``: write ``<path>.__staging__<ts>``, retire the live copy to
+  ``<path>.__retired__<ts>``, ``os.replace`` the staging dir into place,
+  remove the retired copy. The next overwrite first runs ``recover``: it
+  restores the newest retired copy if a crash left the target missing,
+  then sweeps leftover ``__retired__``/``__staging__`` siblings.
+  SINGLE-WRITER atomicity: a reader never sees a half-written directory
+  and a crashed writer never corrupts the live copy, but two concurrent
+  writers race on the final rename (last completed swap wins, the loser's
+  output is discarded) and there is no snapshot isolation for in-flight
+  readers across a swap. That is exactly the dbt execution model (one
+  scheduler owns a relation at a time), and it is honest about what plain
+  files can give you. No time travel.
 - ``DeltaFormat`` / ``IcebergFormat``: ACID table formats — per-statement
   transactions via an optimistic-concurrency commit log, safe concurrent
   writers (conflicting commits retry or fail cleanly, never corrupt),
@@ -34,13 +40,62 @@ Concurrent-writer semantics, per format:
 from __future__ import annotations
 
 import os
+import shutil
 import time
-from typing import TYPE_CHECKING, Optional
+from contextlib import nullcontext
+from typing import TYPE_CHECKING, Callable, ContextManager, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 if TYPE_CHECKING:  # pragma: no cover
     from dbt_spark.catalog import Relation
+
+
+def recover(path: str) -> None:
+    """Undo what a crashed overwrite of ``path`` left beside it. A crash
+    between the retire and the swap-in renames leaves the target missing
+    and its data in ``<path>.__retired__<ts>``: restore the newest such
+    copy, so readers see the pre-crash table. Then remove every remaining
+    ``__retired__``/``__staging__`` sibling. One listing of the parent.
+    A relation has one writer at a time (the dbt execution model), so no
+    live writer owns a sibling staging dir of the same relation."""
+    parent = os.path.dirname(path) or "."
+    base = os.path.basename(path)
+    try:
+        entries = os.listdir(parent)
+    except OSError:
+        return
+    retired = sorted(e for e in entries
+                     if e.startswith(f"{base}.__retired__"))
+    if retired and not os.path.exists(path):
+        try:
+            os.replace(os.path.join(parent, retired[-1]), path)
+            retired = retired[:-1]
+        except OSError:
+            pass
+    staged = [e for e in entries if e.startswith(f"{base}.__staging__")]
+    for entry in retired + staged:
+        shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+
+
+def overwrite(path: str, stage: Callable[[str], None],
+              lock: ContextManager = nullcontext()) -> None:
+    """The one overwrite protocol for a relation directory: ``recover``
+    from any earlier crash, ``stage(staging)`` writes the new copy to
+    ``<path>.__staging__<ts>``, then (under ``lock``) the old copy moves to
+    ``<path>.__retired__<ts>`` and the staging dir replaces it, and the
+    retired copy is removed. ``os.replace`` refuses a non-empty target
+    directory, hence the retire step; a crash between the two renames is
+    what ``recover`` undoes on the next overwrite."""
+    recover(path)
+    staging = f"{path}.__staging__{int(time.time() * 1000)}"
+    stage(staging)
+    retired = f"{path}.__retired__{int(time.time() * 1000)}"
+    with lock:
+        if os.path.exists(path):
+            os.replace(path, retired)
+        os.replace(staging, path)
+    shutil.rmtree(retired, ignore_errors=True)
 
 
 class SwapFileFormat:
@@ -81,65 +136,12 @@ class SwapFileFormat:
         df: DataFrame,
         path: str,
         partition_by: Optional[list[str]] = None,
-        swap=None,
+        lock: ContextManager = nullcontext(),
     ) -> None:
-        """Atomic replace: stage beside the target, then ``swap`` (supplied
-        by RelationStore so its lock + orphan sweep apply) renames it in."""
-        staging = f"{path}.__staging__{int(time.time() * 1000)}"
-        if swap is None:
-            # standalone use (no RelationStore lock/sweep): recover from a
-            # previous crashed retire-then-replace BEFORE staging new data —
-            # a crash between the two os.replace calls below leaves the
-            # target missing with its data stranded in
-            # <path>.__retired__<ts>; restore the newest such copy, then
-            # clear every leftover __retired__/__staging__ sibling
-            self._recover_standalone(path)
-        self._configure_writer(df.write.mode("overwrite"), partition_by).save(staging)
-        if swap is not None:
-            swap(path, staging)
-        else:
-            # os.replace refuses a non-empty target directory, so retire the
-            # old copy first — same move-aside RelationStore._swap performs
-            # under its lock
-            import shutil
-
-            if os.path.exists(path):
-                retired = f"{path}.__retired__{int(time.time() * 1000)}"
-                os.replace(path, retired)
-                os.replace(staging, path)
-                shutil.rmtree(retired, ignore_errors=True)
-            else:
-                os.replace(staging, path)
-
-    @staticmethod
-    def _recover_standalone(path: str) -> None:
-        """Crash recovery for standalone ``write_overwrite`` (no
-        RelationStore): if the target is missing but a ``__retired__`` copy
-        exists (crash landed between retire and swap-in), restore the
-        newest copy so readers between the crash and the next write see the
-        pre-crash table; then sweep all remaining ``__retired__`` and
-        ``__staging__`` leftovers. Standalone use is single-writer by
-        contract (RelationStore is the concurrent path), so sweeping
-        sibling staging dirs here cannot race a live writer."""
-        import shutil
-
-        parent = os.path.dirname(path) or "."
-        base = os.path.basename(path)
-        try:
-            entries = os.listdir(parent)
-        except OSError:
-            return
-        retired = sorted(e for e in entries
-                         if e.startswith(f"{base}.__retired__"))
-        if retired and not os.path.exists(path):
-            try:
-                os.replace(os.path.join(parent, retired[-1]), path)
-                retired = retired[:-1]
-            except OSError:
-                pass
-        staged = [e for e in entries if e.startswith(f"{base}.__staging__")]
-        for entry in retired + staged:
-            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+        """Atomic replace through ``overwrite`` (RelationStore hands in its
+        lock so the rename runs under it)."""
+        overwrite(path, lambda staging: self._configure_writer(
+            df.write.mode("overwrite"), partition_by).save(staging), lock)
 
     def write_append(
         self,
@@ -189,7 +191,8 @@ class _AcidFormat(SwapFileFormat):
                 "jars + session extensions."
             )
 
-    def write_overwrite(self, df, path, partition_by=None, swap=None) -> None:
+    def write_overwrite(self, df, path, partition_by=None,
+                        lock=nullcontext()) -> None:
         # transactional replace: the commit log makes the overwrite atomic
         # and snapshot-isolated — no staging swap needed
         writer = df.write.format(self.name).mode("overwrite")
@@ -318,7 +321,6 @@ class TxParquetFormat(SwapFileFormat):
     def _stage_data(self, df: DataFrame, path: str) -> list[str]:
         """Write df's parquet files into <path>/data under fresh unique
         names; returns their table-relative paths. No commit yet."""
-        import shutil
         import uuid
 
         staging = os.path.join(path, f"_tx_staging_{uuid.uuid4().hex}")
@@ -350,10 +352,11 @@ class TxParquetFormat(SwapFileFormat):
 
     # -- TableFormat API -----------------------------------------------------
 
-    def write_overwrite(self, df, path, partition_by=None, swap=None) -> None:
+    def write_overwrite(self, df, path, partition_by=None,
+                        lock=nullcontext()) -> None:
         # transactional replace: stage immutable data files, then one
-        # atomic commit — the staged-swap machinery (swap arg) is bypassed,
-        # exactly like the jar-backed ACID formats
+        # atomic commit — ``overwrite`` is bypassed, exactly like the
+        # jar-backed ACID formats
         os.makedirs(path, exist_ok=True)
         files = self._stage_data(df, path)
         schema_json = df.schema.json()

@@ -192,6 +192,10 @@ del _flag
 class Engine:
     """Programmatic API (the dbtRunner analog, core/dbt/cli/main.py:41-99)."""
 
+    #: this invocation's parsed flags (the CLI reads --output here); an
+    #: Engine not yet invoked has the empty argument list's
+    flags = FLAGS.parse_args([])
+
     def __init__(
         self,
         project_dir: str,
@@ -263,7 +267,7 @@ class Engine:
         os.makedirs(target_dir, exist_ok=True)
         # --partial-parse-file-path overrides the cache location
         # (reference cli/params.py "--partial-parse-file-path")
-        cache_path = getattr(self, "_partial_parse_path", None) or os.path.join(
+        cache_path = self.flags.partial_parse_file_path or os.path.join(
             target_dir, "partial_parse.pickle")
         cache = None
         if partial:
@@ -599,11 +603,6 @@ class Engine:
             raise ValueError(f"ls --output must be one of {LS_OUTPUTS}, "
                              f"not {flags.output!r}")
         full_refresh = full_refresh or flags.full_refresh
-        if flags.partial_parse_file_path:
-            self._partial_parse_path = flags.partial_parse_file_path
-        if flags.connection:
-            self._debug_connection_only = True
-        #: this invocation's parsed flags (the CLI reads --output here)
         self.flags = flags
 
         if command == "clean":
@@ -1625,11 +1624,7 @@ class Engine:
                 continue
             import copy as _copy
 
-            clone_rel = _copy.deepcopy(rel)
-            with self.store._lock:
-                self.store.relations[self.store.key(schema, phys)] = clone_rel
-                self.store._registered.discard(clone_rel.identifier)
-                self.store._save_state()
+            self.store.put(_copy.deepcopy(rel))
             results.append(RunResult(uid, "success", time.time() - t0, "cloned"))
         ok = all(r.status in ("success", "skipped") for r in results)
         return RunnerResult(ok, results, manifest)
@@ -1651,7 +1646,7 @@ class Engine:
                 results.append(RunResult(f"debug.{name}", "error",
                                          time.time() - t0, str(e)))
 
-        if getattr(self, "_debug_connection_only", False):
+        if self.flags.connection:
             check("connection", lambda: str(
                 self.spark.sql("SELECT 1 AS ok").collect()[0]["ok"])
                 and "query OK")
@@ -2357,8 +2352,8 @@ class Engine:
                 rel.meta["doc_columns"] = cols
                 changed = True
         if changed:
-            with self.store._lock:
-                self.store._save_state()
+            self.store.put(rel)
+            self.store.register(rel)
 
     def _apply_grants(self, ctx: ExecutionContext, node: ManifestNode) -> None:
         """config(grants={'select': ['user_a', ...]}): the reference
@@ -2380,8 +2375,8 @@ class Engine:
             for priv, g in grants.items()
         }
         rel.meta["grants"] = std
-        with self.store._lock:
-            self.store._save_state()
+        self.store.put(rel)
+        self.store.register(rel)
 
     def _run_hooks(
         self, ctx: ExecutionContext, hooks: list[str], phase: str,

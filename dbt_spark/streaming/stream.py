@@ -155,11 +155,8 @@ def materialize_streaming(ctx: ExecutionContext, node: ManifestNode) -> Relation
         ctx.spark.catalog.dropTempView(ident)
 
     if strategy == "append":
-        rel = Relation(schema=schema, name=ctx.name_for(node), kind="streaming", path=path)
-        with ctx.store._lock:
-            ctx.store.relations[ctx.store.key(schema, ctx.name_for(node))] = rel
-            ctx.store._registered.discard(rel.identifier)
-            ctx.store._save_state()
+        rel = ctx.store.put(Relation(schema=schema, name=ctx.name_for(node),
+                                     kind="streaming", path=path))
         ctx.store.register(rel)
         return rel
     return ctx.store.get(schema, ctx.name_for(node))

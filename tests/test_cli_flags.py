@@ -135,3 +135,52 @@ def test_cli_help_lists_both_flag_tables(cli):
     assert "--no-clean-project-files-only" in spellings
     missing = [o for o in spellings if o not in out]
     assert not missing, missing
+
+
+def test_per_invocation_flags_do_not_stick_to_the_engine(project_dir, spark,
+                                                         tmp_path):
+    """``--connection`` and ``--partial-parse-file-path`` belong to the
+    invocation that passed them: the next ``debug`` on the same Engine
+    runs all six checks again and parses into the default cache."""
+    eng = Engine(project_dir({"dbt_project.yml": "name: flagscope\n",
+                              "models/m1.sql": "select 1 as x"}),
+                 spark=spark)
+    default = os.path.join(eng.project.target_path, "partial_parse.pickle")
+    alt = str(tmp_path / "alt_cache.pickle")
+    counts = [len(eng.invoke(["debug"]).results)]
+    counts.append(len(eng.invoke(["debug", "--connection",
+                                  "--partial-parse-file-path", alt]).results))
+    os.remove(default)
+    counts.append(len(eng.invoke(["debug"]).results))
+    assert counts == [6, 1, 6]
+    assert os.path.exists(default) and not os.path.exists(alt)
+
+
+def test_cli_file_log_env_vars(cli, project_dir, monkeypatch):
+    """``DBT_LOG_LEVEL_FILE``, ``DBT_LOG_FORMAT_FILE`` and
+    ``DBT_LOG_FILE_MAX_BYTES`` reach the file log through ``python -m
+    dbt_spark``: each beats the project's ``flags:`` and loses to its
+    command-line flag."""
+    root = project_dir({
+        "dbt_project.yml": ("name: clienv\nflags:\n  log_level_file: error\n"
+                            "  log_format_file: json\n"
+                            "  log_file_max_bytes: 99\n"),
+        "models/m1.sql": "select 1 as x",
+    })
+
+    def file_log(*argv):
+        code, _out, _err, _calls, engines = cli("ls", "--project-dir", root,
+                                                *argv)
+        assert code == 0
+        ev = engines[0].events
+        return (os.path.basename(ev.log_path), ev.file_level, ev.file_format,
+                ev.max_bytes)
+
+    assert file_log() == ("dbt.log.jsonl", "error", "json", 99)
+    monkeypatch.setenv("DBT_LOG_LEVEL_FILE", "warn")
+    monkeypatch.setenv("DBT_LOG_FORMAT_FILE", "text")
+    monkeypatch.setenv("DBT_LOG_FILE_MAX_BYTES", "4096")
+    assert file_log() == ("dbt.log", "warn", "text", 4096)
+    assert file_log("--log-level-file", "info", "--log-format-file", "json",
+                    "--log-file-max-bytes", "7") == (
+        "dbt.log.jsonl", "info", "json", 7)

@@ -7,7 +7,7 @@ import os
 import pytest
 
 from dbt_spark.catalog import RelationStore
-from dbt_spark.formats import TABLE_FORMATS, table_format
+from dbt_spark.formats import TABLE_FORMATS, recover, table_format
 
 
 def test_registry_and_lookup():
@@ -83,9 +83,9 @@ def test_overwrite_swap_is_atomic_per_format(spark, tmp_path):
 
 
 def test_standalone_overwrite_replaces_existing_dir(spark, tmp_path):
-    """write_overwrite without a RelationStore swap callable (standalone
-    use) must still replace an existing non-empty target directory —
-    os.replace alone refuses that, so the old copy is retired first."""
+    """write_overwrite used standalone (no RelationStore lock) must still
+    replace an existing non-empty target directory — os.replace alone
+    refuses that, so the old copy is retired first."""
     fmt = table_format("parquet")
     path = str(tmp_path / "standalone_tbl")
     fmt.write_overwrite(spark.range(4).selectExpr("id"), path)
@@ -98,18 +98,30 @@ def test_standalone_overwrite_replaces_existing_dir(spark, tmp_path):
     assert not leftovers
 
 
+@pytest.mark.parametrize("writer", ["standalone", "engine"])
 def test_standalone_overwrite_crash_between_replaces_recovers(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, writer):
     """Crash injection for the ADVICE r7 __retired__ leak: kill the process
     (simulated) between the retire os.replace and the swap-in os.replace.
     The stranded state must (a) restore the pre-crash table on the next
-    standalone write's recovery pass and (b) leave zero __retired__ /
-    __staging__ dirs behind afterwards."""
+    write's recovery pass and (b) leave zero __retired__ / __staging__
+    dirs behind afterwards — for a standalone ``write_overwrite`` and for
+    ``RelationStore.write_table``, which run the same overwrite."""
     import dbt_spark.formats as formats_mod
 
-    fmt = table_format("parquet")
-    path = str(tmp_path / "crashy_tbl")
-    fmt.write_overwrite(spark.range(3).selectExpr("id"), path)
+    if writer == "standalone":
+        fmt = table_format("parquet")
+        path = str(tmp_path / "crashy_tbl")
+
+        def write(df):
+            fmt.write_overwrite(df, path)
+    else:
+        store = RelationStore(spark, str(tmp_path / "wh"))
+        path = store.path_for("main", "crashy_tbl")
+
+        def write(df):
+            store.write_table("main", "crashy_tbl", df)
+    write(spark.range(3).selectExpr("id"))
 
     real_replace = os.replace
     calls = {"n": 0}
@@ -123,7 +135,7 @@ def test_standalone_overwrite_crash_between_replaces_recovers(
 
     monkeypatch.setattr(formats_mod.os, "replace", crashing_replace)
     with pytest.raises(RuntimeError, match="injected crash"):
-        fmt.write_overwrite(spark.range(2).selectExpr("id + 10 AS id"), path)
+        write(spark.range(2).selectExpr("id + 10 AS id"))
     monkeypatch.setattr(formats_mod.os, "replace", real_replace)
 
     # stranded state: target gone, data in a __retired__ dir + staging dir
@@ -132,7 +144,7 @@ def test_standalone_overwrite_crash_between_replaces_recovers(
     assert [e for e in os.listdir(parent) if "__retired__" in e]
 
     # recovery path A: the next write restores-then-replaces and sweeps
-    fmt.write_overwrite(spark.range(2).selectExpr("id + 50 AS id"), path)
+    write(spark.range(2).selectExpr("id + 50 AS id"))
     got = sorted(r.id for r in spark.read.parquet(path).collect())
     assert got == [50, 51]
     leftovers = [e for e in os.listdir(parent)
@@ -144,14 +156,13 @@ def test_standalone_recover_restores_newest_retired_copy(spark, tmp_path):
     """Recovery alone (no new data yet) must bring back the NEWEST retired
     copy so a reader between crash and next write sees the pre-crash
     table, and must sweep older retired copies and stale staging dirs."""
-    fmt = table_format("parquet")
     path = str(tmp_path / "t")
     spark.range(4).selectExpr("id").write.parquet(path + ".__retired__100")
     spark.range(2).selectExpr("id + 90 AS id").write.parquet(
         path + ".__retired__200")
     spark.range(1).write.parquet(path + ".__staging__150")
 
-    fmt._recover_standalone(path)
+    recover(path)
     got = sorted(r.id for r in spark.read.parquet(path).collect())
     assert got == [90, 91]  # the newest (ts=200) copy won
     parent = os.path.dirname(path)
@@ -188,7 +199,7 @@ def test_txparquet_overwrite_append_read_roundtrip(spark, tx_store):
     # two commits, immutable data files, no swap dirs
     assert fmt.latest_version(rel.path) == 2
     assert not [e for e in os.listdir(os.path.dirname(rel.path))
-                if "__staging__" in e or "__old__" in e]
+                if "__staging__" in e or "__retired__" in e]
 
 
 def test_txparquet_time_travel_and_snapshot_isolation(spark, tx_store):

@@ -289,3 +289,145 @@ def test_engine_nodes_skip_redundant_spark_round_trips(project_dir, spark,
     if swaps != Counter({"src__raw__orders": 1}):
         broken["one source temp-view swap per invocation"] = swaps
     assert not broken, broken
+
+
+def _package_sources():
+    """(path relative to dbt_spark/, parsed module) for every package file."""
+    import ast
+
+    root = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "dbt_spark")
+    for dirpath, _dirs, files in os.walk(root):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path) as f:
+                    src = f.read()
+                yield os.path.relpath(path, root), src, ast.parse(src)
+
+
+def _in_function(tree):
+    """Yield (node, name of the innermost enclosing def or None)."""
+    import ast
+
+    stack = [(tree, None)]
+    while stack:
+        node, fn = stack.pop()
+        yield node, fn
+        inner = (node.name if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn)
+        stack.extend((child, inner) for child in ast.iter_child_nodes(node))
+
+
+def test_relation_writes_go_through_one_overwrite_and_one_commit():
+    """A relation directory is replaced by ``formats.overwrite`` alone (with
+    ``formats.recover``, its crash recovery), and the catalog commits a
+    relation by ``RelationStore.put`` alone. Guard, by source scan:
+
+    - a ``__staging__``/``__retired__`` name and an ``os.replace`` /
+      ``os.rename`` appear only in ``overwrite``/``recover``, apart from the
+      listed renames of files that are not relation dirs;
+    - no module but catalog.py touches ``relations[``, ``_registered``,
+      ``_save_state`` or ``_journal``;
+    - ``_save_state`` (the whole-catalog rewrite) runs only from
+      ``_load_state``."""
+    import ast
+    import re
+
+    protocol = {("formats.py", "overwrite"), ("formats.py", "recover")}
+    other_renames = {
+        ("catalog.py", "_save_state"),  # the catalog snapshot file
+        ("formats.py", "_stage_data"),  # txparquet data files
+        ("events.py", "_write_log_line"),  # log rotation
+        (os.path.join("plans", "partial.py"), "save"),  # parse cache file
+        (os.path.join("queries", "streaming_q.py"), "_land_two_batches"),
+        (os.path.join("queries", "streaming_q.py"), "fold_into"),
+    }
+    private = re.compile(
+        r"\brelations\[|\b_registered\b|\b_save_state\b|\b_journal\b")
+    offenders, save_state_callers = [], []
+    for rel, src, tree in _package_sources():
+        docstrings = {
+            id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)}
+        for node, fn in _in_function(tree):
+            where = f"{rel}:{getattr(node, 'lineno', '?')} in {fn}"
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and id(node) not in docstrings
+                    and re.search(r"__(staging|retired)__", node.value)
+                    and (rel, fn) not in protocol):
+                offenders.append(f"{where}: staging name {node.value!r}")
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if (isinstance(f, ast.Attribute) and f.attr in ("replace", "rename")
+                    and isinstance(f.value, ast.Name) and f.value.id == "os"
+                    and (rel, fn) not in protocol | other_renames):
+                offenders.append(f"{where}: os.{f.attr}")
+            if isinstance(f, ast.Attribute) and f.attr == "_save_state":
+                save_state_callers.append((rel, fn))
+        if rel != "catalog.py":
+            offenders += [f"{rel}:{ln}: {line.strip()}"
+                          for ln, line in enumerate(src.splitlines(), 1)
+                          if private.search(line)]
+    assert not offenders, "\n".join(offenders)
+    assert save_state_callers == [("catalog.py", "_load_state")]
+
+
+def test_clone_and_streaming_append_commit_to_the_journal(tmp_path, spark):
+    """``clone`` and a streaming ``append`` model commit each relation as
+    one journal line: the ``_catalog.json`` snapshot is not rewritten, and
+    a fresh store over the warehouse reads the same relations."""
+    import json
+
+    from dbt_spark.catalog import RelationStore
+    from dbt_spark.runner import Engine
+
+    def project(name, models):
+        root = tmp_path / name
+        for rel, content in {"dbt_project.yml": f"name: {name}\n",
+                             **models}.items():
+            p = root / rel
+            p.parent.mkdir(parents=True, exist_ok=True)
+            p.write_text(content)
+        return str(root)
+
+    tables = {f"models/t{i}.sql": "{{ config(materialized='table') }} "
+              f"select {i} as id" for i in range(3)}
+    prod = project("prod", tables)
+    assert Engine(prod, spark=spark).invoke(["run"]).success
+
+    landing = str(tmp_path / "landing")
+    spark.range(5).selectExpr("id").write.parquet(landing)
+    dev = project("dev", {
+        **tables,
+        "models/sources.yml": (
+            "sources:\n  - name: raw\n    tables:\n      - name: ev\n"
+            f"        meta: {{location: \"{landing}\"}}\n"),
+        "models/s.sql": ("{{ config(materialized='streaming_table') }}\n"
+                         "select id from {{ source('raw', 'ev') }}"),
+    })
+    eng = Engine(dev, spark=spark)
+    snapshot = os.path.join(eng.store.warehouse, "_catalog.json")
+    before = open(snapshot).read() if os.path.exists(snapshot) else None
+    assert eng.invoke(["run", "--select", "s"]).success
+    r = eng.invoke(["clone", "--state", os.path.join(prod, "target")])
+    assert r.success
+    assert sorted(x.unique_id for x in r.results if x.status == "success") \
+        == [f"model.dev.t{i}" for i in range(3)]
+
+    after = open(snapshot).read() if os.path.exists(snapshot) else None
+    assert after == before
+    with open(snapshot + ".log") as f:
+        journaled = [json.loads(line)["k"] for line in f]
+    assert sorted(journaled) == ["main.s", "main.t0", "main.t1", "main.t2"]
+
+    fresh = RelationStore(spark, eng.store.warehouse)
+    assert {k: r.__dict__ for k, r in fresh.relations.items()} == \
+        {k: r.__dict__ for k, r in eng.store.relations.items()}
+    assert sorted(row.id for row in fresh.read("main", "s").collect()) == \
+        list(range(5))
+    assert [row.id for row in fresh.read("main", "t2").collect()] == [2]
